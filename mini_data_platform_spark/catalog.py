@@ -99,16 +99,21 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def _path_signature(path: str):
-    """Driver-local freshness token for a fixture path: (name, mtime_ns,
-    size) of the file, or of every direct child for a directory. None for
+    """Driver-local freshness token for a fixture path: (mtime_ns, size)
+    of the file, or (relative path, mtime_ns, size) of every file in the
+    tree under a directory, nested partition leaves included. None for
     paths os.stat cannot see (object stores) — those are never cached.
     Pure metadata; no Spark job, no file reads."""
     try:
         if os.path.isdir(path):
             out = []
-            for fn in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, fn))
-                out.append((fn, st.st_mtime_ns, st.st_size))
+            for root, dirs, files in os.walk(path):
+                dirs.sort()
+                for fn in sorted(files):
+                    full = os.path.join(root, fn)
+                    st = os.stat(full)
+                    rel = os.path.relpath(full, path)
+                    out.append((rel, st.st_mtime_ns, st.st_size))
             return tuple(out)
         st = os.stat(path)
         return (st.st_mtime_ns, st.st_size)

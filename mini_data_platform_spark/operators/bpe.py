@@ -45,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .resources import bounded_rows
+
 #: end-of-word marker, per Sennrich — lets merges distinguish suffixes
 #: ("est</w>") from infixes ("est"), and makes decoding unambiguous
 EOW = "</w>"
@@ -138,7 +140,7 @@ def _merge_expr(syms: Column, left: str, right: str) -> Column:
 
 #: word-frequency tables at or under this row count run the merge loop
 #: on the driver (see bpe_learn); 0 disables the fast path
-_DRIVER_MAX_WORDS_DEFAULT = 20_000
+DRIVER_MAX_WORDS = 20_000
 
 
 def bpe_learn(
@@ -146,7 +148,6 @@ def bpe_learn(
     text_col: str,
     n_merges: int,
     min_count: int = 2,
-    driver_max_words: int | None = None,
 ) -> list[tuple[str, str, int]]:
     """Learn up to ``n_merges`` BPE merges from a corpus. Returns the
     ordered merge list ``[(left, right, pair_count), ...]`` — the
@@ -162,30 +163,19 @@ def bpe_learn(
     SMALL-VOCAB FAST PATH (r15, guide §1.2): the merge rounds depend
     only on the word-frequency table, and every round is a driver
     round-trip (argmax collect + checkpoint job). When that table is
-    driver-sized — one bounded ``limit(cap+1).collect()`` probe decides,
-    cap = ``driver_max_words`` / ``MDP_BPE_DRIVER_MAX_WORDS`` (default
-    20k rows, a few MB) — the rounds run as the sequential loop
-    (:func:`reference_merges`, the test-pinned identical algorithm:
-    same tie order, same stopping rule) over that one collect: 2 Spark
-    jobs per merge collapse to one job total. Corpus-scale vocabularies
-    overflow the probe and take the distributed loop unchanged; pass
-    ``driver_max_words=0`` to force it."""
-    import os
-
-    cap = (
-        int(os.environ.get(
-            "MDP_BPE_DRIVER_MAX_WORDS", _DRIVER_MAX_WORDS_DEFAULT
-        ))
-        if driver_max_words is None
-        else driver_max_words
-    )
+    driver-sized — one bounded collect of at most ``DRIVER_MAX_WORDS``
+    rows decides (resources.bounded_rows) — the rounds run as the
+    sequential loop (:func:`reference_merges`, the test-pinned
+    identical algorithm: same tie order, same stopping rule) over that
+    one collect: 2 Spark jobs per merge collapse to one job total.
+    Corpus-scale vocabularies overflow the probe and take the
+    distributed loop unchanged."""
     wf = word_freqs(docs, text_col)
-    if cap > 0:
-        head = wf.limit(cap + 1).collect()
-        if len(head) <= cap:
-            return reference_merges(
-                {r["word"]: r["freq"] for r in head}, n_merges, min_count
-            )
+    head = bounded_rows(wf, DRIVER_MAX_WORDS)
+    if head is not None:
+        return reference_merges(
+            {r["word"]: r["freq"] for r in head}, n_merges, min_count
+        )
     words = (
         wf
         .select(_initial_symbols(F.col("word")).alias(_SYM), "freq")
@@ -330,8 +320,6 @@ def bpe_token_counts(
     sequence-length/packing/costing input. Segments only the DISTINCT
     words (vocabulary-sized), then one join maps word occurrences to
     token counts; documents are never re-segmented char-by-char."""
-    import os
-
     occurrences = docs.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -347,23 +335,18 @@ def bpe_token_counts(
     # (word, n_tokens) table as a broadcast local relation. Corpus-
     # scale vocabularies overflow the probe and take the distributed
     # fold unchanged.
-    cap = int(os.environ.get(
-        "MDP_BPE_DRIVER_MAX_WORDS", _DRIVER_MAX_WORDS_DEFAULT
-    ))
-    vocab = None
-    if cap > 0:
-        head = words.limit(cap + 1).collect()
-        if len(head) <= cap:
-            rows = [
-                (r["word"], len(reference_segment(r["word"], merges)))
-                for r in head
-            ]
-            vocab = F.broadcast(
-                docs.sparkSession.createDataFrame(
-                    rows, "word string, n_tokens int"
-                )
+    head = bounded_rows(words, DRIVER_MAX_WORDS)
+    if head is not None:
+        rows = [
+            (r["word"], len(reference_segment(r["word"], merges)))
+            for r in head
+        ]
+        vocab = F.broadcast(
+            docs.sparkSession.createDataFrame(
+                rows, "word string, n_tokens int"
             )
-    if vocab is None:
+        )
+    else:
         vocab = bpe_segment_words(words, merges).select(
             "word", "n_tokens"
         )

@@ -27,7 +27,10 @@ import warnings
 
 from pyspark.sql import DataFrame, functions as F
 
-from mini_data_platform_spark.operators.resources import release_plan
+from mini_data_platform_spark.operators.resources import (
+    release_plan,
+    with_row_bound,
+)
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -98,7 +101,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 20,
     algorithm: str = "auto",
-    local_edges_max: int = LOCAL_CC_MAX_EDGES,
 ) -> DataFrame:
     """(vertex, component) for every vertex appearing in ``pairs``, where
     component = the minimum vertex id reachable through the undirected
@@ -108,7 +110,7 @@ def connected_components(
     - ``"auto"`` (default): count the (checkpointed) edge list — a
       near-dup graph's edges are orders of magnitude smaller than the
       corpus — and run ``"local"`` when it fits one task
-      (``local_edges_max``), else ``"label"``. Round-9 change: the
+      (``LOCAL_CC_MAX_EDGES``), else ``"label"``. Round-9 change: the
       emb_dup_clusters creep (r8 verdict item 4) profiled to the LOOP,
       not the pairs — the sf0.1 cosine graph has ~16-hop chains, so
       label propagation paid 16 × ~0.45 s of per-round job overhead on
@@ -159,17 +161,13 @@ def connected_components(
     if algorithm == "auto":
         # counting the checkpointed blocks is one cheap scan-only job
         n_edges = edges.count()
-        if n_edges <= local_edges_max:
-            out = _connected_components_local(edges)
-            # thread the known edge count to the caller (the
-            # ``_mdp_row_bound`` doctrine): a graph small enough for
-            # single-task union-find has ≤ 2·n_edges vertices, so
-            # consumers can safely broadcast-hint frames derived from
-            # the labels (e.g. the dedup anti-join's dupes side)
-            # without an extra count job. Absent on the distributed
-            # paths, where no such bound is known.
-            out._mdp_edge_count = n_edges
-            return out
+        if n_edges <= LOCAL_CC_MAX_EDGES:
+            # ≤ 2·n_edges vertices: consumers (the dedup anti-join's
+            # dupes side) hint frames derived from the labels without a
+            # count job. The distributed paths know no such bound.
+            return with_row_bound(
+                _connected_components_local(edges), 2 * n_edges
+            )
     # union of two scans over the checkpointed blocks — shallow lineage,
     # cheap to re-read each round, no extra storage needed
     sym = edges.unionByName(

@@ -36,10 +36,10 @@ Scale shape of one increment (new batch b against corpus C):
   band_key) — when b is small (the common serving regime) its band-key
   frame is broadcast and the corpus-sized side streams map-side with
   ZERO shuffle of the index. The broadcast is GUARDED: ``F.broadcast``
-  is a hard hint, so above a configurable row threshold
-  (``MDP_INCR_BROADCAST_MAX_ROWS``, default 2M rows) the hint is
-  dropped and the planner degrades to a shuffle join instead of
-  OOM-ing the driver on an oversized batch (round-7 verdict item 1).
+  is a hard hint, so above ``resources.BROADCAST_MAX_ROWS`` (2M rows)
+  the hint is dropped and the planner degrades to a shuffle join
+  instead of OOM-ing the driver on an oversized batch (round-7 verdict
+  item 1).
   The same guard covers the candidate-id semi-join frames, which can
   blow up independently when a hot batch explodes candidates;
 - new-vs-new candidates: the ordinary LSH self-join within b;
@@ -141,6 +141,13 @@ from mini_data_platform_spark.operators.dedup_fuzzy import (
     minhash_signatures_from,
     shingle_hash_sets,
 )
+from mini_data_platform_spark.operators import resources
+from mini_data_platform_spark.operators.resources import (
+    attach_plan,
+    bounded_rows,
+    guarded_broadcast,
+    run_concurrently,
+)
 
 _META = "meta.json"
 _BUCKETS = "buckets"
@@ -155,35 +162,16 @@ _SHH = "_shh"
 
 #: candidate-doc ceiling for the ZERO-SHUFFLE verify plan
 #: (jaccard_pairs_from_hashes small_pairs=True): unlike the 2M-row id
-#: broadcast dial, these frames carry shingle-hash ARRAYS (~KBs per
+#: broadcast cap, these frames carry shingle-hash ARRAYS (~KBs per
 #: doc), so the bound is docs × array bytes, not rows — 20k docs ×
 #: ~3 KB ≈ 60 MB worst case, safely under the driver budget. Above it
 #: verification degrades to the ordinary shuffle joins.
 _VERIFY_BROADCAST_MAX_DOCS = 20_000
 
-#: Default row threshold above which batch-side frames LOSE their
-#: F.broadcast hint. The hint is hard — Spark collects the frame to the
-#: driver no matter its size — so an unguarded hint turns "large batch"
-#: into a driver OOM instead of a slower shuffle join. 2M rows of
-#: (id, band_id, band_key) is ~100 MB serialized: comfortably within a
-#: production driver, far above any "batch ≪ corpus" serving increment.
-_BROADCAST_MAX_ROWS_DEFAULT = 2_000_000
 
-
-def _broadcast_max_rows() -> int:
-    return int(
-        os.environ.get(
-            "MDP_INCR_BROADCAST_MAX_ROWS", _BROADCAST_MAX_ROWS_DEFAULT
-        )
-    )
-
-
-def _hinted(df: DataFrame, n_rows: int) -> DataFrame:
-    """``F.broadcast(df)`` only when ``n_rows`` (a cheaply-known upper
-    bound — batch counts are taken once per increment anyway) is under
-    the guard threshold; otherwise return ``df`` unhinted so the planner
-    picks a shuffle join and a huge batch degrades instead of OOM-ing."""
-    return F.broadcast(df) if n_rows <= _broadcast_max_rows() else df
+def _verify_max_docs() -> int:
+    """The zero-shuffle verify ceiling, never above the broadcast cap."""
+    return min(_VERIFY_BROADCAST_MAX_DOCS, resources.BROADCAST_MAX_ROWS)
 
 
 #: Candidate-pair rows admissible as a driver-side literal frame: each
@@ -217,8 +205,8 @@ def _pairs_local(
     first round-12 cut) saves a per-lookup union+distinct shuffle job,
     and handing the literal pairs back to the scorer keeps the
     candidate lineage out of the verify plan entirely."""
-    rows = cands.limit(max_pairs + 1).collect()
-    if len(rows) > max_pairs:
+    rows = bounded_rows(cands, max_pairs)
+    if rows is None:
         return None
     ids = sorted({r[0] for r in rows} | {r[1] for r in rows})
     if len(ids) > max_ids:
@@ -280,8 +268,7 @@ def _probe_entries(buckets_old, key_col: str, probe_keys: list):
     if len(probe_keys) > _PROBE_MAX_KEYS:
         return None
     flt = buckets_old.where(_isin_filter(probe_keys, key_col))
-    entries = flt.limit(_PROBE_MAX_ENTRIES + 1).collect()
-    return entries if len(entries) <= _PROBE_MAX_ENTRIES else None
+    return bounded_rows(flt, _PROBE_MAX_ENTRIES)
 
 
 def _literal_pairs_frame(spark: SparkSession, pairs: list, schema):
@@ -653,7 +640,7 @@ def _build_live(
     if tombs is None:
         return df
     return df.join(
-        _hinted(tombs, meta.get("n_deleted", 0)), "id", "left_anti"
+        guarded_broadcast(tombs, meta.get("n_deleted", 0)), "id", "left_anti"
     )
 
 
@@ -926,7 +913,7 @@ def index_revive(
                 if ids.limit(1).count() == 0:
                     return meta  # empty revive: nothing to commit
             # snapshot-DEPENDENT: the running live-delete count after
-            # this revive (the broadcast hint _hinted sizes by)
+            # this revive (the broadcast hint guarded_broadcast sizes by)
             spark = revive_docs.sparkSession
             live = _live_tombstones(spark, index_dir, meta)
             n_after = (
@@ -991,7 +978,7 @@ def index_tombstoned_ids(
     )
     if tombs is None:
         return None
-    return _hinted(tombs, meta.get("n_deleted", 0))
+    return guarded_broadcast(tombs, meta.get("n_deleted", 0))
 
 
 def neardup_index_build(
@@ -1029,10 +1016,6 @@ def neardup_index_build(
     # the persisted base/shingled frames — overlapped from driver
     # threads (guide §2.6; cached-block locking keeps the shared
     # upstream computed once), r15.
-    from mini_data_platform_spark.operators.resources import (
-        run_concurrently,
-    )
-
     _, _, n_docs = run_concurrently(
         lambda: _write_segment(
             lsh_band_keys(sigs, "id", num_hashes, bands),
@@ -1100,7 +1083,9 @@ def _neardup_batch_pairs(
     declared_small = n_batch is None
 
     def _guard(df: DataFrame, bound) -> DataFrame:
-        return F.broadcast(df) if declared_small else _hinted(df, bound)
+        if declared_small:
+            return F.broadcast(df)
+        return guarded_broadcast(df, bound)
 
     shingled_new = _staged_shingles(batch, "id", "text", shingle_n).persist()
     if declared_small:
@@ -1150,17 +1135,13 @@ def _neardup_batch_pairs(
         # overflow (mis-declared batch, pathological bucket) falls
         # through to the distributed path below, never an error.
         # mis-declared-batch guard (round-12 advice): the probe's FIRST
-        # collect is capped like every other probe collect — limit+1,
-        # and a declared_small batch that actually exceeds the entry
+        # collect is capped like every other probe collect, and a
+        # declared_small batch that actually exceeds the entry
         # cap degrades to the distributed joins below, never an
         # unbounded driver collect
-        band_rows = bands_new.limit(_PROBE_MAX_ENTRIES + 1).collect()
-        entries = (
-            _probe_entries(
-                buckets_old, "band_key", sorted({r[2] for r in band_rows})
-            )
-            if len(band_rows) <= _PROBE_MAX_ENTRIES
-            else None
+        band_rows = bounded_rows(bands_new, _PROBE_MAX_ENTRIES)
+        entries = None if band_rows is None else _probe_entries(
+            buckets_old, "band_key", sorted({r[2] for r in band_rows})
         )
         if entries is not None:
             loc = _local_bucket_pairs(
@@ -1168,7 +1149,7 @@ def _neardup_batch_pairs(
                 [(r[0], (r[1], r[2])) for r in entries],
                 max_bucket,
                 _VERIFY_BROADCAST_MAX_PAIRS,
-                min(_VERIFY_BROADCAST_MAX_DOCS, _broadcast_max_rows()),
+                _verify_max_docs(),
             )
             if loc is not None:
                 cand_pairs, cand_id_list = loc
@@ -1286,13 +1267,11 @@ def _neardup_batch_pairs(
 
     docs_old = _read_live(spark, index_dir, _DOCS, meta)
     hsets_new = shingle_hash_sets(shingled_new, "id")
-    # the verify ceiling also honors the MDP_INCR_BROADCAST_MAX_ROWS
-    # dial: it is the module's one "how much may hard-broadcast" knob,
-    # and the oversized-batch degradation gate pins that setting it to 0
-    # removes every hard hint from the lookup plan
-    small_verify = declared_small or (
-        2 * n_cands <= min(_VERIFY_BROADCAST_MAX_DOCS, _broadcast_max_rows())
-    )
+    # the verify ceiling also honors resources.BROADCAST_MAX_ROWS: it is
+    # the one "how much may hard-broadcast" cap, and the oversized-batch
+    # degradation gate pins that setting it to 0 removes every hard hint
+    # from the lookup plan
+    small_verify = declared_small or 2 * n_cands <= _verify_max_docs()
     if _SHH in docs_old.columns:
         # hash-verify path: candidate scan reads (id, _shh) — parquet
         # prunes the text column — and Jaccard runs on bigint sets.
@@ -1334,7 +1313,7 @@ def _neardup_batch_pairs(
         else:
             h_old = h_old.join(
                 _cand_ids() if n_cands is None
-                else _hinted(_cand_ids(), 2 * n_cands),
+                else guarded_broadcast(_cand_ids(), 2 * n_cands),
                 "id", "left_semi",
             )
             sets_all = hsets_new.unionByName(h_old).persist()
@@ -1448,10 +1427,6 @@ def neardup_index_increment(
             pairs_path = os.path.join(index_dir, _PAIRS, seg)
             # three independent materializations over the persisted
             # batch/bands/shingle frames — overlap them (guide §2.6)
-            from mini_data_platform_spark.operators.resources import (
-                run_concurrently,
-            )
-
             run_concurrently(
                 lambda: verified.write.mode("overwrite").parquet(
                     pairs_path
@@ -1539,8 +1514,6 @@ def neardup_index_lookup(
     )
     # caller runs the action on the lazy plan, then releases the pinned
     # frames via resources.release_plan (the standard operator contract)
-    from mini_data_platform_spark.operators.resources import attach_plan
-
     return attach_plan(verified, batch, *pinned)
 
 
@@ -1566,7 +1539,9 @@ def _exact_batch_resolved(
     # whole index)
     batch_hashes = batch.select("content_hash").distinct()
     old_min = (
-        old.join(_hinted(batch_hashes, n_new), "content_hash", "left_semi")
+        old.join(
+            guarded_broadcast(batch_hashes, n_new), "content_hash", "left_semi"
+        )
         .groupBy("content_hash")
         .agg(F.min("id").alias("_old_min"))
     )
@@ -1574,8 +1549,8 @@ def _exact_batch_resolved(
         F.min("id").alias("_batch_min")
     )
     return (
-        batch.join(_hinted(old_min, n_new), "content_hash", "left")
-        .join(_hinted(batch_min, n_new), "content_hash", "left")
+        batch.join(guarded_broadcast(old_min, n_new), "content_hash", "left")
+        .join(guarded_broadcast(batch_min, n_new), "content_hash", "left")
         .select(
             "id",
             "content_hash",
@@ -1598,7 +1573,6 @@ def exact_index_lookup(
     same query/commit split as ``neardup_index_lookup``, including its
     ``as_of`` time travel)."""
     from mini_data_platform_spark.functions.text import normalize_text
-    from mini_data_platform_spark.operators.resources import attach_plan
 
     meta = _meta_as_of(_recover_meta(index_dir), as_of)
     if meta.get("kind") != "exact":
@@ -1639,10 +1613,6 @@ def exact_index_build(
         F.sha2(normalize_text(F.col(text_col)), 256).alias("content_hash"),
         F.col(id_col).alias("id"),
     ).persist()
-    from mini_data_platform_spark.operators.resources import (
-        run_concurrently,
-    )
-
     _, n = run_concurrently(  # write ∥ count (guide §2.6), r15
         lambda: _write_segment(hashed, index_dir, _HASHES, "batch-0"),
         lambda: hashed.count(),
@@ -1711,10 +1681,6 @@ def exact_index_increment(
             )
             seg = f"batch-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
             out_path = os.path.join(index_dir, _PAIRS, seg)
-            from mini_data_platform_spark.operators.resources import (
-                run_concurrently,
-            )
-
             run_concurrently(  # two independent writes (guide §2.6)
                 lambda: resolved.write.mode("overwrite").parquet(
                     out_path
@@ -1786,10 +1752,6 @@ def embdup_index_build(
         F.col(vec_col).alias("vec"),
         l2_norm(F.col(vec_col)).alias("nrm"),
     ).persist()
-    from mini_data_platform_spark.operators.resources import (
-        run_concurrently,
-    )
-
     _, _, n = run_concurrently(  # independent actions (guide §2.6)
         lambda: _write_segment(
             lsh_bucket(base, planes, "id", "vec").select("id", "bucket"),
@@ -1834,7 +1796,9 @@ def _embdup_batch_pairs(
     declared_small = n_new is None
 
     def _guard(df: DataFrame, bound) -> DataFrame:
-        return F.broadcast(df) if declared_small else _hinted(df, bound)
+        if declared_small:
+            return F.broadcast(df)
+        return guarded_broadcast(df, bound)
 
     threshold, planes = meta["threshold"], meta["planes"]
     bucketed_new = (
@@ -1853,15 +1817,11 @@ def _embdup_batch_pairs(
         # distributed candidate joins entirely. Counted small batches
         # (steady increments) qualify under the same entry cap. Cap
         # overflow falls through to the distributed path below.
-        # mis-declared-batch guard (round-12 advice): limit+1 collect;
+        # mis-declared-batch guard (round-12 advice): bounded collect;
         # over the cap -> entries stays None -> distributed path
-        new_rows = bucketed_new.limit(_PROBE_MAX_ENTRIES + 1).collect()
-        entries = (
-            _probe_entries(
-                buckets_old, "bucket", sorted({r[1] for r in new_rows})
-            )
-            if len(new_rows) <= _PROBE_MAX_ENTRIES
-            else None
+        new_rows = bounded_rows(bucketed_new, _PROBE_MAX_ENTRIES)
+        entries = None if new_rows is None else _probe_entries(
+            buckets_old, "bucket", sorted({r[1] for r in new_rows})
         )
         if entries is not None:
             probe_loc = _local_bucket_pairs(
@@ -1869,7 +1829,7 @@ def _embdup_batch_pairs(
                 [(r[0], r[1]) for r in entries],
                 None,
                 _VERIFY_BROADCAST_MAX_PAIRS,
-                min(_VERIFY_BROADCAST_MAX_DOCS, _broadcast_max_rows()),
+                _verify_max_docs(),
             )
     if probe_loc is None:
         cand_cross = (
@@ -1943,7 +1903,7 @@ def _embdup_batch_pairs(
         )
         vecs_old = vecs_old.join(
             cand_ids if declared_small
-            else _hinted(cand_ids, 2 * n_cands),
+            else guarded_broadcast(cand_ids, 2 * n_cands),
             "id", "left_semi",
         )
     all_vecs = batch.unionByName(vecs_old)
@@ -1955,9 +1915,9 @@ def _embdup_batch_pairs(
         F.col("id").alias("id_b"), F.col("vec").alias("_vb"),
         F.col("nrm").alias("_nb"),
     )
-    # a literal candidate frame is dial-bounded by construction
-    # (max_ids ≤ min(verify ceiling, broadcast dial)), so it earns the
-    # hard hint in the counted regime too — same bound _hinted enforces
+    # a literal candidate frame is cap-bounded by construction
+    # (max_ids ≤ _verify_max_docs()), so it earns the hard hint in the
+    # counted regime too — the bound guarded_broadcast enforces
     small_literal = declared_small or loc is not None
     cands_j = F.broadcast(cands_v) if small_literal else cands_v
     vb_j = F.broadcast(vb) if small_literal else vb
@@ -1993,7 +1953,6 @@ def embdup_index_lookup(
     contract: batch + candidates declared broadcast-sized, guard-count
     jobs dropped, verification collapses to broadcast joins)."""
     from mini_data_platform_spark.functions.vectors import l2_norm
-    from mini_data_platform_spark.operators.resources import attach_plan
 
     meta = _meta_as_of(_recover_meta(index_dir), as_of)
     if meta.get("kind") != "embdup":
@@ -2057,10 +2016,6 @@ def embdup_index_increment(
             )
             seg = f"batch-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
             out_path = os.path.join(index_dir, _PAIRS, seg)
-            from mini_data_platform_spark.operators.resources import (
-                run_concurrently,
-            )
-
             run_concurrently(  # independent writes (guide §2.6)
                 lambda: verified.write.mode("overwrite").parquet(
                     out_path
@@ -2258,20 +2213,19 @@ def neardup_index_pairs(
     if _SHH in docs_live.columns:
         # hash-verify from the persisted shingle-hash sets (text pruned)
         hsets = docs_live.select("id", _SHH).join(
-            _hinted(cand_ids, 2 * n_cands), "id", "left_semi"
+            guarded_broadcast(cand_ids, 2 * n_cands), "id", "left_semi"
         )
-        # same gate as the batch path: the MDP_INCR_BROADCAST_MAX_ROWS
-        # dial is the module's ONE hard-broadcast knob — dial=0 must
+        # same gate as the batch path: resources.BROADCAST_MAX_ROWS is
+        # the ONE hard-broadcast cap — setting it to 0 must
         # strip every hard hint from this plan too (round-10 advice)
         scored = jaccard_pairs_from_hashes(
             hsets, cands, "id",
-            small_pairs=2 * n_cands
-            <= min(_VERIFY_BROADCAST_MAX_DOCS, _broadcast_max_rows()),
+            small_pairs=2 * n_cands <= _verify_max_docs(),
             involved_filtered=True,
         )
     else:
         docs = docs_live.join(
-            _hinted(cand_ids, 2 * n_cands), "id", "left_semi"
+            guarded_broadcast(cand_ids, 2 * n_cands), "id", "left_semi"
         )
         scored = jaccard_pairs_from(
             _staged_shingles(docs, "id", "text", shingle_n), cands, "id"

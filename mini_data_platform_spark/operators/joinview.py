@@ -48,7 +48,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mini_data_platform_spark.operators.incremental import (
-    _hinted,
     _read_meta,
     _write_meta,
 )
@@ -60,7 +59,9 @@ from mini_data_platform_spark.operators.mergetable import (
 from mini_data_platform_spark.operators.resources import (
     attach_plan,
     carry_plan,
+    guarded_broadcast,
     release_plan,
+    row_bound,
 )
 
 _OP = "_op"
@@ -87,11 +88,11 @@ def _snapshot_for(
     ``table_lookup`` (log filtered BEFORE the resolve + IN-literal scan
     pushdown); non-key joins pay the resolve once, then semi-join.
 
-    The zset deltas carry ``_mdp_row_bound`` (changed-segment footer
-    rows — mergetable.table_changes_zset); the bound replaces the probe
+    The zset deltas carry a ``row_bound`` (changed-segment footer rows
+    — mergetable.table_changes_zset); the bound replaces the probe
     ``count()`` driver action on both paths (r15)."""
     probes = delta.select(*on).distinct()
-    bound = getattr(delta, "_mdp_row_bound", None)
+    bound = row_bound(delta)
     if list(meta["keys"]) == list(on):
         # table_lookup hints/bounds the probe frame itself and attaches
         # anything it persists to the returned plan
@@ -102,10 +103,10 @@ def _snapshot_for(
         # probed once below — no persist, no count: the footer bound
         # drives the broadcast decision
         state = table_read(spark, table_dir, as_of=as_of).join(
-            _hinted(probes, bound), on, "left_semi"
+            guarded_broadcast(probes, bound), on, "left_semi"
         )
         return state
-    probes = _hinted(probes.persist(), probes.count())
+    probes = guarded_broadcast(probes.persist(), probes.count())
     state = table_read(spark, table_dir, as_of=as_of).join(
         probes, on, "left_semi"
     )

@@ -63,7 +63,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mini_data_platform_spark.operators.incremental import (
-    _hinted,
     _meta_as_of,
     _read_meta,
     _segment_paths,
@@ -71,10 +70,22 @@ from mini_data_platform_spark.operators.incremental import (
     _write_segment,
     vacuum_index,
 )
+from mini_data_platform_spark.operators.resources import (
+    attach_plan,
+    bounded_rows,
+    guarded_broadcast,
+    release_plan,
+    run_concurrently,
+    with_row_bound,
+)
 
 _ROWS = "rows"
 _OP = "_op"
 _SEQ = "_seq"
+
+#: probe sets of at most this many keys are collected and pushed into
+#: the scan as IN literals (see table_lookup)
+LOOKUP_PUSHDOWN_MAX_KEYS = 1000
 
 #: commit-ticket directory (optimistic concurrency — see _try_ticket)
 _COMMITS = "_commits"
@@ -588,10 +599,6 @@ def table_apply_many(
     import shutil
     import uuid
 
-    from mini_data_platform_spark.operators.resources import (
-        run_concurrently,
-    )
-
     if not batches:
         return _recover_meta(table_dir)
     meta = _recover_meta(table_dir)
@@ -791,8 +798,8 @@ def table_lookup(
     key (absent/deleted keys return nothing). The log is filtered to the
     probed keys BEFORE the resolve — a guarded-broadcast semi-join, so
     a serving lookup costs O(probed keys' log rows), never a full
-    merge-on-read. Small probe sets (≤ ``MDP_LOOKUP_PUSHDOWN_MAX_KEYS``,
-    default 1000) additionally push a per-column ``IN`` literal filter
+    merge-on-read. Small probe sets (≤ ``LOOKUP_PUSHDOWN_MAX_KEYS``)
+    additionally push a per-column ``IN`` literal filter
     into the parquet scan — a NECESSARY superset condition (the
     semi-join keeps exactness for composite keys), but one the scanner
     can answer from file/row-group min-max statistics, so on a
@@ -807,9 +814,9 @@ def table_lookup(
     bound the lookup costs at most ONE driver action — a bounded
     ``collect`` when the bound admits the literal pushdown, NONE at all
     when it doesn't (bound-hinted semi-join only). Without a bound the
-    probe count is discovered with a single ``limit(max+1).collect``
-    probe instead of the old count-then-collect pair (guide §1.2: one
-    action where two ran)."""
+    probe count is discovered with a single bounded collect
+    (resources.bounded_rows) instead of the old count-then-collect pair
+    (guide §1.2: one action where two ran)."""
     meta = _with_asof_columns(
         _meta_as_of(_recover_meta(table_dir), as_of), as_of
     )
@@ -821,19 +828,14 @@ def table_lookup(
             f"probes must carry exactly the key columns {keys}, "
             f"got {probes.columns}"
         )
-    from mini_data_platform_spark.operators.resources import attach_plan
-
     pk = probes.distinct()
-    max_push = int(os.environ.get("MDP_LOOKUP_PUSHDOWN_MAX_KEYS", "1000"))
     vals = None
     attached: list[DataFrame] = []
-    if n_bound is not None and n_bound <= max_push:
+    if n_bound is not None and n_bound <= LOOKUP_PUSHDOWN_MAX_KEYS:
         vals = pk.collect()  # bounded by n_bound by contract
     elif n_bound is None:
         # one probing action decides the regime AND yields the literals
-        head = pk.limit(max_push + 1).collect()
-        if len(head) <= max_push:
-            vals = head
+        vals = bounded_rows(pk, LOOKUP_PUSHDOWN_MAX_KEYS)
     rows = _read_rows(spark, table_dir, meta)
     if vals is not None:
         # bounded driver-side collect (probe-sized, same class as the
@@ -849,10 +851,10 @@ def table_lookup(
         # big probe set with a known bound: no driver action at all —
         # the bound drives the broadcast decision, the semi-join the
         # exactness
-        pk = _hinted(pk, n_bound)
+        pk = guarded_broadcast(pk, n_bound)
     else:
         pk = pk.persist()
-        pk = _hinted(pk, pk.count())
+        pk = guarded_broadcast(pk, pk.count())
         attached.append(pk)
     rows = rows.join(pk, keys, "left_semi")
     if _is_resolved_log(meta):  # already key-unique and live
@@ -908,8 +910,6 @@ def table_merge_into(
     lookup and the apply, the stale derivation is thrown away and the
     whole merge re-derives from the new state (serializable MERGE, not
     last-writer-wins over a phantom)."""
-    from mini_data_platform_spark.operators.resources import release_plan
-
     meta = _recover_meta(table_dir)
     if meta.get("kind") != "mergetable":
         raise ValueError(f"{table_dir} is not a merge table")
@@ -1047,9 +1047,9 @@ def table_changes_zset(
     The changed-key broadcast decision uses the changed segments'
     parquet-footer row count (driver-local metadata, no job).
 
-    The returned value carries ``_mdp_row_bound`` — a cheap upper bound
-    on its row count (2x changed-segment footer rows) that downstream
-    candidate-bounded consumers (``joinview._snapshot_for``) use to
+    The returned value carries a ``resources.row_bound`` — a cheap
+    upper bound on its row count (2x changed-segment footer rows) that
+    downstream candidate-bounded consumers (``joinview._snapshot_for``) use to
     skip their own count jobs. ``resources.release_plan`` stays safe to
     call (nothing is attached)."""
     from mini_data_platform_spark.sinks.compact import dir_parquet_rows
@@ -1082,12 +1082,11 @@ def table_changes_zset(
             *keys,
             *[F.col(f"_w.{c}").alias(c) for c in cols],
         ).withColumn(_OP, F.lit(1))
-        out._mdp_row_bound = bound
-        return out
+        return with_row_bound(out, bound)
     ck = _read_rows(spark, table_dir, meta_new, paths=paths).select(
         *keys
     ).distinct()
-    rows = rows.join(_hinted(ck, bound), keys, "left_semi")
+    rows = rows.join(guarded_broadcast(ck, bound), keys, "left_semi")
     is_old = F.col(_SEQ) < F.lit(since)
     g = rows.groupBy(*[F.col(k) for k in keys]).agg(
         F.max_by(payload, F.col(_SEQ)).alias("_n"),
@@ -1118,8 +1117,7 @@ def table_changes_zset(
         *[F.col(f"_e.{c}").alias(c) for c in cols],
         F.col(f"_e.{_OP}").alias(_OP),
     )
-    out._mdp_row_bound = 2 * bound
-    return out
+    return with_row_bound(out, 2 * bound)
 
 
 def compact_table(

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .resources import attach_plan
+from .resources import attach_plan, bounded_rows
 
 #: Integer mass units per node at t=0. 1e12 keeps ranks readable as
 #: picomass and leaves 100·N·scale < 2^63 headroom for N up to ~90k
@@ -54,7 +54,7 @@ SCALE = 10**12
 
 #: symmetrized-edge lists at or under this row count run the power
 #: iterations on the driver (see pagerank_fixed); 0 disables
-_DRIVER_MAX_EDGES_DEFAULT = 2_000_000
+DRIVER_MAX_EDGES = 2_000_000
 
 
 def pagerank_fixed(
@@ -64,7 +64,6 @@ def pagerank_fixed(
     iterations: int = 10,
     damping_pct: int = 85,
     scale: int | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over the UNDIRECTED simple graph spanned by
     ``edges`` (symmetrized, parallel edges collapsed). Returns
@@ -85,42 +84,31 @@ def pagerank_fixed(
     SMALL-GRAPH FAST PATH (r15, the bpe.py doctrine): the iterations
     are pure int64 arithmetic over the symmetrized edge list — exact
     and engine-independent by design — so when that list is
-    driver-sized (one bounded ``limit(cap+1).collect()`` probe, cap =
-    ``driver_max_edges`` / ``MDP_PAGERANK_DRIVER_MAX_EDGES``, default
-    2M rows, ~32 MB) the power iterations run as vectorized numpy
-    int64 scatter-adds in one process instead of ``iterations`` x
-    (join + aggregate + eager checkpoint) driver round-trips. Identical
-    floor-division-per-edge semantics, pinned by
-    tests/test_pagerank.py's path-agreement test; corpus-scale graphs
-    overflow the probe and take the distributed loop unchanged
-    (``driver_max_edges=0`` forces it)."""
-    import os
-
+    driver-sized (one bounded Arrow collect of at most
+    ``DRIVER_MAX_EDGES`` rows, ~32 MB — resources.bounded_rows) the
+    power iterations run as vectorized numpy int64 scatter-adds in one
+    process instead of ``iterations`` x (join + aggregate + eager
+    checkpoint) driver round-trips. Identical floor-division-per-edge
+    semantics, pinned by tests/test_pagerank.py's path-agreement test;
+    corpus-scale graphs overflow the probe and take the distributed
+    loop unchanged."""
     if not 0 < damping_pct < 100:
         raise ValueError(f"damping_pct must be in (0, 100), got {damping_pct}")
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
     spark = edges.sparkSession
     a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-    cap = (
-        int(os.environ.get(
-            "MDP_PAGERANK_DRIVER_MAX_EDGES", _DRIVER_MAX_EDGES_DEFAULT
-        ))
-        if driver_max_edges is None
-        else driver_max_edges
+    # probe the RAW edge projection (before symmetrize/distinct — half
+    # the transfer, and the dedup is cheaper in numpy than as a Spark
+    # union+distinct shuffle) over one bounded Arrow transfer; a graph
+    # over the cap falls through untouched
+    raw = bounded_rows(
+        edges.select(a.alias("src"), b.alias("dst")),
+        DRIVER_MAX_EDGES,
+        arrow=True,
     )
-    if cap > 0:
-        # probe the RAW edge projection (before symmetrize/distinct —
-        # half the transfer, and the dedup is cheaper in numpy than as
-        # a Spark union+distinct shuffle) over one bounded Arrow
-        # transfer; a graph over the cap falls through untouched
-        pdf = _arrow_collect(
-            edges.select(a.alias("src"), b.alias("dst")).limit(cap + 1)
-        )
-        if len(pdf) <= cap:
-            return _pagerank_local(
-                spark, pdf, iterations, damping_pct, scale
-            )
+    if raw is not None:
+        return _pagerank_local(spark, raw, iterations, damping_pct, scale)
     # persist the graph BEFORE iterating: edges may be an expensive
     # pipeline (the near-dup LSH graph), and the iteration loop touches
     # degrees and adjacency every round — without the caches each round
@@ -182,50 +170,25 @@ def pagerank_fixed(
     return attach_plan(out, sym, deg, sym_deg)
 
 
-def _arrow_collect(df: DataFrame):
-    """Bounded ``toPandas`` with Arrow transfer forced on for the call
-    (the host session — e.g. the external driver harness — may not have
-    it enabled; without it toPandas degrades to the row-by-row py4j
-    path, 2.4x slower at the 1M-edge probe). The conf is restored so a
-    query function never leaks session-level state."""
-    spark = df.sparkSession
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:  # noqa: BLE001
-        old = None
-    try:
-        spark.conf.set(key, "true")
-        return df.toPandas()
-    finally:
-        try:
-            if old is not None:
-                spark.conf.set(key, old)
-        except Exception:  # noqa: BLE001
-            pass
-
-
 def _pagerank_local(
     spark,
-    raw_pdf,
+    raw,
     iterations: int,
     damping_pct: int,
     scale: int | None,
 ) -> DataFrame:
     """Driver-side twin of the distributed loop over the RAW (src, dst)
-    edge rows: symmetrize, drop self-loops and null-keyed rows (a null
-    key never survives the distributed path's ``src != dst`` filter),
-    dedup, then iterate — the same per-EDGE floor-division
-    contribution, the same auto-pick/overflow guard, the same output
+    edge rows (a pyarrow Table): symmetrize, drop self-loops and
+    null-keyed rows (a null key never survives the distributed path's
+    ``src != dst`` filter), dedup, then iterate — the same per-EDGE
+    floor-division contribution, the same auto-pick/overflow guard, the same output
     schema. numpy int64 end-to-end; the final ``rank`` converts through
     float64 exactly as the JVM's (double)r / (double)scale does."""
     import numpy as np
 
     schema = "v long, rank_units long, rank double"
-    s_raw, d_raw = raw_pdf["src"], raw_pdf["dst"]
-    keep = s_raw.notna() & d_raw.notna()
-    s = s_raw[keep].to_numpy(dtype=np.int64)
-    d = d_raw[keep].to_numpy(dtype=np.int64)
+    raw = raw.drop_null()
+    s, d = raw["src"].to_numpy(), raw["dst"].to_numpy()
     # symmetrize + self-loop filter + dedup (the sym/distinct the
     # distributed path does as a union+distinct shuffle)
     both = np.stack(

@@ -23,6 +23,13 @@ from mini_data_platform_spark.operators import corpus as CORPUS
 from mini_data_platform_spark.operators import dedup_fuzzy as DF_OPS
 from mini_data_platform_spark.operators import embed as EMB_OPS
 from mini_data_platform_spark.operators import similarity as SIM
+from mini_data_platform_spark.operators.resources import (
+    attach_plan,
+    carry_plan,
+    guarded_broadcast,
+    row_bound,
+    run_concurrently,
+)
 
 NUM_HASHES = 16
 BANDS = 4
@@ -309,7 +316,8 @@ def doc_exact_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = docs.select((F.col("doc_id") + 20000).alias("doc_id"), "text")
     index_dir = tempfile.mkdtemp(prefix="mdp_exidx_")
     exact_index_build(_spread(docs), index_dir, "doc_id", "text")
-    return exact_index_increment(_spread(b2), index_dir)
+    out = exact_index_increment(_spread(b2), index_dir)
+    return attach_plan(out, index_dir)
 
 
 def doc_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,8 +558,6 @@ def doc_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline)."""
     from pyspark import StorageLevel
 
-    from mini_data_platform_spark.operators.resources import attach_plan
-
     docs = _spread(load_table(spark, sf_dir, "documents"))
     t = TX.tokens(F.col("text"))
     k = len(PHRASE_TERMS)
@@ -747,7 +753,6 @@ def doc_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_index_increment,
         neardup_index_pairs,
     )
-    from mini_data_platform_spark.operators.resources import carry_plan
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     b1 = _spread(docs)
@@ -757,9 +762,6 @@ def doc_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + 10000).alias("doc_id"),
             F.concat_ws(" ", F.slice(t, 2, F.size(t) - 1)).alias("text"),
         )
-    )
-    from mini_data_platform_spark.operators.resources import (
-        run_concurrently,
     )
 
     index_dir = tempfile.mkdtemp(prefix="mdp_ndidx_")
@@ -778,7 +780,7 @@ def doc_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: neardup_index_increment(b2, index_dir),
     )
     out = within_b1.unionByName(incr)
-    return carry_plan(out, within_b1)
+    return carry_plan(attach_plan(out, index_dir), within_b1)
 
 
 def doc_neardup_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -857,7 +859,7 @@ def doc_neardup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         JACCARD_THRESHOLD, NUM_HASHES, BANDS, SHINGLE_N,
     )
     index_delete(corpus.where(F.col("doc_id") % 7 == 0), index_dir)
-    return neardup_index_pairs(spark, index_dir)
+    return attach_plan(neardup_index_pairs(spark, index_dir), index_dir)
 
 
 def doc_neardup_delete_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,23 +924,23 @@ def _cached_index(
 
 def _dupes_for_antijoin(comps: DataFrame, out_col: str = "doc_id") -> DataFrame:
     """Non-canonical cluster members from a CC label frame, broadcast-
-    hinted when safe: ``connected_components`` threads its edge count on
-    the single-task path (graph.py), and a graph under the local ceiling
-    has ≤ 2·edges vertices — KBs-to-MBs of bigint ids, never the corpus.
-    Without the hint the CC output (mapInPandas, no stats) planned as a
-    SortMergeJoin that exchanged-and-sorted the whole corpus TWICE (one
-    per union branch — round-15 plan capture); with it both anti-joins
-    are broadcast-hash and the corpus truly streams once. On the
-    distributed CC paths no bound is known and the hint is not applied."""
-    from mini_data_platform_spark.operators.graph import LOCAL_CC_MAX_EDGES
-
+    hinted when safe: ``connected_components`` records a row bound on
+    the single-task path (graph.py) — KBs-to-MBs of bigint ids, never
+    the corpus. Without the hint the CC output (mapInPandas, no stats)
+    planned as a SortMergeJoin that exchanged-and-sorted the whole
+    corpus TWICE (one per union branch — round-15 plan capture); with
+    it both anti-joins are broadcast-hash and the corpus truly streams
+    once. On the distributed CC paths no bound is known and the hint is
+    not applied."""
     dupes = comps.filter(F.col("v") != F.col("comp")).select(
         F.col("v").alias(out_col)
     )
-    n_edges = getattr(comps, "_mdp_edge_count", None)
-    if n_edges is not None and n_edges <= LOCAL_CC_MAX_EDGES:
-        dupes = F.broadcast(dupes)
-    return dupes
+    bound = row_bound(comps)  # vertices, ≤ 2·edges
+    if bound is None:
+        return dupes
+    # a k-vertex component has ≥ k−1 edges and k−1 non-canonical
+    # members, so the dupes number at most the edges: half the bound
+    return guarded_broadcast(dupes, bound // 2)
 
 
 def doc_dedup_final(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,7 +1009,6 @@ def doc_curated_corpus(
     from pyspark import StorageLevel
 
     from mini_data_platform_spark.operators.graph import connected_components
-    from mini_data_platform_spark.operators.resources import attach_plan
 
     corpus = _mutated_corpus(load_table(spark, sf_dir, "documents"))
     t = F.col("text")
@@ -1060,7 +1061,6 @@ def doc_curated_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_index_increment,
         neardup_index_pairs,
     )
-    from mini_data_platform_spark.operators.resources import carry_plan
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     b1 = _spread(docs)
@@ -1076,9 +1076,6 @@ def doc_curated_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.quality_score(tcol) >= CURATION_MIN_QUALITY
     ) & TX.language_guess(tcol).isin(*CURATION_LANGS)
     f1, f2 = b1.filter(gate), b2.filter(gate)
-    from mini_data_platform_spark.operators.resources import (
-        run_concurrently,
-    )
 
     index_dir = tempfile.mkdtemp(prefix="mdp_curidx_")
     neardup_index_build(
@@ -1105,7 +1102,7 @@ def doc_curated_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.quality_score(tcol).alias("quality"),
         F.md5(tcol).alias("text_md5"),
     )
-    return carry_plan(out, within)
+    return carry_plan(attach_plan(out, index_dir), within)
 
 
 def doc_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1994,7 +1991,7 @@ def emb_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     within_b1 = SIM.near_dup_embeddings(
         b1, "vec_id", "embedding", COS_THRESHOLD, n_planes=N_PLANES
     )
-    return within_b1.unionByName(incr)
+    return attach_plan(within_b1.unionByName(incr), index_dir)
 
 
 #: unigram-LM vocabulary size for the declared query — deliberately

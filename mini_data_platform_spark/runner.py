@@ -51,7 +51,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_data_platform_spark.operators.clean import clean_sales  # noqa: F401 — kept for API compat
 from mini_data_platform_spark.operators.dedup import (
     INGEST_ORDER_COL,
     dedup_keep_latest,
@@ -62,7 +61,6 @@ from mini_data_platform_spark.registry import (
     TableSpec,
     clean_table,
 )
-from mini_data_platform_spark.schema import SALES_COLUMNS  # noqa: F401
 from mini_data_platform_spark.sinks.audit import AuditLog
 from mini_data_platform_spark.sinks.objects import move_object
 from mini_data_platform_spark.sources.readers import read_file_as_strings

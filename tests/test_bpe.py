@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from mini_data_platform_spark.operators import bpe
 from mini_data_platform_spark.operators.bpe import (
     EOW,
     bpe_learn,
@@ -52,18 +53,20 @@ class TestLearn:
         b = bpe_learn(_docs(spark, TEXTS, 7), "text", 8)
         assert a == b
 
-    def test_driver_and_distributed_paths_agree(self, spark):
+    def test_driver_and_distributed_paths_agree(self, spark, monkeypatch):
         """r15 small-vocab fast path: the driver-side merge loop (the
         default under the cap) and the distributed loop
-        (driver_max_words=0 forces it) must be merge-for-merge equal —
+        (DRIVER_MAX_WORDS=0 forces it) must be merge-for-merge equal —
         including the pair counts and the min_count stopping rule."""
         docs = _docs(spark, TEXTS, 3)
         fast = bpe_learn(docs, "text", 12)
-        dist = bpe_learn(docs, "text", 12, driver_max_words=0)
+        monkeypatch.setattr(bpe, "DRIVER_MAX_WORDS", 0)
+        dist = bpe_learn(docs, "text", 12)
         assert fast == dist
         # a cap the vocab overflows must also fall through to the
         # distributed loop (probe returns cap+1 rows)
-        overflow = bpe_learn(docs, "text", 12, driver_max_words=2)
+        monkeypatch.setattr(bpe, "DRIVER_MAX_WORDS", 2)
+        overflow = bpe_learn(docs, "text", 12)
         assert overflow == dist
 
     def test_token_counts_paths_agree(self, spark, monkeypatch):
@@ -82,7 +85,7 @@ class TestLearn:
             }
 
         fast = counts()
-        monkeypatch.setenv("MDP_BPE_DRIVER_MAX_WORDS", "0")
+        monkeypatch.setattr(bpe, "DRIVER_MAX_WORDS", 0)
         dist = counts()
         assert fast == dist and len(fast) == len(TEXTS)
 

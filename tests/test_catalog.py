@@ -91,6 +91,35 @@ class TestTableCache:
         again = load_table(spark, str(tmp_path), "t")
         assert again.count() == 5
 
+    def test_rewritten_partition_leaf_misses_cache(self, spark, tmp_path):
+        import glob
+        import os
+        import shutil
+
+        p = str(tmp_path / "t.parquet")
+        spark.range(4).selectExpr("id", "id % 2 AS part").coalesce(
+            1
+        ).write.partitionBy("part").parquet(p)
+        first = load_table(spark, str(tmp_path), "t")
+        assert first.count() == 4
+        # rewrite one leaf file and its checksum sidecar IN PLACE (same
+        # names, new content): the partition directory's own entry and
+        # listing do not change
+        (leaf,) = glob.glob(os.path.join(p, "part=0", "*.parquet"))
+        src = str(tmp_path / "src.parquet")
+        spark.range(10, 15).coalesce(1).write.parquet(src)
+        (src_file,) = glob.glob(os.path.join(src, "*.parquet"))
+
+        def crc(f):
+            head, name = os.path.split(f)
+            return os.path.join(head, f".{name}.crc")
+
+        shutil.copyfile(src_file, leaf)
+        shutil.copyfile(crc(src_file), crc(leaf))
+        again = load_table(spark, str(tmp_path), "t")
+        assert again is not first
+        assert again.count() == 7  # 5 rewritten + 2 untouched
+
     def test_cache_holds_plans_not_results(self, spark):
         # the cached frame is lazy: no storage level, no materialization
         df = load_table(spark, SF, "region")

@@ -3,6 +3,7 @@ near-dup pairs, convergence on chains/cliques, determinism."""
 
 from pyspark.sql import Row
 
+from mini_data_platform_spark.operators import graph
 from mini_data_platform_spark.operators.graph import connected_components
 
 
@@ -165,11 +166,10 @@ class TestLocalUnionFind:
         assert "MapInPandas" in plan, plan
         assert "SortMergeJoin" not in plan and "HashAggregate" not in plan
 
-    def test_auto_falls_back_to_label_above_ceiling(self, spark):
+    def test_auto_falls_back_to_label_above_ceiling(self, spark, monkeypatch):
+        monkeypatch.setattr(graph, "LOCAL_CC_MAX_EDGES", 2)
         df = connected_components(
-            _pairs(spark, [(1, 2), (2, 3), (3, 4)]),
-            algorithm="auto",
-            local_edges_max=2,
+            _pairs(spark, [(1, 2), (2, 3), (3, 4)]), algorithm="auto"
         )
         out = {r["v"]: r["comp"] for r in df.collect()}
         assert out == {1: 1, 2: 1, 3: 1, 4: 1}

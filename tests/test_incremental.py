@@ -22,6 +22,7 @@ from mini_data_platform_spark.operators.incremental import (
     neardup_index_increment,
     _read_meta,
 )
+from mini_data_platform_spark.operators import resources
 from mini_data_platform_spark.operators.resources import release_plan
 
 NUM_HASHES, BANDS, SHINGLE_N, THRESH = 16, 4, 3, 0.5
@@ -539,7 +540,7 @@ class TestMaxBucket:
 
 
 class TestBroadcastGuard:
-    """MDP_INCR_BROADCAST_MAX_ROWS=0 forces every batch-side frame to
+    """resources.BROADCAST_MAX_ROWS=0 forces every batch-side frame to
     lose its broadcast hint (the plan shape is pinned in
     test_plan_quality.TestIncrementalIndexPlan); results must be
     IDENTICAL on the shuffle path — the guard changes strategy, never
@@ -553,7 +554,7 @@ class TestBroadcastGuard:
         neardup_index_build(
             b1, tmpdir, "doc_id", "text", THRESH, NUM_HASHES, BANDS, SHINGLE_N
         )
-        monkeypatch.setenv("MDP_INCR_BROADCAST_MAX_ROWS", "0")
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", 0)
         incr = _pairs_set(neardup_index_increment(b2, tmpdir))
         within = _full_pairs(b1)
         full = _full_pairs(b1.unionByName(b2))
@@ -569,7 +570,7 @@ class TestBroadcastGuard:
             b1, tmpdir, "doc_id", "text",
             THRESH, NUM_HASHES, BANDS, SHINGLE_N, max_bucket=CAP,
         )
-        monkeypatch.setenv("MDP_INCR_BROADCAST_MAX_ROWS", "0")
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", 0)
         incr = _pairs_set(neardup_index_increment(b2, tmpdir))
         capped_full = near_dup_pairs(
             b1.unionByName(b2), "doc_id", "text",
@@ -595,7 +596,7 @@ class TestBroadcastGuard:
             (F.col("doc_id") + 1000).alias("doc_id"), "text"
         )
         exact_index_build(b1, tmpdir, "doc_id", "text")
-        monkeypatch.setenv("MDP_INCR_BROADCAST_MAX_ROWS", "0")
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", 0)
         out = {
             r["id"]: r["dup_of"]
             for r in exact_index_increment(copies, tmpdir).collect()
@@ -623,7 +624,7 @@ class TestBroadcastGuard:
             ),
         )
         embdup_index_build(b1, tmpdir, "vec_id", "embedding", threshold=0.9)
-        monkeypatch.setenv("MDP_INCR_BROADCAST_MAX_ROWS", "0")
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", 0)
         incr = {
             (r["id_a"], r["id_b"])
             for r in embdup_index_increment(b2, tmpdir).collect()
@@ -1724,8 +1725,8 @@ class TestAdviceR10BroadcastBounds:
     defect). These tests pin the BOUND (a pushed In(id,...) on the
     corpus scan) and the zero-shuffle shape, not the mechanism's join
     type. And neardup_index_pairs must honor the
-    MDP_INCR_BROADCAST_MAX_ROWS dial exactly like the batch path:
-    dial=0 strips every hard hint from the snapshot plan too."""
+    resources.BROADCAST_MAX_ROWS cap exactly like the batch path:
+    cap=0 strips every hard hint from the snapshot plan too."""
 
     def test_small_batch_text_verify_semi_filters_corpus(
         self, spark, tmpdir
@@ -1852,12 +1853,13 @@ class TestAdviceR10BroadcastBounds:
 
         monkeypatch.setattr(inc, "jaccard_pairs_from_hashes", spy)
 
-        monkeypatch.setenv("MDP_INCR_BROADCAST_MAX_ROWS", "0")
+        default_cap = resources.BROADCAST_MAX_ROWS
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", 0)
         with_dial_0 = _pairs_set(inc.neardup_index_pairs(spark, tmpdir))
         assert captured.get("small_pairs") is False
 
         captured.clear()
-        monkeypatch.delenv("MDP_INCR_BROADCAST_MAX_ROWS")
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", default_cap)
         default = _pairs_set(inc.neardup_index_pairs(spark, tmpdir))
         assert captured.get("small_pairs") is True
         # the dial changes strategy, never semantics

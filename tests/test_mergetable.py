@@ -707,7 +707,7 @@ class TestClusteredLookup:
             table_lookup,
         )
 
-        monkeypatch.setenv("MDP_LOOKUP_PUSHDOWN_MAX_KEYS", "0")
+        monkeypatch.setattr(mergetable, "LOOKUP_PUSHDOWN_MAX_KEYS", 0)
         d = str(tmp_path / "t")
         _standard_table(spark, d)
         probes = spark.createDataFrame([(2,), (4,)], "k bigint")

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from mini_data_platform_spark.operators import pagerank
 from mini_data_platform_spark.operators.pagerank import SCALE, pagerank_fixed
 from mini_data_platform_spark.operators.resources import release_plan
 
@@ -43,17 +44,19 @@ class TestPagerankFixed:
         }
         assert got == _reference(pairs, iterations=7)
 
-    def test_driver_and_distributed_paths_agree(self, spark):
+    def test_driver_and_distributed_paths_agree(self, spark, monkeypatch):
         """r15 small-graph fast path: the numpy driver loop (default
         under the edge cap) and the distributed loop
-        (driver_max_edges=0 forces it) must be bit-identical — units
+        (DRIVER_MAX_EDGES=0 forces it) must be bit-identical — units
         AND the double rank."""
         pairs = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (2, 3), (5, 1)]
+        default_cap = pagerank.DRIVER_MAX_EDGES
 
-        def run(scale=SCALE, **kw):
+        def run(scale=SCALE, cap=default_cap):
+            monkeypatch.setattr(pagerank, "DRIVER_MAX_EDGES", cap)
             out = pagerank_fixed(
                 _edges(spark, pairs), "src", "dst", iterations=6,
-                scale=scale, **kw,
+                scale=scale,
             )
             rows = {
                 r["v"]: (r["rank_units"], r["rank"]) for r in out.collect()
@@ -62,14 +65,14 @@ class TestPagerankFixed:
             return rows
 
         fast = run()
-        dist = run(driver_max_edges=0)
+        dist = run(cap=0)
         assert fast == dist
         # a cap the edge list overflows must fall through to the
         # distributed loop
-        assert run(driver_max_edges=3) == dist
+        assert run(cap=3) == dist
         # auto-picked scale agrees across paths too
         auto_fast = run(scale=None)
-        auto_dist = run(scale=None, driver_max_edges=0)
+        auto_dist = run(scale=None, cap=0)
         assert auto_fast == auto_dist
 
     def test_hub_ranks_highest(self, spark):

@@ -395,10 +395,11 @@ class TestIncrementalIndexPlan:
         from mini_data_platform_spark.operators.incremental import (
             neardup_index_lookup,
         )
+        from mini_data_platform_spark.operators import resources
         from mini_data_platform_spark.operators.resources import release_plan
 
         d, batch = self._fixture(spark, tmp_path)
-        monkeypatch.setenv("MDP_INCR_BROADCAST_MAX_ROWS", "0")
+        monkeypatch.setattr(resources, "BROADCAST_MAX_ROWS", 0)
         # disable auto-broadcast too: the guard only controls the HARD
         # hint; on fixture-sized stats the planner would still choose
         # broadcast on its own (which at real scale it would not)
