@@ -14,19 +14,17 @@ matches the reference's prefix vocabulary
 Two execution modes:
 
 - **scale mode** (default): ALL valid files are cleaned, deduped and
-  upserted in ONE Spark job. Cross-file key collisions resolve exactly as
-  the reference's sequential per-file upserts would (later file wins) via
-  a file-rank precedence column in the dedup window — so the result is
-  bit-identical to the file-loop, but the cluster sees a single
-  clean→window→sink plan over every file at once. Per-file row counts
-  come from one small groupBy on the file rank. This is the 100 TB path:
-  no per-file driver round-trips, one shuffle (the dedup window), and the
-  sink commits once (idempotent upsert makes retries safe). As of round
-  14 the staging itself is file-count-scalable: files are read as a few
-  signature-grouped MULTI-PATH scans (rank recovered from
-  ``input_file_name``) instead of per-file reads chained through an
-  O(n²)-analysis union — the 512-file wall the INGEST_SCALE file-count
-  ladder measured (see ``_stage_valid_files``).
+  upserted in ONE Spark action, the sink's write. Cross-file key
+  collisions resolve exactly as the reference's sequential per-file
+  upserts would (later file wins) via a file-rank precedence column in
+  the dedup window, so the result is bit-identical to the file-loop.
+  Per-file row counts are an Observation riding that write (an exact
+  histogram over the file ranks), so the batch never executes twice.
+  This is the 100 TB path: no per-file driver round-trips, one shuffle
+  (the dedup window), one sink commit (idempotent upsert makes retries
+  safe). Files are read as a few signature-grouped MULTI-PATH scans
+  (rank recovered from ``input_file_name``), not per-file reads chained
+  through an O(n²)-analysis union (see ``_stage_valid_files``).
 - **per-file mode** (``per_file=True``): the reference's loop, for
   deployments that need per-file transactions / fault isolation at the
   cost of one job per file.
@@ -45,11 +43,10 @@ from __future__ import annotations
 
 import logging
 import os
-import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from mini_data_platform_spark.operators.dedup import (
     INGEST_ORDER_COL,
@@ -63,7 +60,13 @@ from mini_data_platform_spark.registry import (
 )
 from mini_data_platform_spark.sinks.audit import AuditLog
 from mini_data_platform_spark.sinks.objects import move_object
+from mini_data_platform_spark.session import get_spark, observed
 from mini_data_platform_spark.sources.readers import read_file_as_strings
+from mini_data_platform_spark.sources.scanstage import (
+    SAFE_BASE,
+    cleanup_dirs,
+    stage_link_dir,
+)
 from mini_data_platform_spark.sources.validate import validate_file
 
 logger = logging.getLogger(__name__)
@@ -133,12 +136,6 @@ class _NoSignature(Exception):
     """A file whose read-signature cannot be derived driver-side (remote
     path, unreadable head) — the batch falls back to the per-file union
     staging, which needs no signatures."""
-
-
-#: basenames whose URI spelling (what ``input_file_name()`` reports) is
-#: guaranteed identical to ``os.path.basename`` — the rank join's key
-#: equality proof. Anything else falls back to per-file staging.
-_SAFE_BASE = re.compile(r"^[A-Za-z0-9._=-]+$")
 
 
 _FILE_BASE_COL = "_file_base"
@@ -379,7 +376,6 @@ def _read_group(
         normalize_column_names,
         read_file,
     )
-    from mini_data_platform_spark.sources.scanstage import stage_link_dir
 
     fmt = sig[0]
     scan: list[str] | str = paths
@@ -451,7 +447,7 @@ def _stage_valid_files(
         base = os.path.basename(path)
         if base in seen:  # ambiguous rank map — e.g. recursive listing
             raise _NoSignature(f"duplicate basename: {base}")
-        if not _SAFE_BASE.match(base):
+        if not SAFE_BASE.match(base):
             # input_file_name() reports the URI form; for names outside
             # the URI-safe set the two spellings can disagree (and a
             # blanket url_decode turns '+' into a space), so the rank
@@ -509,7 +505,10 @@ def run_batch_ingest(
     receives the cleaned, deduped, canonically-typed sales DataFrame and
     returns the row count it wrote (e.g. ``functools.partial(
     sinks.upsert_parquet, spark, target_dir=..., key_cols=["sale_id"])``
-    adapted, or an upsert_dbapi closure).
+    adapted, or an upsert_dbapi closure). Sink contract: it executes its
+    frame fully at least once and returns the number of rows it wrote;
+    per-file row counts are observed on that execution (``None``,
+    logged, if the sink never runs its frame).
 
     ``on_complete`` is the notification hook (reference
     notify_success/notify_failure, process_sales_dags.py:37-62, without
@@ -622,16 +621,11 @@ def _run_batch_ingest(
     report = IngestReport()
     files = discover_files(incoming_dir)
     valid: list[str] = []
-    # validation is a per-FILE verdict (sampled, O(1) data per file) —
-    # but the naive loop pays 1-2 tiny driver-built Spark jobs per file
-    # and serializes their py4j plan builds on the GIL, which at 10k
-    # files is the wall (r9 finding; round-14 measured ~24 ms/file even
-    # 16-wide). validate_files batches small-CSV header checks
-    # driver-side and their date probes into one job per header group,
-    # thread-pools the rest, and returns verdicts IN LISTING ORDER;
-    # driver-side side effects (quarantine moves, audit writes) stay
-    # sequential, so routing and precedence semantics are byte-identical
-    # to the loop.
+    # validation is a per-FILE verdict (sampled, O(1) data per file);
+    # validate_files batches the small files' Spark probes into one plan
+    # instead of 1-2 driver-built jobs per file, and returns verdicts IN
+    # LISTING ORDER. Side effects (quarantine moves, audit writes) stay
+    # sequential, so routing and precedence match the per-file loop.
     from mini_data_platform_spark.sources.validate import validate_files
 
     verdicts = validate_files(spark, files, spec=spec) if files else []
@@ -658,13 +652,10 @@ def _run_batch_ingest(
         report.rows_upserted = sum(o.rows or 0 for o in report.loaded)
         return report
 
-    # ---- scale mode: one job over all valid files -------------------------
+    # ---- scale mode: one Spark action over all valid files ----------------
     # hardlink scan-staging dirs (sources/scanstage.py) must outlive
     # every action over the lazy staged plan — freed after the sink
-    from mini_data_platform_spark.sources.scanstage import cleanup_dirs
-
     stage_dirs: list[str] = []
-    persisted = False
     try:
         try:
             try:
@@ -691,35 +682,22 @@ def _run_batch_ingest(
                     )
                 )
             return report
-        # file-count regime: `cleaned` executes twice (the per-file row
-        # counts below, then the sink's own pipeline) and each
-        # execution re-opens every source file in the scan tasks — at
-        # 10k files that rescan is seconds of wall (INGEST_SCALE r15).
-        # Persist across the two uses when the batch is many-files;
-        # volume-regime batches (few big files) keep the rescan, which
-        # is cheaper there than caching the whole batch.
-        from mini_data_platform_spark.sources.scanstage import (
-            STAGE_MIN_FILES,
+        # per-file row counts ride the sink's own action: a histogram
+        # over the file ranks is exact while ranks <= bins
+        obs = Observation()
+        cleaned = cleaned.observe(
+            obs,
+            F.histogram_numeric(
+                FILE_RANK_COL, F.lit(max(2, len(valid)))
+            ).alias("ranks"),
         )
-
-        persisted = len(valid) >= STAGE_MIN_FILES
-        if persisted:
-            cleaned = cleaned.persist()
-        deduped = dedup_keep_latest(
+        final = dedup_keep_latest(
             cleaned,
             keys=spec.keys,
             order_col=spec.order_col or INGEST_ORDER_COL,
             null_wins=True,
             precedence_cols=(FILE_RANK_COL,),
-        )
-
-        per_file_rows = {
-            int(r[FILE_RANK_COL]): int(r["n"])
-            for r in cleaned.groupBy(FILE_RANK_COL)
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        final = deduped.drop(FILE_RANK_COL)
+        ).drop(FILE_RANK_COL)
 
         try:
             report.rows_upserted = sink(final)
@@ -732,16 +710,18 @@ def _run_batch_ingest(
                 )
             return report
     finally:
-        try:
-            if persisted:
-                cleaned.unpersist(False)
-        except Exception:  # noqa: BLE001 — cleanup is advisory
-            pass
         cleanup_dirs(stage_dirs)
 
+    metrics = observed(spark, obs)
+    if metrics is None:
+        logger.warning("sink did not run its frame: per-file rows unknown")
+    ranks: dict[int, int] = {}
+    # merged partial histograms may keep one rank in several bins
+    for b in (metrics or {}).get("ranks") or []:
+        ranks[int(b["x"])] = ranks.get(int(b["x"]), 0) + round(b["y"])
     for rank, path in enumerate(valid):
         move_object(path, os.path.join(processed_dir, os.path.basename(path)))
-        rows = per_file_rows.get(rank, 0)
+        rows = None if metrics is None else ranks.get(rank, 0)
         if audit:
             audit.log_file_status(path, processed_dir, "loaded", rows=rows)
         report.outcomes.append(FileOutcome(path, "loaded", rows=rows))
@@ -812,7 +792,7 @@ def main(argv: list[str] | None = None) -> int:
     import functools
     import json
 
-    from mini_data_platform_spark.session import get_spark
+    from mini_data_platform_spark import metrics
     from mini_data_platform_spark.sinks.upsert import (
         sqlite_conn_factory,
         upsert_parquet,
@@ -825,6 +805,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--target", required=True, help="parquet upsert target dir")
     ap.add_argument("--audit-db", default=None, help="sqlite audit db path")
     ap.add_argument("--per-file", action="store_true")
+    ap.add_argument(
+        "--metrics-textfile", default=None,
+        help="write the batch's Prometheus metrics to this .prom file",
+    )
     args = ap.parse_args(argv)
 
     base = os.path.dirname(args.incoming.rstrip("/"))
@@ -840,9 +824,14 @@ def main(argv: list[str] | None = None) -> int:
     def sink(df: DataFrame) -> int:
         return upsert_parquet(spark, df, args.target, ["sale_id"])
 
+    hook = (
+        metrics.prometheus_hook(textfile=args.metrics_textfile)
+        if args.metrics_textfile
+        else None
+    )
     report = run_batch_ingest(
         spark, args.incoming, processed, failed,
-        sink=sink, audit=audit, per_file=args.per_file,
+        sink=sink, audit=audit, per_file=args.per_file, on_complete=hook,
     )
     print(
         json.dumps(

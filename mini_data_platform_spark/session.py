@@ -67,6 +67,23 @@ def get_spark(
     return spark
 
 
+def observed(spark: SparkSession, obs) -> dict | None:
+    """The metrics of ``obs`` once an action has run its frame, else
+    ``None``: unlike ``Observation.get`` it never blocks on a frame no
+    action ran. Spark completes an observation from its listener bus a
+    moment after the action returns, so an incomplete one first waits
+    (at most 10 s) for the bus to drain. Only actions run by the
+    observed frame's own session complete it."""
+    done = obs._jo.future().isCompleted  # noqa: SLF001
+    if not done():
+        bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+        try:
+            bus.waitUntilEmpty(10_000)
+        except Exception:  # noqa: BLE001 — a busy bus: decide on what arrived
+            pass
+    return obs.get if done() else None
+
+
 def configure_s3a(
     spark: SparkSession,
     endpoint: str,

@@ -34,7 +34,17 @@ import shutil
 import uuid
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from mini_data_platform_spark.session import observed
+
+
+def _written(spark: SparkSession, obs: Observation) -> int:
+    """The row count ``obs`` took on a write that just returned."""
+    metrics = observed(spark, obs)
+    if metrics is None:
+        raise RuntimeError("the write returned without reporting its rows")
+    return metrics["n"]
 
 
 # ------------------------------------------------------------- SQL builders
@@ -171,22 +181,27 @@ def upsert_jdbc(
     batch_size: int = 1000,
     num_partitions: int = 8,
     dialect: str = "postgres",
-) -> None:
-    """Staging-merge upsert over JDBC. Requires the JDBC driver jar on the
-    Spark classpath (tests run it against the Derby jar Spark ships for
-    its Hive metastore; production passes the postgres jar). ``dialect``
-    picks the merge statement: ``'postgres'`` (INSERT..ON CONFLICT) or
-    ``'merge'`` (ANSI MERGE INTO — Derby/Iceberg/SQL Server)."""
+) -> int:
+    """Staging-merge upsert over JDBC; returns the number of rows staged
+    (an Observation on the staging write). Requires the JDBC driver jar
+    on the Spark classpath (tests run it against the Derby jar Spark
+    ships for its Hive metastore; production passes the postgres jar).
+    ``dialect`` picks the merge statement: ``'postgres'`` (INSERT..ON
+    CONFLICT) or ``'merge'`` (ANSI MERGE INTO — Derby/Iceberg/SQL
+    Server)."""
     staging_table = staging_table or f"{table}_staging_{uuid.uuid4().hex[:8]}"
     props = dict(properties or {})
     props.setdefault("batchsize", str(batch_size))
+    obs = Observation()
     (
         df.repartition(num_partitions)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .write.mode("overwrite")
         .options(**props)
         .jdbc(url, staging_table)
     )
     spark = df.sparkSession
+    n = _written(spark, obs)
     jvm = spark._jvm  # noqa: SLF001 — driver-side merge statement
     conn = jvm.java.sql.DriverManager.getConnection(url)
     execute_merge(
@@ -195,6 +210,7 @@ def upsert_jdbc(
             table, df.columns, key_cols, staging_table, dialect=dialect
         ),
     )
+    return n
 
 
 # ---------------------------------------------------------- DB-API strategy
@@ -257,25 +273,38 @@ def upsert_parquet(
     key_cols: Sequence[str],
 ) -> int:
     """Keyed merge into a parquet directory: survivors = new ∪
-    (old anti-join new on key). Written to a fresh directory then swapped
-    so a failed write never corrupts the target. Returns upserted row
-    count. (Lakehouse MERGE INTO replaces this wholesale at scale; the
-    logical plan is identical.)"""
-    new = df.cache()
-    n_new = new.count()
-    if os.path.exists(target_dir):
-        old = spark.read.parquet(target_dir)
-        keep = old.join(new.select(*key_cols), on=list(key_cols), how="left_anti")
-        merged = keep.unionByName(new)
-    else:
-        merged = new
+    (old anti-join new on key), written to a fresh directory then
+    swapped in, so a failed write never corrupts the target. The write
+    is the only action: the returned upserted row count is observed on
+    it. ``df`` is cached only when a target exists, as the anti-join
+    keys and the union both read it (exchange reuse cannot share them:
+    the anti-join side gains an inferred ``isnotnull`` filter). A failed
+    write leaves no cache and no temp directory. (Lakehouse MERGE INTO
+    replaces this wholesale at scale; the logical plan is identical.)"""
+    exists = os.path.exists(target_dir)
+    new = df.cache() if exists else df
     tmp = f"{target_dir}.tmp-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old_dir = f"{target_dir}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(target_dir):
-        os.rename(target_dir, old_dir)
-    os.rename(tmp, target_dir)
-    if os.path.exists(old_dir):
-        shutil.rmtree(old_dir)
-    new.unpersist()
+    try:
+        obs = Observation()
+        merged = new.observe(obs, F.count(F.lit(1)).alias("n"))
+        if exists:
+            # the write must run in df's own session (foreachBatch hands
+            # a clone): an Observation completes only from its session
+            old = new.sparkSession.read.parquet(target_dir)
+            keep = old.join(
+                new.select(*key_cols), on=list(key_cols), how="left_anti"
+            )
+            merged = keep.unionByName(merged)
+        merged.write.mode("overwrite").parquet(tmp)
+        n_new = _written(spark, obs)
+        old_dir = f"{target_dir}.old-{uuid.uuid4().hex[:8]}"
+        if exists:
+            os.rename(target_dir, old_dir)
+        os.rename(tmp, target_dir)
+        if exists:
+            shutil.rmtree(old_dir)
+    finally:
+        if exists:
+            new.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)
     return n_new

@@ -32,8 +32,14 @@ The link dir must OUTLIVE every Spark action over the returned plan
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
+
+#: basenames whose URI spelling (what ``input_file_name()`` reports) is
+#: guaranteed identical to ``os.path.basename`` — the condition for
+#: joining scan rows back to their files by basename
+SAFE_BASE = re.compile(r"^[A-Za-z0-9._=-]+$")
 
 #: below this many files the explicit-path scan's per-path cost is
 #: negligible (~1.8 ms each) and staging is not attempted

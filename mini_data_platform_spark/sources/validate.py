@@ -21,7 +21,6 @@ file size — at 100 TB the validator cost is bounded by file count.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import SparkSession, functions as F
 
@@ -29,6 +28,11 @@ from mini_data_platform_spark.registry import SALES_SPEC, TableSpec
 from mini_data_platform_spark.schema import SALES_COLUMNS
 from mini_data_platform_spark.sources import readers
 from mini_data_platform_spark.sources.formats import detect_format_path
+from mini_data_platform_spark.sources.scanstage import (
+    SAFE_BASE,
+    cleanup_dirs,
+    stage_link_dir,
+)
 
 REQUIRED_COLUMNS = frozenset(SALES_COLUMNS)
 
@@ -91,37 +95,59 @@ def _local_csv_header_columns(path: str) -> list[str] | None:
     return row
 
 
+def _csv_with_header(spark: SparkSession, cols: list[str], src):
+    """``src`` read as CSV under an all-string schema built from its
+    driver-parsed header ``cols``: the frame ``readers.read_csv``
+    produces, minus the inference job. The schema is built
+    programmatically, never as DDL: header names are arbitrary user
+    bytes (backticks included)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField(c.strip().lower(), T.StringType()) for c in cols]
+    )
+    return (
+        spark.read.schema(schema)
+        .option("header", True)
+        .option("mode", "PERMISSIVE")
+        .csv(src)
+    )
+
+
+def _date_issue(ts_col: str, bad: int) -> tuple[bool, str]:
+    return (
+        False,
+        f"{ts_col} parse issue: {bad} unparseable in first {DATE_SAMPLE_ROWS}",
+    )
+
+
+def _json_object(value):
+    """A text line with array wrappers/commas stripped, so both ndjson
+    and pretty arrays probe as objects."""
+    return F.regexp_replace(F.trim(value), r"^[\[,]+|[\],]+$", "")
+
+
+def _missing_keys(obj, spec: TableSpec):
+    """The spec's required keys absent from JSON object text ``obj``
+    (``json_object_keys`` is null for anything unparseable: all absent)."""
+    keys = F.coalesce(F.json_object_keys(obj), F.array().cast("array<string>"))
+    return F.array_except(
+        F.array(*[F.lit(c) for c in sorted(spec.required)]),
+        F.transform(keys, F.lower),
+    )
+
+
 def validate_csv(
     spark: SparkSession, path: str, spec: TableSpec = SALES_SPEC
 ) -> tuple[bool, str]:
     local_cols = _local_csv_header_columns(path)
     try:
         if local_cols is not None:
-            cols = local_cols
-            missing = _missing(cols, spec)
-            if missing:
-                return False, f"Missing required columns: {missing}"
-            # explicit all-string schema from the locally-parsed header:
-            # same frame read_csv produces, minus the inference job
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField(c.strip().lower(), T.StringType())
-                    for c in cols
-                ]
-            )
-            sample = (
-                spark.read.schema(schema)
-                .option("header", True)
-                .option("mode", "PERMISSIVE")
-                .csv(path)
-                .limit(CSV_SAMPLE_ROWS)
-            )
-            cols = sample.columns
+            sample = _csv_with_header(spark, local_cols, path)
         else:
-            sample = readers.read_csv(spark, path).limit(CSV_SAMPLE_ROWS)
-            cols = sample.columns
+            sample = readers.read_csv(spark, path)
+        sample = sample.limit(CSV_SAMPLE_ROWS)
+        cols = sample.columns
     except Exception as e:  # noqa: BLE001 — any parse failure quarantines the file
         return False, f"CSV parse error: {e}"
     missing = _missing(cols, spec)
@@ -144,167 +170,111 @@ def validate_csv(
             .count()
         )
         if bad:
-            return (
-                False,
-                f"{ts_col} parse issue: {bad} unparseable in first "
-                f"{DATE_SAMPLE_ROWS}",
-            )
+            return _date_issue(ts_col, bad)
     return True, ""
 
 
-#: files at or under this size take the BATCHED date probe (one job per
-#: header group scans them whole — cheaper than one driver-built probe
-#: job per file); bigger files keep the per-file sampled probe so
-#: validation stays O(1) data per file no matter the file size.
+#: files at or under this size take the BATCHED probe (one plan scans
+#: them whole — cheaper than one driver-built probe job per file);
+#: bigger files keep the per-file sampled probe so validation stays
+#: O(1) data per file no matter the file size.
 CSV_BATCH_MAX_BYTES = 8 << 20
 
-#: basenames whose URI spelling (input_file_name) equals os.path.basename
-_SAFE_BASE = re.compile(r"^[A-Za-z0-9._=-]+$")
 
-
-def _csv_group_date_probe(
-    spark: SparkSession, cols: list[str], paths: list[str], spec: TableSpec
+def _grouped_probe(
+    spark: SparkSession,
+    csv_groups: list[tuple[tuple, list[str]]],
+    nd_paths: list[str],
+    spec: TableSpec,
 ) -> dict[str, tuple[bool, str]]:
-    """The per-file date probe for a HEADER GROUP of small CSVs in ONE
-    Spark job: scan the group as a single multi-path read (explicit
-    all-string DDL schema — no inference, no py4j StructType build),
-    rank rows per file (monotonic ids are in read order within a file),
-    and count unparseable non-null values among each file's first
-    ``DATE_SAMPLE_ROWS`` rows per timestamp column — the identical
-    verdict rule, message included, as :func:`validate_csv`'s loop."""
-    from pyspark.sql import types as T
+    """Every batched probe in ONE Spark plan. Each CSV header group
+    ``(header columns, paths)`` gets :func:`validate_csv`'s date probe:
+    unparseable non-null values among a file's first
+    ``DATE_SAMPLE_ROWS`` rows per timestamp column, the first failing
+    column supplying the message. The ndjson files get
+    :func:`validate_json`'s required-key check over their first
+    ``JSON_SAMPLE_RECORDS`` non-empty lines, the EARLIEST bad record
+    supplying the message (the deterministic form of its ``.first()``).
+
+    Every scan projects to one row shape: file basename, monotonic id
+    (read order within a file), the row's sample limit, its timestamp
+    values and its JSON object text. One union, one row_number window by
+    file, one aggregate and one collect then decide every file. Groups
+    of at least ``STAGE_MIN_FILES`` read a hardlink-staged directory
+    (sources/scanstage.py)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
     from pyspark.sql.window import Window
 
-    from mini_data_platform_spark.sources.scanstage import (
-        cleanup_dirs,
-        stage_link_dir,
-    )
-
-    lower = {c.strip().lower() for c in cols}
-    ts_cols = [t for t in spec.timestamp_columns if t in lower]
-    if not ts_cols:
-        return {p: (True, "") for p in paths}
-    base = {}
-    for p in paths:
-        base[os.path.basename(p)] = p
-    # programmatic schema, not hand-assembled DDL: header names are
-    # arbitrary user bytes (backticks included) and StructType needs no
-    # quoting — same construction validate_csv's fast path uses
-    schema = T.StructType(
-        [T.StructField(c.strip().lower(), T.StringType()) for c in cols]
-    )
-    # large groups: hardlink-stage into one dir so reader construction
-    # is one listStatus, not a ~1.8 ms/path qualification round
-    # (sources/scanstage.py); the probe collects before cleanup
-    link_dir = stage_link_dir(paths)
-    try:
-        df = (
-            spark.read.schema(schema)
-            .option("header", True)
-            .option("mode", "PERMISSIVE")
-            .csv(link_dir if link_dir is not None else paths)
-            .select(
-                F.regexp_extract(
-                    F.input_file_name(), "([^/]+)$", 1
-                ).alias("_f"),
-                F.monotonically_increasing_id().alias("_i"),
-                *[F.col(t) for t in ts_cols],
-            )
-        )
-        ranked = df.withColumn(
-            "_r", F.row_number().over(Window.partitionBy("_f").orderBy("_i"))
-        ).where(F.col("_r") <= DATE_SAMPLE_ROWS)
-        counted = ranked.groupBy("_f").agg(
-            *[
-                F.count_if(
-                    F.col(t).isNotNull() & _parseable_ts(F.col(t)).isNull()
-                ).alias(t)
-                for t in ts_cols
-            ]
-        )
-        rows = counted.collect()
-    finally:
-        if link_dir is not None:
-            cleanup_dirs([link_dir])
+    ts_all = list(spec.timestamp_columns)
+    paths = [p for _, g in csv_groups for p in g] + nd_paths
+    base = {os.path.basename(p): p for p in paths}
     out: dict[str, tuple[bool, str]] = {p: (True, "") for p in paths}
+    link_dirs: list[str] = []
+    frames = []
+
+    def scan(group: list[str]):
+        d = stage_link_dir(group)
+        if d is None:
+            return group
+        link_dirs.append(d)
+        return d
+
+    def shape(df, limit: int, ts, obj):
+        return df.select(
+            F.regexp_extract(F.input_file_name(), "([^/]+)$", 1).alias("_f"),
+            F.monotonically_increasing_id().alias("_i"),
+            F.lit(limit).alias("_lim"),
+            ts.cast("array<string>").alias("_ts"),
+            obj.cast("string").alias("_obj"),
+        )
+
+    try:
+        for cols, group in csv_groups:
+            lower = {c.strip().lower() for c in cols}
+            if lower.intersection(ts_all):  # else every file passes
+                ts = [F.col(t) if t in lower else F.lit(None) for t in ts_all]
+                df = _csv_with_header(spark, list(cols), scan(group))
+                frames.append(
+                    shape(df, DATE_SAMPLE_ROWS, F.array(*ts), F.lit(None))
+                )
+        if nd_paths:
+            lines = spark.read.text(scan(nd_paths))
+            lines = lines.where(F.trim("value") != "")
+            obj = _json_object("value")
+            frames.append(shape(lines, JSON_SAMPLE_RECORDS, F.lit(None), obj))
+        if not frames:
+            return out
+        ranked = reduce(DataFrame.union, frames).withColumn(
+            "_r", F.row_number().over(Window.partitionBy("_f").orderBy("_i"))
+        ).where(F.col("_r") <= F.col("_lim"))
+        missing = _missing_keys("_obj", spec)
+        bad_obj = (F.col("_obj") != "") & (F.size(missing) > 0)
+        bad_ts = [
+            F.count_if(x.isNotNull() & _parseable_ts(x).isNull())
+            for x in (F.col("_ts")[i] for i in range(len(ts_all)))
+        ]
+        rows = (
+            ranked.groupBy("_f")
+            .agg(
+                F.array(*bad_ts).alias("_ts"),
+                F.min(F.when(bad_obj, F.struct("_i", missing))).alias("_bad"),
+            )
+            .collect()
+        )
+    finally:
+        cleanup_dirs(link_dirs)
     for row in rows:
         path = base.get(row["_f"])
         if path is None:
             continue  # defensive: unexpected provenance name
-        for t in ts_cols:  # first failing column wins, like the loop
-            bad = int(row[t])
-            if bad:
-                out[path] = (
-                    False,
-                    f"{t} parse issue: {bad} unparseable in first "
-                    f"{DATE_SAMPLE_ROWS}",
-                )
-                break
-    return out
-
-
-def _ndjson_group_probe(
-    spark: SparkSession, paths: list[str], spec: TableSpec
-) -> dict[str, tuple[bool, str]]:
-    """:func:`validate_json`'s required-key check for a GROUP of small
-    ndjson files in ONE Spark job: the same probe pipeline (first
-    ``JSON_SAMPLE_RECORDS`` non-empty lines, wrapper strip,
-    ``json_object_keys`` vs the spec's required set), applied per file
-    via a row_number window over monotonic ids, with each file's
-    EARLIEST bad record (min ``_i``) supplying the message — the
-    deterministic form of the per-file path's ``.first()``."""
-    from pyspark.sql.window import Window
-
-    from mini_data_platform_spark.sources.scanstage import (
-        cleanup_dirs,
-        stage_link_dir,
-    )
-
-    base = {os.path.basename(p): p for p in paths}
-    link_dir = stage_link_dir(paths)  # see _csv_group_date_probe
-    lines = (
-        spark.read.text(link_dir if link_dir is not None else paths)
-        .select(
-            F.regexp_extract(F.input_file_name(), "([^/]+)$", 1).alias("_f"),
-            F.monotonically_increasing_id().alias("_i"),
-            "value",
-        )
-        .where(F.trim("value") != "")
-    )
-    ranked = lines.withColumn(
-        "_r", F.row_number().over(Window.partitionBy("_f").orderBy("_i"))
-    ).where(F.col("_r") <= JSON_SAMPLE_RECORDS)
-    obj = F.regexp_replace(F.trim("value"), r"^[\[,]+|[\],]+$", "")
-    keyed = ranked.select("_f", "_i", obj.alias("obj")).where(
-        F.col("obj") != ""
-    )
-    required = F.array(*[F.lit(c) for c in sorted(spec.required)])
-    bad = keyed.select(
-        "_f",
-        "_i",
-        F.array_except(
-            required,
-            F.transform(
-                F.coalesce(
-                    F.json_object_keys("obj"), F.array().cast("array<string>")
-                ),
-                F.lower,
-            ),
-        ).alias("missing"),
-    ).where(F.size("missing") > 0)
-    firsts = bad.groupBy("_f").agg(
-        F.min_by("missing", F.col("_i")).alias("missing")
-    )
-    try:
-        rows = firsts.collect()
-    finally:
-        if link_dir is not None:
-            cleanup_dirs([link_dir])
-    out = {p: (True, "") for p in paths}
-    for row in rows:
-        p = base.get(row["_f"])
-        if p is not None:
-            out[p] = (False, f"Missing columns: {sorted(row['missing'])}")
+        # the first failing timestamp column wins, like validate_csv
+        issues = [(t, n) for t, n in zip(ts_all, row["_ts"]) if n]
+        if issues:
+            out[path] = _date_issue(*issues[0])
+        elif row["_bad"] is not None:
+            out[path] = (False, f"Missing columns: {sorted(row['_bad'][1])}")
     return out
 
 
@@ -319,10 +289,10 @@ def validate_files(
     at 10k files the per-file validator loop is pure driver job count,
     measured ~24 ms/file even 16-wide because the py4j plan builds
     serialize on the GIL). Small local files (≤ CSV_BATCH_MAX_BYTES)
-    batch their Spark work per group: CSVs whose header parses
-    driver-side get their column check WITHOUT Spark and share ONE
-    date-probe job per header group; ndjson files share ONE
-    required-key job. Everything else — large files, remote paths,
+    batch their Spark work: CSVs whose header parses driver-side get
+    their column check WITHOUT Spark, and their date probes and the
+    ndjson files' required-key checks share ONE plan
+    (:func:`_grouped_probe`). Everything else — large files, remote paths,
     array JSON, parquet, ORC, duplicate or non-URI-safe basenames —
     takes the unchanged per-file :func:`validate_file` through the
     thread pool. Verdicts are byte-identical to the per-file path
@@ -334,7 +304,7 @@ def validate_files(
         sniff_json_layout_path,
     )
 
-    batched: dict[str, list[str]] = {}  # csv header sig -> paths
+    batched: dict[tuple, list[str]] = {}  # csv header -> paths
     nd_group: list[str] = []
     verdicts: dict[str, tuple[bool, str]] = {}
     fallback: list[str] = []
@@ -349,7 +319,7 @@ def validate_files(
         # input_file_name() reports the URI spelling — only join
         # verdicts back on basenames where the two are identical
         joinable = base_name not in seen_bases and bool(
-            _SAFE_BASE.match(base_name)
+            SAFE_BASE.match(base_name)
         )
         if fmt == "csv" and small and joinable:
             cols = _local_csv_header_columns(p)
@@ -361,7 +331,7 @@ def validate_files(
                         False, f"Missing required columns: {missing}",
                     )
                 else:
-                    batched.setdefault("\x00".join(cols), []).append(p)
+                    batched.setdefault(tuple(cols), []).append(p)
                 continue
         elif (
             fmt == "json"
@@ -373,20 +343,15 @@ def validate_files(
             nd_group.append(p)
             continue
         fallback.append(p)
-    for sig, group in batched.items():
+    csv_groups = list(batched.items())
+    if csv_groups or nd_group:
         try:
-            verdicts.update(
-                _csv_group_date_probe(spark, sig.split("\x00"), group, spec)
-            )
-        except Exception:  # noqa: BLE001 — group read failed: per-file
+            verdicts.update(_grouped_probe(spark, csv_groups, nd_group, spec))
+        except Exception:  # noqa: BLE001 — probe read failed: per-file
             # (file deleted between listing and probe, unrepresentable
             # header, ...): the per-file path converts the failure into
-            # a single-file verdict instead of aborting the whole batch
-            fallback.extend(group)
-    if nd_group:
-        try:
-            verdicts.update(_ndjson_group_probe(spark, nd_group, spec))
-        except Exception:  # noqa: BLE001 — group read failed: per-file
+            # single-file verdicts instead of aborting the whole batch
+            fallback.extend(p for _, g in csv_groups for p in g)
             fallback.extend(nd_group)
     if fallback:
         with ThreadPoolExecutor(
@@ -410,23 +375,13 @@ def validate_json(
             .where(F.trim("value") != "")
             .limit(JSON_SAMPLE_RECORDS)
         )
-        # strip array wrappers/commas so both ndjson and pretty arrays probe
-        # as objects; json_object_keys -> null for anything unparseable
-        obj = F.regexp_replace(F.trim("value"), r"^[\[,]+|[\],]+$", "")
-        keyed = lines.select(obj.alias("obj")).where(F.col("obj") != "")
-        rec = keyed.select(
-            F.transform(
-                F.coalesce(
-                    F.json_object_keys("obj"), F.array().cast("array<string>")
-                ),
-                F.lower,
-            ).alias("keys")
+        keyed = lines.select(_json_object("value").alias("obj"))
+        first_bad = (
+            keyed.where(F.col("obj") != "")
+            .select(_missing_keys("obj", spec).alias("missing"))
+            .where(F.size("missing") > 0)
+            .first()
         )
-        required = F.array(*[F.lit(c) for c in sorted(spec.required)])
-        bad = rec.where(F.size(F.array_except(required, F.col("keys"))) > 0)
-        first_bad = bad.select(
-            F.array_except(required, F.col("keys")).alias("missing")
-        ).first()
     except Exception as e:  # noqa: BLE001
         return False, f"JSON parse error: {e}"
     if first_bad is not None:

@@ -6,6 +6,7 @@ import functools
 import json
 import os
 import shutil
+import sqlite3
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -91,24 +92,43 @@ GOOD_NDJSON = "\n".join(
 BAD_CSV = "sale_id,amount\nx,1\n"
 
 
+def _land_mixed(lake):
+    _put(lake, "a_dirty.csv", DIRTY_CSV)
+    _put(lake, "b_good.json", GOOD_NDJSON)
+    _put(lake, "c_bad.csv", BAD_CSV)
+    pq.write_table(
+        pa.table(
+            {
+                "sale_id": ["p1"],
+                "sale_date": ["2024-06-01 00:00:00"],
+                "customer_id": ["CP"],
+                "product_id": ["PP"],
+                "quantity": [7],
+                "amount": [70.0],
+            }
+        ),
+        os.path.join(lake["incoming"], "d_good.parquet"),
+    )
+
+
+def _file_rows(report, lake):
+    """basename -> rows, from the report and from the audit log."""
+    got = {os.path.basename(o.path): o.rows for o in report.loaded}
+    with sqlite3.connect(lake["audit_db"]) as conn:
+        logged = {
+            os.path.basename(k): n
+            for k, n, st in conn.execute(
+                "SELECT file_key, rows_processed, status "
+                "FROM file_ingestion_log"
+            )
+            if st == "loaded"
+        }
+    return got, logged
+
+
 class TestBatchIngest:
     def test_mixed_batch(self, spark, lake):
-        _put(lake, "a_dirty.csv", DIRTY_CSV)
-        _put(lake, "b_good.json", GOOD_NDJSON)
-        _put(lake, "c_bad.csv", BAD_CSV)
-        pq.write_table(
-            pa.table(
-                {
-                    "sale_id": ["p1"],
-                    "sale_date": ["2024-06-01 00:00:00"],
-                    "customer_id": ["CP"],
-                    "product_id": ["PP"],
-                    "quantity": [7],
-                    "amount": [70.0],
-                }
-            ),
-            os.path.join(lake["incoming"], "d_good.parquet"),
-        )
+        _land_mixed(lake)
 
         report, audit = _run(spark, lake)
 
@@ -433,6 +453,81 @@ class TestBatchIngest:
         )
         assert [o.status for o in report.outcomes] == ["loading_failed"]
         assert os.listdir(os.path.join(lake["failed"], "loading_failed")) == ["f.csv"]
+
+
+class TestPerFileRows:
+    """Per-file ``rows`` of a real batch: the cleaned rows of each file,
+    before the cross-row dedup, in the report and in the audit log."""
+
+    def test_mixed_batch_counts(self, spark, lake):
+        _land_mixed(lake)
+        report, _ = _run(spark, lake)
+        # a_dirty: s1, the fillers, s2, s3 and s1's in-file duplicate;
+        # its null-key row is dropped
+        want = {
+            "a_dirty.csv": 1 + len(FILLER_KEYS) + 3,
+            "b_good.json": 2,
+            "d_good.parquet": 1,
+        }
+        assert _file_rows(report, lake) == (want, want)
+
+    def test_many_files_counts(self, spark, lake):
+        from mini_data_platform_spark.sources.scanstage import (
+            STAGE_MIN_FILES,
+        )
+
+        hdr = "sale_id,sale_date,customer_id,product_id,quantity,amount\n"
+        want = {}
+        for i in range(STAGE_MIN_FILES + 2):
+            n = i % 3 + 1  # plus the key 'k' every file shares
+            _put(lake, f"{i:04d}.csv", hdr + "".join(
+                f"{key},2024-01-01 00:00:00,C,P,1,1.0\n"
+                for key in ["k"] + [f"u{i}_{j}" for j in range(n)]
+            ))
+            want[f"{i:04d}.csv"] = n + 1
+        report, _ = _run(spark, lake)
+        assert _file_rows(report, lake) == (want, want)
+
+    def test_sink_that_never_runs_its_frame(self, spark, lake, monkeypatch):
+        import time
+
+        import mini_data_platform_spark.runner as runner_mod
+
+        waits = []
+        real = runner_mod.observed
+
+        def timed(spark_, obs):
+            t0 = time.monotonic()
+            try:
+                return real(spark_, obs)
+            finally:
+                waits.append(time.monotonic() - t0)
+
+        monkeypatch.setattr(runner_mod, "observed", timed)
+        _put(lake, "a_dirty.csv", DIRTY_CSV)
+        audit = AuditLog(functools.partial(sqlite_conn_factory, lake["audit_db"]))
+        report = run_batch_ingest(
+            spark, lake["incoming"], lake["processed"], lake["failed"],
+            sink=lambda df: 0, audit=audit,
+        )
+        assert [o.status for o in report.outcomes] == ["loaded"]
+        assert _file_rows(report, lake) == ({"a_dirty.csv": None},) * 2
+        assert len(waits) == 1 and waits[0] < 5
+
+
+class TestRunnerCli:
+    def test_metrics_textfile(self, spark, lake, tmp_path):
+        from mini_data_platform_spark.runner import main
+
+        _put(lake, "good.ndjson", GOOD_NDJSON)
+        prom = str(tmp_path / "ingest.prom")
+        assert main([
+            "--incoming", lake["incoming"], "--target", lake["target"],
+            "--metrics-textfile", prom,
+        ]) == 0
+        with open(prom) as f:
+            text = f.read()
+        assert 'mdp_ingest_rows_upserted_total{table="sales"} 2\n' in text
 
 
 class TestNotificationHook:

@@ -127,6 +127,28 @@ class TestUpsertParquet:
         upsert_parquet(spark, df2, target, ["sale_id"])
         assert spark.read.parquet(target).count() == 3
 
+    def test_failed_write_leaks_no_cache_or_temp_dir(self, spark, tmp_path):
+        import glob
+
+        import pytest
+        from pyspark.sql import functions as F
+
+        target = str(tmp_path / "sales_pq")
+        row = ("a", "2024-01-01", "C1", "P1", 1, 10.0)
+        upsert_parquet(spark, _rows(spark, [row]), target, ["sale_id"])
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        boom = F.raise_error(F.lit("boom"))
+        bad = _rows(spark, [row]).withColumn(
+            "amount",
+            F.when(F.col("sale_id") == "a", boom).otherwise(F.col("amount")),
+        )
+        with pytest.raises(Exception, match="boom"):
+            upsert_parquet(spark, bad, target, ["sale_id"])
+        assert not bad.is_cached
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+        assert glob.glob(f"{target}.tmp-*") == []
+        assert spark.read.parquet(target).count() == 1  # target untouched
+
 
 class TestAuditLog:
     def test_status_transitions(self, tmp_path):
@@ -338,7 +360,7 @@ class TestUpsertJdbcDerby:
             [("s2", 5, 99.0), ("s3", 3, 30.0)],
             "SALE_ID string, QUANTITY int, AMOUNT double",
         )
-        upsert_jdbc(
+        n = upsert_jdbc(
             df,
             url,
             "sales",
@@ -352,6 +374,7 @@ class TestUpsertJdbcDerby:
             dialect="merge",  # Derby speaks ANSI MERGE, not ON CONFLICT
             num_partitions=2,
         )
+        assert n == 2  # the staged rows: one insert, one conflict-update
 
         back = (
             spark.read.format("jdbc")

@@ -361,10 +361,9 @@ class TestValidateFilesBatched:
     def test_csv_group_probe_failure_falls_back_per_file(
         self, spark, tmpdir_str, monkeypatch
     ):
-        """A Spark failure on one header group (file deleted between
+        """A Spark failure in the grouped probe (file deleted between
         listing and probe, ...) must degrade to per-file verdicts, not
-        abort the whole ingest batch — same contract the ndjson group
-        already has."""
+        abort the whole ingest batch."""
         from mini_data_platform_spark.sources import validate as v
 
         p1 = _write(tmpdir_str, "x1.csv", GOOD_CSV)
@@ -376,7 +375,7 @@ class TestValidateFilesBatched:
         def boom(*a, **k):
             raise RuntimeError("file vanished")
 
-        monkeypatch.setattr(v, "_csv_group_date_probe", boom)
+        monkeypatch.setattr(v, "_grouped_probe", boom)
         got = v.validate_files(spark, [p1, p2])
         assert got[0] == (True, "")
         assert not got[1][0] and "sale_date parse issue" in got[1][1]
