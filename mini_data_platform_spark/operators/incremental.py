@@ -95,9 +95,8 @@ increments and ``index_delete``) accepts a ``batch_id``; an id already
 in the commit log is NOT re-applied — increments return the original
 batch's materialized ``pairs/batch=N`` and deletes no-op — which is the
 ivm/mergetable exactly-once contract, and what lets a foreachBatch
-stream (streaming/dedup_index.py) drive the index under Spark's
-at-least-once micro-batch replays. Callers that never pass ids keep
-the original semantics.
+stream drive the index under Spark's at-least-once micro-batch
+replays. Callers that never pass ids keep the original semantics.
 
 Restartability + MULTI-WRITER OCC (round-7 item 2; round-8 item 5):
 each increment (a) writes its verified pairs and its bucket/doc
@@ -572,64 +571,30 @@ def _read_live(
 
 
 def _live_tombstones(
-    spark: SparkSession,
-    index_dir: str,
-    meta: dict,
-    with_offsets: bool = False,
+    spark: SparkSession, index_dir: str, meta: dict
 ) -> DataFrame | None:
-    """The tombstone table read as an EVENT LOG: ``del-N`` segments are
-    takedowns (optionally stamped with the wire offset that ordered
-    them), ``rev-N`` segments are revivals (``index_revive`` — a re-add
-    that won log-compaction order). Per id, the LATEST event (by commit
-    batch number, parsed from the segment name) decides: last event del
-    ⇒ tombstoned, last event rev ⇒ live again. Returns the live
-    tombstoned-id frame (plus each id's deciding offset when
-    ``with_offsets``), or ``None`` when the table has no segments.
-
-    Fast path: an index that has never revived (no ``rev-*`` segments —
-    every batch-takedown-only index) reads all del segments as ONE
-    multi-dir scan + distinct, exactly the pre-revive plan; the
-    event-sequenced per-segment union runs only when revivals exist or
-    offsets are requested (both delete-set-sized by design)."""
+    """The live tombstoned-id frame: every ``del-N`` segment read as ONE
+    multi-dir scan + distinct, or ``None`` when the table has no
+    segments. A ``rev-N`` (revival) segment is refused: this engine no
+    longer writes revivals, and reading one as a takedown would hide a
+    doc its writer made live again."""
     segs = meta["segments"].get(_TOMBSTONES, [])
     if not segs:
         return None
-    has_rev = any(s.startswith("rev-") for s in segs)
-    if not has_rev and not with_offsets:
-        return (
-            spark.read.parquet(
-                *[os.path.join(index_dir, _TOMBSTONES, s) for s in segs]
-            )
-            .select("id")
-            .distinct()
+    revived = [s for s in segs if s.startswith("rev-")]
+    if revived:
+        raise RuntimeError(
+            f"index at {index_dir} holds revival tombstone segments "
+            f"{revived}, which this version cannot read; rebuild the "
+            "index (or compact it with the version that wrote them)"
         )
-    frames = []
-    for seg in segs:
-        df = spark.read.parquet(os.path.join(index_dir, _TOMBSTONES, seg))
-        off = (
-            F.col("offset").cast("string")
-            if "offset" in df.columns
-            else F.lit(None).cast("string")  # legacy id-only segment
+    return (
+        spark.read.parquet(
+            *[os.path.join(index_dir, _TOMBSTONES, s) for s in segs]
         )
-        frames.append(
-            df.select(
-                "id",
-                off.alias("offset"),
-                F.lit(_seg_no(seg)).alias("_seq"),
-                F.lit(seg.startswith("rev-")).alias("_rev"),
-            )
-        )
-    events = frames[0]
-    for f in frames[1:]:
-        events = events.unionByName(f)
-    last = events.groupBy("id").agg(
-        # _seq is unique per commit, so the struct max IS the latest
-        # event; _rev/offset ride along and are never tie-breakers
-        F.max(F.struct("_seq", "_rev", "offset")).alias("_last")
-    ).where(~F.col("_last._rev"))
-    if with_offsets:
-        return last.select("id", F.col("_last.offset").alias("offset"))
-    return last.select("id")
+        .select("id")
+        .distinct()
+    )
 
 
 def _build_live(
@@ -695,7 +660,7 @@ def _apply_record(meta: dict, rec: dict) -> dict:
     record semantics live (used by the winner to produce its checkpoint
     and by recovery to roll a crashed winner's ticket forward)."""
     m = json.loads(json.dumps(meta))  # deep copy
-    if rec["type"] in ("increment", "delete", "revive"):
+    if rec["type"] in ("increment", "delete"):
         if rec["seq"] != m["n_batches"]:  # ticket order guarantees this
             raise RuntimeError(
                 f"commit record seq {rec['seq']} != n_batches "
@@ -709,12 +674,9 @@ def _apply_record(meta: dict, rec: dict) -> dict:
                 m.setdefault("pairs_segs", {})[str(rec["seq"])] = rec[
                     "pairs_seg"
                 ]
-        elif rec["type"] == "delete":
+        else:
             m["segments"].setdefault(_TOMBSTONES, []).append(rec["segment"])
             m["n_deleted"] = m.get("n_deleted", 0) + rec["n_del"]
-        else:  # revive: append the rev event; running count re-based
-            m["segments"].setdefault(_TOMBSTONES, []).append(rec["segment"])
-            m["n_deleted"] = rec["n_del_after"]
         m["n_batches"] += 1
         _record_batch_id(m, rec.get("batch_id"), rec["seq"])
     elif rec["type"] == "compact":
@@ -791,7 +753,6 @@ def index_delete(
     del_docs: DataFrame,
     index_dir: str,
     batch_id: str | None = None,
-    offset_col: str | None = None,
 ) -> dict:
     """Retract a set of doc ids from ANY index kind (near-dup, exact,
     embedding) — the takedown/GDPR path: committing one TOMBSTONE
@@ -812,14 +773,7 @@ def index_delete(
     Two terminal semantics, by design: a deleted id stays deleted (the
     tombstone hides ALL segments' rows for it, including a later re-add
     — re-ingest under a fresh id), and already-materialized ``pairs/``
-    outputs are immutable history. The one sanctioned exception is
-    ``index_revive``: a WIRE-ordered re-add that provably post-dates
-    its tombstone (``offset_col`` — the ``_src_file`` wire-order string
-    stored alongside each id) may reverse it under the wire path's
-    ``on_retombstoned='readd-wins'`` mode; offset-less tombstones (this
-    function's default — every batch/GDPR takedown) carry no wire
-    position, so no re-add can ever post-date them and they stay
-    terminal under every mode."""
+    outputs are immutable history."""
     import uuid
 
     ids = None
@@ -831,24 +785,11 @@ def index_delete(
             if ids is None:  # snapshot-independent: compute once
                 id_col = meta["id_col"]
                 src = id_col if id_col in del_docs.columns else "id"
-                if offset_col is not None and offset_col in del_docs.columns:
-                    ids = (
-                        del_docs.select(
-                            F.col(src).alias("id"),
-                            F.col(offset_col)
-                            .cast("string")
-                            .alias("offset"),
-                        )
-                        .groupBy("id")
-                        .agg(F.max("offset").alias("offset"))
-                        .persist()
-                    )
-                else:
-                    ids = (
-                        del_docs.select(F.col(src).alias("id"))
-                        .distinct()
-                        .persist()
-                    )
+                ids = (
+                    del_docs.select(F.col(src).alias("id"))
+                    .distinct()
+                    .persist()
+                )
                 n_del = ids.count()
             seg = f"del-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
             _write_segment(ids, index_dir, _TOMBSTONES, seg)
@@ -872,113 +813,6 @@ def index_delete(
     finally:
         if ids is not None:
             ids.unpersist(False)
-
-
-def index_revive(
-    revive_docs: DataFrame, index_dir: str, batch_id: str | None = None
-) -> dict:
-    """Reverse takedowns for ids whose re-add WON wire log-compaction
-    order — the cross-epoch half of the wire path's
-    ``on_retombstoned='readd-wins'`` mode (streaming/dedup_index).
-    Appends one ``rev-N`` event segment (O(revive set)); the tombstone
-    table is an event log and per id the LATEST del/rev event decides
-    (``_live_tombstones``), so a revived id's rows become visible to
-    every lookup/increment/pairs read again, a LATER ``index_delete``
-    re-tombstones it, and ``_meta_as_of`` time travel replays the
-    del→rev history faithfully. Reviving a never-tombstoned id is a
-    harmless no-op row. Same OCC commit + ``batch_id`` replay
-    protection as every other committing operation.
-
-    This function records the OUTCOME of an ordering decision; it does
-    not check offsets itself — the wire admission guard is the one
-    place with both sides' wire positions, and batch callers have no
-    standing to reverse a GDPR takedown (their tombstones are
-    offset-less and terminal, see ``index_delete``)."""
-    import uuid
-
-    ids = None
-    try:
-        for _ in range(_OCC_MAX_RETRIES):
-            meta = _recover_meta(index_dir)
-            if _replayed_batch(meta, batch_id) is not None:
-                return meta
-            if ids is None:  # snapshot-independent: compute once
-                id_col = meta["id_col"]
-                src = id_col if id_col in revive_docs.columns else "id"
-                ids = (
-                    revive_docs.select(F.col(src).alias("id"))
-                    .distinct()
-                    .persist()
-                )
-                if ids.limit(1).count() == 0:
-                    return meta  # empty revive: nothing to commit
-            # snapshot-DEPENDENT: the running live-delete count after
-            # this revive (the broadcast hint guarded_broadcast sizes by)
-            spark = revive_docs.sparkSession
-            live = _live_tombstones(spark, index_dir, meta)
-            n_after = (
-                0
-                if live is None
-                else live.join(ids, "id", "left_anti").count()
-            )
-            seg = f"rev-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
-            _write_segment(ids, index_dir, _TOMBSTONES, seg)
-            committed = _commit_or_none(
-                index_dir,
-                meta,
-                {
-                    "type": "revive",
-                    "seq": meta["n_batches"],
-                    "segment": seg,
-                    "n_del_after": n_after,
-                    "batch_id": batch_id,
-                },
-            )
-            if committed is not None:
-                return committed
-        raise RuntimeError(
-            f"index_revive: lost {_OCC_MAX_RETRIES} commit races in a "
-            f"row at {index_dir} — pathological contention"
-        )
-    finally:
-        if ids is not None:
-            ids.unpersist(False)
-
-
-def index_tombstoned_ids(
-    spark: SparkSession,
-    index_dir: str,
-    batch_id: str | None = None,
-    with_offsets: bool = False,
-) -> DataFrame | None:
-    """The index's LIVE tombstoned-id set, for wire-admission guarding
-    (streaming/dedup_index re-add guard, round-13 verdict item 4):
-    returns a broadcast-hinted single-column ``id`` frame, or ``None``
-    when the guard has nothing to check — no index yet, no live
-    tombstones (the common never-deleted fast path), or ``batch_id``
-    already committed (an exactly-once REPLAY: the fold is a batch-id
-    no-op, so re-judging its records would deadlock a crashed-epoch
-    recovery against its own earlier delete half).
-
-    ``with_offsets`` adds each id's deciding wire-order ``offset``
-    column (null for offset-less batch takedowns) — what the
-    ``readd-wins`` guard compares live records' ``_src_file`` against.
-
-    Scope matches ``index_delete``'s terminal window: ``compact_index``
-    physically purges tombstoned rows and clears the set, after which a
-    re-add is a genuinely fresh doc — the same retention contract as a
-    compacted Kafka topic dropping tombstones after delete.retention."""
-    if not os.path.exists(os.path.join(index_dir, _META)):
-        return None
-    meta = _recover_meta(index_dir)
-    if _replayed_batch(meta, batch_id) is not None:
-        return None
-    tombs = _live_tombstones(
-        spark, index_dir, meta, with_offsets=with_offsets
-    )
-    if tombs is None:
-        return None
-    return guarded_broadcast(tombs, meta.get("n_deleted", 0))
 
 
 def neardup_index_build(

@@ -65,8 +65,7 @@ maintained view (tested, and declared as ``kpi_revenue_by_day_ivm``).
 Scale: every aggregate here is partial-agg friendly (map-side combine
 collapses each input partition to |keys| rows before the shuffle); the
 merge-on-read union shuffles only segment rows — view-sized, not
-fact-sized. For very large views, bucket the segment writes on the keys
-to make the merge co-located (sinks/bucketed.py composes).
+fact-sized.
 """
 
 from __future__ import annotations

@@ -49,11 +49,9 @@ caveats remain: delta appends never invalidate in-flight readers, but
 maintenance window or lean on object-store delayed deletion.
 
 Scale: writes are O(batch) always. Reads shuffle live segment rows once
-(partial-agg combined); keep the log short with ``compact_table`` and,
-for very large tables, write segments bucketed on the keys
-(sinks/bucketed.py) so the resolve aggregate is co-located. This is the
-standard lakehouse trade — Hudi MOR read amplification bounded by
-compaction cadence.
+(partial-agg combined); keep the log short with ``compact_table``.
+This is the standard lakehouse trade — Hudi MOR read amplification
+bounded by compaction cadence.
 """
 
 from __future__ import annotations

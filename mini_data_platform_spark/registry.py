@@ -17,7 +17,8 @@ through module constants. This module lifts the table OUT of the code:
 - :class:`SchemaRegistry` — name → spec, with the reference's sales
   table pre-registered (the compatibility default every existing
   surface keeps).
-- :func:`clean_table` — the generic P1→P8 pipeline over any spec.
+- :func:`clean_columns` — the P4→P8 cleaning bundle every ingest path
+  shares; :func:`clean_table` — the generic P1→P8 pipeline over any spec.
   ``clean_table(df, SALES_SPEC)`` is bit-identical to
   ``operators.clean.clean_sales(df)`` (pinned in
   tests/test_registry.py), so the sales path has one semantics with
@@ -200,15 +201,34 @@ def coerce_types(df: DataFrame, spec: TableSpec) -> DataFrame:
     return out
 
 
+def clean_columns(
+    df: DataFrame, spec: TableSpec, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """The spec's cleaning bundle over its columns of ``df``: string
+    hygiene (P4), type coercion (P5-P7), null-key filters (P8); returns
+    the spec's columns in canonical order plus the ``keep`` bookkeeping
+    columns. Every ingest path (``clean_table``, the batch runner, the
+    streaming micro-batch) cleans through this one function, so they
+    cannot drift."""
+    from mini_data_platform_spark.operators.clean import (
+        clean_strings,
+        drop_null_keys,
+    )
+
+    out = clean_strings(df, columns=list(spec.columns))
+    out = coerce_types(out, spec)
+    for k in spec.keys:
+        out = drop_null_keys(out, k)
+    return out.select(*spec.columns, *keep)
+
+
 def clean_table(df: DataFrame, spec: TableSpec) -> DataFrame:
     """The generic P1→P8 pipeline for any spec — the exact stage order
     of ``clean_sales`` (normalize names → string-stage conform → string
-    hygiene → type coercion → key filters → typed conform), which for
+    hygiene → type coercion → key filters → canonical order), which for
     ``SALES_SPEC`` is pinned bit-identical to it."""
     from mini_data_platform_spark.operators.clean import (
-        clean_strings,
         conform,
-        drop_null_keys,
         normalize_column_names,
     )
 
@@ -217,8 +237,4 @@ def clean_table(df: DataFrame, spec: TableSpec) -> DataFrame:
         out.select(*[F.col(c).cast("string").alias(c) for c in out.columns]),
         spec.raw_schema(),
     )
-    out = clean_strings(out)
-    out = coerce_types(out, spec)
-    for k in spec.keys:
-        out = drop_null_keys(out, k)
-    return conform(out, spec.schema)
+    return clean_columns(out, spec)

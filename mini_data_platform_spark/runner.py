@@ -56,6 +56,7 @@ from mini_data_platform_spark.operators.dedup import (
 from mini_data_platform_spark.registry import (
     SALES_SPEC,
     TableSpec,
+    clean_columns,
     clean_table,
 )
 from mini_data_platform_spark.sinks.audit import AuditLog
@@ -669,11 +670,9 @@ def _run_batch_ingest(
                     staged = staged.unionByName(
                         _prepare_one(spark, path, rank, spec)
                     )
-            # clean_table conforms to exactly the spec's canonical
-            # columns; the batch job must keep the bookkeeping tags, so
-            # the same P4-P8 stages are applied with the tags carried
-            # through.
-            cleaned = _clean_keep_tags(staged, spec)
+            cleaned = clean_columns(
+                staged, spec, keep=(FILE_RANK_COL, INGEST_ORDER_COL)
+            )
         except Exception as e:  # noqa: BLE001 — read/plan failure: quarantine all
             for path in valid:
                 report.outcomes.append(
@@ -726,25 +725,6 @@ def _run_batch_ingest(
             audit.log_file_status(path, processed_dir, "loaded", rows=rows)
         report.outcomes.append(FileOutcome(path, "loaded", rows=rows))
     return report
-
-
-def _clean_keep_tags(staged: DataFrame, spec: TableSpec) -> DataFrame:
-    """The spec's cleaning bundle over the data columns while preserving
-    the _file_rank/_ingest_order bookkeeping columns (positionally joined
-    via a row tag would shuffle; instead the cleaning expressions are
-    applied in-place — they are all narrow per-column transforms)."""
-    from mini_data_platform_spark.operators.clean import (
-        clean_strings,
-        drop_null_keys,
-    )
-    from mini_data_platform_spark.registry import coerce_types
-
-    tags = [FILE_RANK_COL, INGEST_ORDER_COL]
-    out = clean_strings(staged, columns=list(spec.columns))
-    out = coerce_types(out, spec)
-    for k in spec.keys:
-        out = drop_null_keys(out, k)
-    return out.select(*spec.columns, *tags)
 
 
 def _ingest_one(

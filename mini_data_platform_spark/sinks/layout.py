@@ -1,7 +1,6 @@
 """Partitioned data layout — directory-level partition pruning.
 
-The third leg of the 100 TB layout strategy alongside bucketing
-(sinks/bucketed.py — shuffle-free keyed joins) and compaction
+One leg of the 100 TB layout strategy, alongside compaction
 (sinks/compact.py — small-file control): partition the storage directory
 tree by a LOW-cardinality column (almost always the event/order date) so
 time-ranged queries never open irrelevant files at all. Catalyst turns a

@@ -28,46 +28,22 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from mini_data_platform_spark.operators.clean import (
-    clean_strings,
-    drop_null_keys,
-)
 from mini_data_platform_spark.operators.dedup import dedup_keep_latest
-from mini_data_platform_spark.registry import SALES_SPEC, TableSpec, coerce_types
+from mini_data_platform_spark.registry import SALES_SPEC, TableSpec, clean_columns
 from mini_data_platform_spark.sinks.audit import AuditLog
 
 SRC_FILE_COL = "_src_file"
 
 
-def _clean_micro_batch(batch: DataFrame, spec: TableSpec) -> DataFrame:
-    """The spec's clean bundle with per-source precedence, preserving
-    the source tag for audit row counts. Mirrors runner._clean_keep_tags
-    (same expressions, so batch and streaming ingest of a table cannot
-    drift). A batch that already carries ``_src_file`` (an external
-    source frame — e.g. streaming/kafka.py's ``kafka_records``, whose
-    provenance strings sort by partition/offset) keeps its tag;
-    file-source batches are stamped with the file name here."""
-    if SRC_FILE_COL in batch.columns:
-        tagged = batch
-    else:
-        tagged = batch.withColumn(SRC_FILE_COL, F.input_file_name())
-    out = clean_strings(tagged, columns=list(spec.columns))
-    out = coerce_types(out, spec)
-    for k in spec.keys:
-        out = drop_null_keys(out, k)
-    return out.select(*spec.columns, SRC_FILE_COL)
-
-
 def start_streaming_ingest(
     spark: SparkSession,
-    incoming_dir: str | None,
+    incoming_dir: str,
     checkpoint_dir: str,
     sink: Callable[[DataFrame], int],
     audit: AuditLog | None = None,
     archive_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     available_now: bool = False,
-    source_df: DataFrame | None = None,
     spec: TableSpec = SALES_SPEC,
 ) -> StreamingQuery:
     """Start an ingestion stream for any registered table. ``sink``
@@ -77,50 +53,29 @@ def start_streaming_ingest(
     ``spec`` selects the table contract (round-12 verdict item 6 — the
     streaming path's symmetry with ``run_batch_ingest(..., spec=)``):
     the file reader reads the spec's all-string raw schema, the
-    micro-batch clean applies the spec-derived P1-P8 bundle, and
-    keep-latest dedups on the spec's keys ordered by its ``order_col``
-    (an order-less spec falls back to arrival/provenance order — the
-    ``_src_file`` precedence column). Defaults to the reference's sales
-    table, so every existing call is unchanged.
-
-    ``source_df`` is the SOURCE SEAM (round-10 item 1): a caller-built
-    streaming DataFrame carrying the sales columns — e.g.
-    ``kafka_records(kafka_source(...), SALES_RAW_SCHEMA)`` — replaces
-    the default file reader, and the same clean → dedup → sink
-    micro-batch composition runs unchanged. A frame that already
-    carries ``_src_file`` keeps its provenance (Kafka's
-    partition/offset strings order same-key precedence exactly as file
-    names do); the file-reader knobs (``incoming_dir``,
-    ``archive_dir``, ``max_files_per_trigger``) are file-source-only
-    and rejected alongside ``source_df``."""
-    if source_df is not None:
-        if not source_df.isStreaming:
-            raise ValueError("source_df must be a streaming DataFrame")
-        if archive_dir or max_files_per_trigger or incoming_dir:
-            raise ValueError(
-                "file-source options (incoming_dir / archive_dir / "
-                "max_files_per_trigger) do not apply to source_df"
-            )
-        stream = source_df
-    else:
-        if not incoming_dir:
-            raise ValueError("incoming_dir is required without source_df")
-        reader = (
-            spark.readStream.schema(spec.raw_schema())
-            .option("header", True)
+    micro-batch clean applies the spec's ``clean_columns`` bundle (the
+    batch runner's), and keep-latest dedups on the spec's keys ordered
+    by its ``order_col`` (an order-less spec falls back to the
+    ``_src_file`` file-name precedence column). Defaults to the
+    reference's sales table."""
+    reader = spark.readStream.schema(spec.raw_schema()).option("header", True)
+    if max_files_per_trigger:
+        reader = reader.option(
+            "maxFilesPerTrigger", str(max_files_per_trigger)
         )
-        if max_files_per_trigger:
-            reader = reader.option(
-                "maxFilesPerTrigger", str(max_files_per_trigger)
-            )
-        if archive_dir:
-            reader = reader.option("cleanSource", "archive").option(
-                "sourceArchiveDir", archive_dir
-            )
-        stream = reader.csv(incoming_dir)
+    if archive_dir:
+        reader = reader.option("cleanSource", "archive").option(
+            "sourceArchiveDir", archive_dir
+        )
+    stream = reader.csv(incoming_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        cleaned = _clean_micro_batch(batch, spec)
+        # the file name is the audit key and the cross-file precedence
+        cleaned = clean_columns(
+            batch.withColumn(SRC_FILE_COL, F.input_file_name()),
+            spec,
+            keep=(SRC_FILE_COL,),
+        )
         if audit is not None:
             counts = (
                 cleaned.groupBy(SRC_FILE_COL).agg(F.count("*").alias("n")).collect()
@@ -137,7 +92,7 @@ def start_streaming_ingest(
         if audit is not None:
             for row in counts:
                 audit.log_file_status(
-                    row[SRC_FILE_COL], incoming_dir or "stream",
+                    row[SRC_FILE_COL], incoming_dir,
                     "loaded", rows=int(row["n"]),
                 )
 

@@ -39,10 +39,8 @@ from mini_data_platform_spark.operators.ivm import view_increment
 
 def checkpoint_key(checkpoint_dir: str) -> str:
     """The checkpoint's identity in commit-log batch ids
-    (``epoch-{key}-{epoch_id}``). ONE definition on purpose — the merge
-    table's streaming maintenance shares it, and a divergent hash
-    recipe would silently fork the two modules' epoch id spaces and
-    break their exactly-once upgrade."""
+    (``epoch-{key}-{epoch_id}``), shared by the view and histogram
+    streams."""
     import hashlib
 
     return hashlib.md5(

@@ -1253,154 +1253,34 @@ class TestIndexDelete:
         assert _pairs_set(neardup_index_pairs(spark, tmpdir)) == want
 
 
-class TestIndexRevive:
-    """index_revive: the tombstone table as an EVENT LOG. Per id the
-    latest del/rev event decides, so a revive makes the id's rows
-    visible to every read path again, a later delete re-tombstones it,
-    offsets ride with wire-ordered tombstones, and time travel replays
-    the del→rev history faithfully."""
+class TestRevivalSegmentRefused:
+    def test_lookup_raises_on_revival_segment(self, spark, tmpdir):
+        """Earlier versions could append ``rev-N`` (revival) segments to
+        the tombstone table. Read as a takedown, one would silently hide
+        docs its writer made live again, so every read refuses it."""
+        from mini_data_platform_spark.operators.incremental import (
+            _write_meta,
+            index_delete,
+            neardup_index_lookup,
+        )
 
-    def _built(self, spark, tmpdir, n=40):
-        b1 = _corpus(spark, 0, n)
-        corpus = b1.unionByName(_mutated(b1, 1000))
+        corpus = _corpus(spark, 0, 20)
         neardup_index_build(
             corpus, tmpdir, "doc_id", "text",
             THRESH, NUM_HASHES, BANDS, SHINGLE_N,
         )
-        return corpus
-
-    def test_revive_restores_every_read_path(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            index_delete,
-            index_revive,
-            index_tombstoned_ids,
-            neardup_index_pairs,
-        )
-
-        corpus = self._built(spark, tmpdir)
-        want = _pairs_set(neardup_index_pairs(spark, tmpdir))
-        dead = corpus.where(F.col("doc_id") % 5 == 0)
-        index_delete(dead, tmpdir)
-        assert _pairs_set(neardup_index_pairs(spark, tmpdir)) != want
-        index_revive(dead, tmpdir)
-        # the full del→rev round trip serves the ORIGINAL corpus again
-        assert _pairs_set(neardup_index_pairs(spark, tmpdir)) == want
-        assert index_tombstoned_ids(spark, tmpdir) is None or (
-            index_tombstoned_ids(spark, tmpdir).count() == 0
-        )
-
-    def test_later_delete_retombstones_and_as_of_replays(
-        self, spark, tmpdir
-    ):
-        from mini_data_platform_spark.operators.incremental import (
-            index_delete,
-            index_revive,
-            neardup_index_lookup,
-        )
-
-        corpus = self._built(spark, tmpdir, n=30)
-        victim = corpus.where(F.col("doc_id") == 7)
-        probe = _mutated(victim, 9000)
-
-        def partner_7(as_of=None):
-            looked = neardup_index_lookup(
-                probe, tmpdir, small_batch=True, as_of=as_of
-            )
-            got = any(7 in (p[0], p[1]) for p in _pairs_set(looked))
-            release_plan(looked)
-            return got
-
-        assert partner_7()
-        index_delete(victim, tmpdir)       # batch 2
-        assert not partner_7()
-        index_revive(victim, tmpdir)       # batch 3
-        assert partner_7()
-        index_delete(victim, tmpdir)       # batch 4: del AFTER rev wins
-        assert not partner_7()
-        # time travel replays each stage of the del→rev→del history
-        assert partner_7(as_of=1)
-        assert not partner_7(as_of=2)
-        assert partner_7(as_of=3)
-
-    def test_replay_protection_and_empty_revive(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            _recover_meta,
-            index_delete,
-            index_revive,
-        )
-
-        corpus = self._built(spark, tmpdir, n=20)
-        victim = corpus.where(F.col("doc_id") == 3)
-        index_delete(victim, tmpdir)
-        index_revive(victim, tmpdir, batch_id="rev-1")
-        n = _recover_meta(tmpdir)["n_batches"]
-        index_revive(victim, tmpdir, batch_id="rev-1")  # replay: no-op
-        assert _recover_meta(tmpdir)["n_batches"] == n
-        empty = victim.where(F.lit(False))
-        index_revive(empty, tmpdir)  # nothing to revive: no commit
-        assert _recover_meta(tmpdir)["n_batches"] == n
-
-    def test_offsets_stored_and_exposed(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            index_delete,
-            index_tombstoned_ids,
-        )
-
-        self._built(spark, tmpdir, n=20)
-        dead = spark.createDataFrame(
-            [(2, "kafka://t/0@00000000000000000005"),
-             (4, None)],
-            "doc_id bigint, off string",
-        )
-        index_delete(dead, tmpdir, offset_col="off")
-        got = {
-            r["id"]: r["offset"]
-            for r in index_tombstoned_ids(
-                spark, tmpdir, with_offsets=True
-            ).collect()
-        }
-        assert got == {
-            2: "kafka://t/0@00000000000000000005", 4: None,
-        }
-        # offset-less call sites (batch/GDPR takedowns) store null
-        index_delete(
-            spark.createDataFrame([(6,)], "doc_id bigint"), tmpdir
-        )
-        got = {
-            r["id"]: r["offset"]
-            for r in index_tombstoned_ids(
-                spark, tmpdir, with_offsets=True
-            ).collect()
-        }
-        assert got[6] is None and got[2] is not None
-
-    def test_compaction_after_revive_purges_only_dead(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            compact_index,
-            index_delete,
-            index_revive,
-            neardup_index_pairs,
-        )
-
-        corpus = self._built(spark, tmpdir, n=40)
-        index_delete(corpus.where(F.col("doc_id") % 4 == 0), tmpdir)
-        index_revive(corpus.where(F.col("doc_id") % 8 == 0), tmpdir)
-        want = _pairs_set(neardup_index_pairs(spark, tmpdir))
-        compact_index(spark, tmpdir)
+        index_delete(corpus.where(F.col("doc_id") == 3), tmpdir)
         meta = _read_meta(tmpdir)
-        assert meta["segments"].get("tombstones") == []
-        assert meta["n_deleted"] == 0
-        raw_ids = {
-            r["id"]
-            for r in spark.read.parquet(
-                os.path.join(tmpdir, "docs", meta["segments"]["docs"][0])
-            ).select("id").collect()
-        }
-        # revived ids (%8) survive the physical purge; still-dead ids
-        # (%4 but not %8) are gone from disk
-        assert {i for i in raw_ids if i % 8 == 0}
-        assert not {i for i in raw_ids if i % 4 == 0 and i % 8 != 0}
-        assert _pairs_set(neardup_index_pairs(spark, tmpdir)) == want
+        tombs = os.path.join(tmpdir, "tombstones")
+        rev = "rev-2-0123abcd"
+        shutil.copytree(
+            os.path.join(tombs, meta["segments"]["tombstones"][0]),
+            os.path.join(tombs, rev),
+        )
+        meta["segments"]["tombstones"].append(rev)
+        _write_meta(tmpdir, meta)
+        with pytest.raises(RuntimeError, match="revival tombstone"):
+            neardup_index_lookup(_mutated(corpus, 9000), tmpdir)
 
 
 class TestBatchIdReplay:

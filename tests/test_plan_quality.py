@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from mini_data_platform_spark.catalog import load_table
-from mini_data_platform_spark.explain import (
+from tests.explain import (
     count_exchanges,
     explain_str,
     uses_python_eval,

@@ -3,7 +3,7 @@ uniqueness via the same single pass, null semantics, one-scan plan."""
 
 from pyspark.sql import Row
 
-from mini_data_platform_spark.explain import count_exchanges
+from tests.explain import count_exchanges
 from mini_data_platform_spark.operators.quality import (
     dq_report,
     in_range,

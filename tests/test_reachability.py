@@ -1,0 +1,81 @@
+"""Every module of the package is reachable from a declared surface.
+
+The declared surfaces are the query contract (``__spark_entry__.py``),
+the bench CLI (``bench.py``), the batch runner CLI (``runner.py``) and the
+``streaming``/``sinks`` exports. A module that only tests import is dead
+weight: wire it into a surface or delete it with its tests. The walk reads
+``import``/``from`` statements with ``ast`` (including those inside
+functions) and never imports anything, so it needs no Spark.
+"""
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = "mini_data_platform_spark"
+
+ROOTS = [
+    REPO / "__spark_entry__.py",
+    REPO / "bench.py",
+    REPO / PACKAGE / "runner.py",
+    REPO / PACKAGE / "streaming" / "__init__.py",
+    REPO / PACKAGE / "sinks" / "__init__.py",
+]
+
+
+def _module_file(name):
+    """The package file that module ``name`` loads, or None."""
+    if name != PACKAGE and not name.startswith(PACKAGE + "."):
+        return None
+    base = REPO.joinpath(*name.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
+
+
+def _imported_names(path):
+    """Dotted module names ``path`` imports, with every parent package
+    (importing ``a.b.c`` runs ``a`` and ``a.b`` first) and, for ``from m
+    import x``, the candidate submodule ``m.x``."""
+    here = list(path.parent.relative_to(REPO).parts)  # relative-import base
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(node, ast.Import):
+            found = [alias.name for alias in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = here[: len(here) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            found = [mod] + [f"{mod}.{alias.name}" for alias in node.names]
+        else:
+            continue
+        for name in found:
+            parts = name.split(".")
+            names.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+    return names
+
+
+def reachable_files():
+    seen = set()
+    todo = list(ROOTS)
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        for name in _imported_names(path):
+            target = _module_file(name)
+            if target is not None and target not in seen:
+                todo.append(target)
+    return seen
+
+
+def test_every_package_module_is_reachable_from_a_declared_surface():
+    reached = reachable_files()
+    orphans = sorted(
+        str(p.relative_to(REPO))
+        for p in (REPO / PACKAGE).rglob("*.py")
+        if p not in reached
+    )
+    assert not orphans, f"modules no declared surface imports: {orphans}"
+

@@ -54,7 +54,7 @@ class TestSaltedAgg:
             salted_agg(df, ["k"], {"m": ("median", "v")})
 
     def test_two_shuffles(self, spark):
-        from mini_data_platform_spark.explain import count_exchanges
+        from tests.explain import count_exchanges
 
         df = self._skewed(spark)
         out = salted_agg(df, ["k"], {"n": ("count", "*")}, n_salts=4)

@@ -2,14 +2,17 @@
 admission, watermarked windowed aggregation, stateful sessionization."""
 
 import datetime
+import functools
 import os
+import sqlite3
 import time
 
 import pytest
 
 from pyspark.sql import Row, functions as F, types as T
 
-from mini_data_platform_spark.sinks.upsert import upsert_parquet
+from mini_data_platform_spark.sinks.audit import AuditLog
+from mini_data_platform_spark.sinks.upsert import sqlite_conn_factory, upsert_parquet
 from mini_data_platform_spark.streaming import (
     run_available_now,
     sessionize_stateful,
@@ -74,6 +77,49 @@ class TestStreamingIngest:
         self._run_once(spark, incoming, ckpt, target)
         got = {r["sale_id"]: r["amount"] for r in spark.read.parquet(target).collect()}
         assert got == {"a": 10.0, "b": 99.0, "c": 30.0}
+
+    def test_audit_logs_cleaned_rows_per_file(self, spark, tmp_path):
+        """Each file's audit row is ``loaded`` with its cleaned row count
+        before dedup: null/blank keys are dropped, in-file and
+        cross-file duplicate keys still count."""
+        incoming = str(tmp_path / "incoming")
+        target = str(tmp_path / "target")
+        audit_db = str(tmp_path / "audit.db")
+        os.makedirs(incoming)
+        with open(os.path.join(incoming, "f1.csv"), "w") as f:
+            f.write(
+                "sale_id,sale_date,customer_id,product_id,quantity,amount\n"
+                "a,2024-01-01 00:00:00, C1 ,P1,1,10.0\n"
+                "a,2024-01-05 00:00:00,C1,P1,2,20.0\n"
+                "nan,2024-01-01 00:00:00,C9,P9,1,1.0\n"
+                " ,2024-01-01 00:00:00,C9,P9,1,1.0\n"
+                "b,2024-01-02 00:00:00,C2,P2,2,20.0\n"
+            )
+        with open(os.path.join(incoming, "f2.csv"), "w") as f:
+            f.write(CSV_2)
+        audit = AuditLog(functools.partial(sqlite_conn_factory, audit_db))
+
+        def sink(df):
+            return upsert_parquet(spark, df, target, ["sale_id"])
+
+        q = start_streaming_ingest(
+            spark, incoming, str(tmp_path / "ckpt"), sink=sink,
+            audit=audit, available_now=True,
+        )
+        q.awaitTermination(120)
+        assert not q.isActive
+        # the audit key is input_file_name()'s URI form; match basenames
+        with sqlite3.connect(audit_db) as conn:
+            logged = {
+                os.path.basename(k): (st, n)
+                for k, st, n in conn.execute(
+                    "SELECT file_key, status, rows_processed "
+                    "FROM file_ingestion_log"
+                )
+            }
+        assert logged == {"f1.csv": ("loaded", 3), "f2.csv": ("loaded", 2)}
+        got = {r["sale_id"] for r in spark.read.parquet(target).collect()}
+        assert got == {"a", "b", "c"}
 
 
 class TestWindowedStats:
@@ -785,57 +831,6 @@ class TestStreamingViewMaintenance:
         got = {r["k"]: r["n"] for r in view_read(spark, view_dir).collect()}
         assert got == {"a": 3}
 
-    def test_streamed_merge_table(self, spark, tmp_path):
-        """streaming/mergetable.py: a CDC stream of upsert/delete rows
-        keeps the keyed merge table current, exactly-once across
-        checkpointed restarts, and the serve read equals the batch-apply
-        twin."""
-        from mini_data_platform_spark.operators.mergetable import (
-            table_apply,
-            table_build,
-            table_read,
-        )
-        from mini_data_platform_spark.streaming.mergetable import (
-            maintain_table_stream,
-        )
-
-        schema = "k bigint, v string, _op string"
-        base = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "k bigint, v string")
-        live1 = [(2, "B", "u"), (4, "d", "u"), (3, None, "d")]
-        live2 = [(3, "c2", "u"), (1, None, "d")]
-
-        tdir = str(tmp_path / "table")
-        table_build(base, tdir, ["k"])
-        src = str(tmp_path / "changes")
-        ckpt = str(tmp_path / "ckpt")
-        spark.createDataFrame(live1, schema).write.mode("append").parquet(src)
-        q = maintain_table_stream(
-            spark.readStream.schema(schema).parquet(src), tdir, ckpt,
-            available_now=True,
-        )
-        q.awaitTermination(180)
-        got = {r["k"]: r["v"] for r in table_read(spark, tdir).collect()}
-        assert got == {1: "a", 2: "B", 4: "d"}
-
-        # restart from the checkpoint with more files: only new files
-        # apply; the final state equals a batch-apply twin
-        spark.createDataFrame(live2, schema).write.mode("append").parquet(src)
-        q2 = maintain_table_stream(
-            spark.readStream.schema(schema).parquet(src), tdir, ckpt,
-            available_now=True,
-        )
-        q2.awaitTermination(180)
-        twin = str(tmp_path / "twin")
-        table_build(base, twin, ["k"])
-        table_apply(spark.createDataFrame(live1, schema), twin)
-        table_apply(spark.createDataFrame(live2, schema), twin)
-        assert (
-            {r["k"]: r["v"] for r in table_read(spark, tdir).collect()}
-            == {r["k"]: r["v"] for r in table_read(spark, twin).collect()}
-            == {2: "B", 3: "c2", 4: "d"}
-        )
-
     def test_cdc_change_stream(self, spark, tmp_path):
         """changes=True: a streamed upsert (delete-old/insert-new pair)
         retracts through view_apply_changes exactly once."""
@@ -872,149 +867,6 @@ class TestStreamingViewMaintenance:
         }
         # a upserted to 12.5; b fully deleted -> vanished
         assert got == {"a": (12.5, 1)}
-
-
-class TestStreamingJoinView:
-    """streaming/joinview.py: a JOIN view over two merge tables stays
-    current from CDC streams — apply + refresh per epoch, one
-    refresher, equal to the GROUP BY recompute over final states."""
-
-    ORDERS = "o_id bigint, cust bigint, price double"
-    CUST = "cust bigint, seg string"
-
-    def _setup(self, spark, tmp_path):
-        from mini_data_platform_spark.operators.joinview import (
-            join_view_build,
-            join_view_refresh,
-        )
-        from mini_data_platform_spark.operators.mergetable import (
-            table_build,
-        )
-
-        L, R, V = (str(tmp_path / d) for d in ("orders", "cust", "view"))
-        table_build(
-            spark.createDataFrame(
-                [(1, 10, 100.0), (2, 20, 50.0)], self.ORDERS
-            ),
-            L, ["o_id"],
-        )
-        table_build(
-            spark.createDataFrame([(10, "A"), (20, "B")], self.CUST),
-            R, ["cust"],
-        )
-        join_view_build(
-            spark, L, R, ["cust"], V, ["seg"],
-            {"revenue": ("sum", "price"), "n": ("count", "*")},
-        )
-        join_view_refresh(spark, V)
-        return L, R, V
-
-    def _recompute(self, spark, L, R):
-        from mini_data_platform_spark.operators.mergetable import table_read
-
-        return {
-            r["seg"]: (r["revenue"], r["n"])
-            for r in table_read(spark, L)
-            .join(table_read(spark, R), "cust")
-            .groupBy("seg")
-            .agg(
-                F.sum("price").alias("revenue"), F.count("*").alias("n")
-            )
-            .collect()
-        }
-
-    def _view(self, spark, V):
-        from mini_data_platform_spark.operators.ivm import view_read
-
-        return {
-            r["seg"]: (r["revenue"], r["n"])
-            for r in view_read(spark, V).collect()
-        }
-
-    def test_stream_equals_recompute(self, spark, tmp_path):
-        from mini_data_platform_spark.streaming.joinview import (
-            maintain_join_view_stream,
-        )
-
-        L, R, V = self._setup(spark, tmp_path)
-        src = str(tmp_path / "cdc")
-        # epoch: an update to order 1, a new order, a delete of order 2
-        spark.createDataFrame(
-            [(1, 10, 150.0, "u"), (3, 20, 7.0, "u"), (2, None, None, "d")],
-            "o_id bigint, cust bigint, price double, _op string",
-        ).write.parquet(src)
-        q = maintain_join_view_stream(
-            spark.readStream.schema(
-                "o_id bigint, cust bigint, price double, _op string"
-            ).parquet(src),
-            L, V, str(tmp_path / "ckpt"), available_now=True,
-        )
-        q.awaitTermination(180)
-        got = self._view(spark, V)
-        assert got == self._recompute(spark, L, R)
-        assert got == {"A": (150.0, 1), "B": (7.0, 1)}
-
-    def test_two_streams_one_refresher(self, spark, tmp_path):
-        """Dim side streams with refresh=False (apply-only); the fact
-        side owns the refresh and folds BOTH sides' advances."""
-        from mini_data_platform_spark.streaming.joinview import (
-            maintain_join_view_stream,
-        )
-
-        L, R, V = self._setup(spark, tmp_path)
-        dim_src = str(tmp_path / "dimcdc")
-        spark.createDataFrame(
-            [(10, "PROMOTED"), (30, "C")], self.CUST
-        ).write.parquet(dim_src)
-        q1 = maintain_join_view_stream(
-            spark.readStream.schema(self.CUST).parquet(dim_src),
-            R, V, str(tmp_path / "dimckpt"),
-            available_now=True, refresh=False,
-        )
-        q1.awaitTermination(180)
-        # apply-only: the view has NOT moved yet
-        assert self._view(spark, V) == {"A": (100.0, 1), "B": (50.0, 1)}
-        fact_src = str(tmp_path / "factcdc")
-        spark.createDataFrame(
-            [(4, 30, 9.0)], self.ORDERS
-        ).write.parquet(fact_src)
-        q2 = maintain_join_view_stream(
-            spark.readStream.schema(self.ORDERS).parquet(fact_src),
-            L, V, str(tmp_path / "factckpt"), available_now=True,
-        )
-        q2.awaitTermination(180)
-        got = self._view(spark, V)
-        assert got == self._recompute(spark, L, R)
-        # order 1 moved to PROMOTED with the dim change; new C row
-        assert got == {
-            "PROMOTED": (100.0, 1), "B": (50.0, 1), "C": (9.0, 1)
-        }
-
-    def test_outside_writer_folded(self, spark, tmp_path):
-        """A batch applied OUTSIDE the stream (the crashed-between-
-        apply-and-refresh shape) is folded by the next epoch's
-        refresh."""
-        from mini_data_platform_spark.operators.mergetable import (
-            table_apply,
-        )
-        from mini_data_platform_spark.streaming.joinview import (
-            maintain_join_view_stream,
-        )
-
-        L, R, V = self._setup(spark, tmp_path)
-        table_apply(
-            spark.createDataFrame([(5, 10, 1000.0)], self.ORDERS), L
-        )
-        src = str(tmp_path / "cdc")
-        spark.createDataFrame(
-            [(6, 20, 2.0)], self.ORDERS
-        ).write.parquet(src)
-        q = maintain_join_view_stream(
-            spark.readStream.schema(self.ORDERS).parquet(src),
-            L, V, str(tmp_path / "ckpt"), available_now=True,
-        )
-        q.awaitTermination(180)
-        assert self._view(spark, V) == self._recompute(spark, L, R)
 
 
 class TestStreamingHistogram:
@@ -1099,225 +951,3 @@ class TestStreamingHistogram:
             spark, view_dir, {"p95": 0.95}
         ).collect()[0]
         assert r["p95"] <= 50.0
-
-
-class TestStreamEnrich:
-    """streaming/enrich.py: per-micro-batch dimension lookup against a
-    keyed merge table — at-apply-time versions, candidate-bounded
-    probes, idempotent epoch output."""
-
-    def _dim(self, spark, tmp_path):
-        from mini_data_platform_spark.operators.mergetable import (
-            table_build,
-        )
-
-        d = str(tmp_path / "dim")
-        rows = spark.createDataFrame(
-            [(1, "alice", "AUTO"), (2, "bob", "BUILD"),
-             (3, "carol", "SHIP")],
-            "c_custkey long, c_name string, c_seg string",
-        )
-        table_build(rows, d, ["c_custkey"], batch_id="b0")
-        return d
-
-    def _facts(self, spark, rows):
-        return spark.createDataFrame(
-            rows, "o_id long, c_custkey long, amount double"
-        )
-
-    def test_at_apply_time_versions_and_left_nulls(self, spark, tmp_path):
-        from mini_data_platform_spark.operators.mergetable import (
-            table_apply,
-        )
-        from mini_data_platform_spark.streaming.enrich import enrich_stream
-
-        dim = self._dim(spark, tmp_path)
-        src = str(tmp_path / "facts")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        # wave 1: keys 1,2 and an unknown key 9
-        self._facts(
-            spark, [(100, 1, 5.0), (101, 2, 6.0), (102, 9, 7.0)]
-        ).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "o_id long, c_custkey long, amount double"
-        ).parquet(src)
-        q = enrich_stream(stream, dim, out, ckpt, available_now=True)
-        q.awaitTermination(180)
-        got1 = {
-            r["o_id"]: r["c_name"]
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got1 == {100: "alice", 101: "bob", 102: None}
-
-        # dim changes between waves: rename key 1, delete key 2
-        table_apply(
-            spark.createDataFrame(
-                [(1, "ALICE2", "AUTO", "u"), (2, None, None, "d")],
-                "c_custkey long, c_name string, c_seg string, _op string",
-            ),
-            dim, batch_id="b1",
-        )
-        self._facts(
-            spark, [(200, 1, 8.0), (201, 2, 9.0)]
-        ).write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema(
-            "o_id long, c_custkey long, amount double"
-        ).parquet(src)
-        q2 = enrich_stream(stream2, dim, out, ckpt, available_now=True)
-        q2.awaitTermination(180)
-        got2 = {
-            r["o_id"]: r["c_name"]
-            for r in spark.read.parquet(out).collect()
-        }
-        # wave-1 rows keep their at-apply-time enrichment; wave-2 sees
-        # the new version, and the deleted key enriches to NULL
-        assert got2 == {
-            100: "alice", 101: "bob", 102: None,
-            200: "ALICE2", 201: None,
-        }
-
-    def test_inner_drops_and_guards(self, spark, tmp_path):
-        import pytest
-
-        from mini_data_platform_spark.streaming.enrich import enrich_stream
-
-        dim = self._dim(spark, tmp_path)
-        src = str(tmp_path / "facts")
-        out = str(tmp_path / "out")
-        self._facts(
-            spark, [(1, 1, 5.0), (2, 9, 7.0)]
-        ).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "o_id long, c_custkey long, amount double"
-        ).parquet(src)
-        q = enrich_stream(
-            stream, dim, out, str(tmp_path / "ck2"), how="inner",
-            available_now=True,
-        )
-        q.awaitTermination(180)
-        assert {
-            r["o_id"] for r in spark.read.parquet(out).collect()
-        } == {1}
-        with pytest.raises(ValueError):
-            enrich_stream(stream, dim, out, str(tmp_path / "ck3"),
-                          how="full")
-        bad = spark.readStream.schema("o_id long, amount double").parquet(
-            src
-        )
-        with pytest.raises(ValueError):
-            enrich_stream(bad, dim, out, str(tmp_path / "ck4"))
-
-
-class TestDedupIndexStream:
-    """streaming/dedup_index.py: micro-batches ARE index increments —
-    stream-driven dedup equals the batch-increment twin, exactly-once
-    across checkpointed restarts."""
-
-    def _docs(self, spark, rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    def test_exact_stream_equals_batch_increments(self, spark, tmp_path):
-        from mini_data_platform_spark.operators.incremental import (
-            _read_meta,
-            exact_index_build,
-            exact_index_increment,
-        )
-        from mini_data_platform_spark.streaming.dedup_index import (
-            maintain_exact_index_stream,
-        )
-
-        base = [(i, f"text number {i} alpha beta") for i in range(20)]
-        wave1 = [(100 + i, f"text number {i} alpha beta") for i in range(10)]
-        wave2 = [(200 + i, f"text number {i} alpha beta") for i in range(5)] + [
-            (300, "entirely new content gamma")
-        ]
-
-        sidx = str(tmp_path / "sidx")
-        exact_index_build(self._docs(spark, base), sidx, "doc_id", "text")
-        src = str(tmp_path / "stream_src")
-        ckpt = str(tmp_path / "ckpt")
-        self._docs(spark, wave1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        q = maintain_exact_index_stream(stream, sidx, ckpt, available_now=True)
-        q.awaitTermination(180)
-
-        # restart with more files: only the new wave applies
-        self._docs(spark, wave2).write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema(
-            "doc_id long, text string"
-        ).parquet(src)
-        q2 = maintain_exact_index_stream(stream2, sidx, ckpt, available_now=True)
-        q2.awaitTermination(180)
-
-        # batch twin: same waves as plain increments
-        bidx = str(tmp_path / "bidx")
-        exact_index_build(self._docs(spark, base), bidx, "doc_id", "text")
-        exact_index_increment(self._docs(spark, wave1), bidx)
-        exact_index_increment(self._docs(spark, wave2), bidx)
-
-        def resolutions(idx):
-            import os
-
-            out = set()
-            pairs_root = os.path.join(idx, "pairs")
-            for d in sorted(os.listdir(pairs_root)):
-                for r in spark.read.parquet(
-                    os.path.join(pairs_root, d)
-                ).collect():
-                    out.add((r["id"], r["dup_of"]))
-            return out
-
-        assert resolutions(sidx) == resolutions(bidx)
-        # stream state committed: corpus count includes both waves
-        assert _read_meta(sidx)["n_docs"] == 20 + 10 + 6
-
-    def test_neardup_stream_pairs_equal_batch(self, spark, tmp_path):
-        from mini_data_platform_spark.operators.incremental import (
-            neardup_index_build,
-            neardup_index_increment,
-        )
-        from mini_data_platform_spark.streaming.dedup_index import (
-            maintain_neardup_index_stream,
-        )
-
-        base = [
-            (i, f"alpha beta gamma delta tok{i} word{i % 5} alpha beta")
-            for i in range(30)
-        ]
-        live = [
-            (1000 + i, f"beta gamma delta tok{i} word{i % 5} alpha beta")
-            for i in range(10)
-        ]
-        sidx = str(tmp_path / "sidx")
-        neardup_index_build(
-            self._docs(spark, base), sidx, "doc_id", "text"
-        )
-        src = str(tmp_path / "src")
-        self._docs(spark, live).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(
-            "doc_id long, text string"
-        ).parquet(src)
-        q = maintain_neardup_index_stream(
-            stream, sidx, str(tmp_path / "ck"), available_now=True
-        )
-        q.awaitTermination(180)
-
-        bidx = str(tmp_path / "bidx")
-        neardup_index_build(self._docs(spark, base), bidx, "doc_id", "text")
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in neardup_index_increment(
-                self._docs(spark, live), bidx
-            ).collect()
-        }
-        import os
-
-        got = set()
-        for d in sorted(os.listdir(os.path.join(sidx, "pairs"))):
-            for r in spark.read.parquet(
-                os.path.join(sidx, "pairs", d)
-            ).collect():
-                got.add((r["id_a"], r["id_b"]))
-        assert got == want
