@@ -7,12 +7,13 @@ every implemented operator (SURVEY.md §2) to a (spark, sf_dir) callable;
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mini_data_platform_spark.plans import analytics, kpi, llm, multimodal_q
 

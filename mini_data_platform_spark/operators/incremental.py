@@ -11,9 +11,9 @@ batch against it.
 
 Index layout under ``index_dir`` (parquet + one JSON meta file):
 
-- ``meta.json`` — the LSH hyperparameters (num_hashes, bands, shingle_n,
-  threshold) plus id/text column names, running doc/batch counts, and
-  the COMMIT LOG: ``segments`` maps each table to the list of its
+- the checkpoint (operators/occlog.py) — the LSH hyperparameters
+  (num_hashes, bands, shingle_n, threshold) plus id/text column names,
+  running doc/batch counts, and the COMMIT LOG: ``segments`` maps each table to the list of its
   committed per-batch subdirectories. Readers only ever read committed
   segments, which is what makes increments atomic on plain parquet (see
   Restartability). Signatures from different hyperparameters are
@@ -48,7 +48,7 @@ Scale shape of one increment (new batch b against corpus C):
   candidate ids (parquet row-group pruning applies), so settled
   non-candidate text is never deserialized, let alone re-shingled;
 - append: b's band keys and text land as NEW SEGMENT DIRS and are then
-  committed in one meta.json swap, so the NEXT increment sees them. The
+  committed in one commit-log record, so the NEXT increment sees them. The
   verified pairs are materialized BEFORE the commit — the returned plan
   must never read its own batch from the "corpus" side.
 
@@ -98,26 +98,13 @@ ivm/mergetable exactly-once contract, and what lets a foreachBatch
 stream drive the index under Spark's at-least-once micro-batch
 replays. Callers that never pass ids keep the original semantics.
 
-Restartability + MULTI-WRITER OCC (round-7 item 2; round-8 item 5):
-each increment (a) writes its verified pairs and its bucket/doc
-segments under WRITER-UNIQUE names (``batch-N-<token>``), then
-(b) commits by publishing a put-if-absent ticket
-``_commits/<version>.json`` — the merge-table protocol, shared via
-operators/occlog.py. ``meta.json`` is a CHECKPOINT that
-``_recover_meta`` rolls forward from unabsorbed tickets, and every
-entry point reads through it. Readers construct their scan from the
-committed segment log only, so a crash anywhere before the ticket
-leaves orphan directories the index never serves (``vacuum_index``
-sweeps them). Concurrent writers both land: the ticket loser
-RECOMPUTES against the recovered snapshot and retries — re-committing
-its stale pairs would drop (loser-batch × winner-batch) pairs and
-break the union-equals-recompute equivalence, so conflict means
-re-derive, exactly like the merge table's MERGE INTO. Compaction
-serializes the same way and REFUSES a lost race (raises; re-run).
-Read paths roll forward in memory and checkpoint only BEST-EFFORT —
-a consumer with read-only filesystem access to the index dir can
-always read (its checkpoint write is swallowed; tickets stay the
-source of truth), it just leaves the replay work to the next writer.
+Restartability and multiple writers: every increment, delete and
+compaction commits through the shared ticket log (operators/occlog.py
+describes the protocol). An increment's segment and pairs dirs carry
+writer-unique names (``batch-N-<token>``); a ticket loser RECOMPUTES
+against the recovered snapshot — re-committing its stale pairs would
+drop (loser-batch × winner-batch) pairs — and compaction refuses a lost
+race (raises; re-run).
 
 No reference-repo counterpart (the reference ingests files, it has no
 similarity ops); part of the §2.8 LLM-pipeline extension surface.
@@ -127,8 +114,6 @@ from __future__ import annotations
 
 import json
 import os
-import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -140,7 +125,7 @@ from mini_data_platform_spark.operators.dedup_fuzzy import (
     minhash_signatures_from,
     shingle_hash_sets,
 )
-from mini_data_platform_spark.operators import resources
+from mini_data_platform_spark.operators import occlog, resources
 from mini_data_platform_spark.operators.resources import (
     attach_plan,
     bounded_rows,
@@ -148,7 +133,6 @@ from mini_data_platform_spark.operators.resources import (
     run_concurrently,
 )
 
-_META = "meta.json"
 _BUCKETS = "buckets"
 _DOCS = "docs"
 _PAIRS = "pairs"
@@ -341,108 +325,22 @@ def _local_bucket_pairs(
     return sorted(pairs), ids
 
 
-def _read_meta(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, _META), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _write_meta(index_dir: str, meta: dict) -> None:
-    tmp = os.path.join(index_dir, _META + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, os.path.join(index_dir, _META))
-
-
-def _meta_as_of(meta: dict, as_of: int | None) -> dict:
-    """TIME TRAVEL over the commit log: a meta snapshot restricted to
-    the state after the first ``as_of`` committed batches. Segment lists
-    are append-ordered, one entry per batch (plus at most one leading
-    ``compact-*`` entry covering every batch up to
-    ``meta['compacted_through']``), so an as-of state is a list PREFIX —
-    no data copies, no tombstones; history is simply which suffix you
-    ignore. Compaction collapses the batches it folds: ``as_of`` older
-    than ``compacted_through`` is gone and raises (the Delta/Iceberg
-    VACUUM-vs-time-travel trade, made explicit)."""
-    if as_of is None:
-        return meta
-    n = meta["n_batches"]
-    if not 1 <= as_of <= n:
-        raise ValueError(f"as_of must be in [1, {n}], got {as_of}")
-    if as_of == n:
-        return meta
-    ct = meta.get("compacted_through", 0)
-    if as_of < ct:
-        raise ValueError(
-            f"history before batch {ct} was compacted away; "
-            f"as_of={as_of} is not reconstructible"
-        )
-    out = dict(meta)
-    out["segments"] = {}
-    for t, segs in meta["segments"].items():
-        # per-table: a crash between compact_index's per-table swaps can
-        # leave one table compacted and another not; the leading
-        # compact-* entry is the authoritative marker
-        folded = segs and segs[0].startswith("compact-")
-        if folded and ct == 0:
-            # compacted by a pre-`compacted_through` version of this
-            # module: the fold boundary is unrecorded, so NO historical
-            # state is reconstructible — refuse rather than guess and
-            # silently serve the wrong corpus
-            raise ValueError(
-                f"{t!r} was compacted without a recorded boundary; "
-                "history is not reconstructible (re-run compaction with "
-                "this version to record it)"
-            )
-        # every segment name carries the batch number it was committed
-        # at (batch-K / del-K; compact-K folds everything before `ct`,
-        # and as_of < ct was already refused above), so the as-of state
-        # is a pure name filter — tables whose logs are SPARSE in batch
-        # numbers (tombstones exist only for delete batches; bucket/doc
-        # tables skip delete batches) time-travel correctly
-        out["segments"][t] = [
-            s for s in segs
-            if s.startswith("compact-") or _seg_no(s) < as_of
-        ]
-    out["n_batches"] = as_of
-    return out
-
-
-def _seg_no(seg: str) -> int:
-    """The commit batch number a segment name carries, right after the
-    kind prefix (``batch-7`` / ``del-7`` → 7; the merge table's
-    OCC-era writer-unique names ``seg-7-<token>`` → 7)."""
-    return int(seg.split("-", 2)[1])
-
-
 def vacuum_index(index_dir: str) -> list[str]:
-    """Delete ORPHAN segment dirs — leftovers of crashed/ticket-losing
-    increments and compactions whose best-effort deletes failed.
-    Anything not in the committed segment log is invisible to every
-    reader, so removal never changes any result. ``pairs/``: committed
-    outputs (``meta['pairs_segs']`` values, plus every legacy
-    ``batch=N``/``snapshot=N`` dir) are immutable results and are
-    untouched; OCC-era token-named dirs NOT in the committed map are a
-    ticket loser's stale results (computed against a superseded
+    """Sweep orphan segment dirs (``occlog.vacuum``), then the index's
+    own ``pairs/``: committed outputs (``meta['pairs_segs']`` values,
+    plus every legacy ``batch=N``/``snapshot=N`` dir) are immutable
+    results and stay; OCC-era token-named dirs NOT in the committed map
+    are a ticket loser's stale results (computed against a superseded
     snapshot — wrong to serve, not merely redundant) and are swept.
-    Do not vacuum while an increment is mid-flight, or its
-    not-yet-committed segments get swept. Returns the removed paths."""
+    Returns the removed paths."""
     import shutil
 
-    meta = _recover_meta(index_dir)
-    removed: list[str] = []
-    for table, segs in meta["segments"].items():
-        tdir = os.path.join(index_dir, table)
-        if not os.path.isdir(tdir):
-            continue
-        committed = set(segs)
-        for name in sorted(os.listdir(tdir)):
-            p = os.path.join(tdir, name)
-            if os.path.isdir(p) and name not in committed:
-                shutil.rmtree(p, ignore_errors=True)
-                removed.append(p)
+    removed = occlog.vacuum(index_dir, _apply_record)
     pdir = os.path.join(index_dir, _PAIRS)
     if os.path.isdir(pdir):
-        committed_pairs = set(meta.get("pairs_segs", {}).values())
+        committed_pairs = set(
+            _recover_meta(index_dir).get("pairs_segs", {}).values()
+        )
         for name in sorted(os.listdir(pdir)):
             p = os.path.join(pdir, name)
             if (
@@ -473,40 +371,10 @@ def index_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     return live.drop(_SHH) if _SHH in live.columns else live
 
 
-def _segment_paths(index_dir: str, table: str, meta: dict) -> list[str]:
-    """Absolute paths of ``table``'s COMMITTED segments (meta is the
-    commit log: uncommitted/orphaned dirs on disk are invisible)."""
-    return [
-        os.path.join(index_dir, table, seg)
-        for seg in meta["segments"][table]
-    ]
-
-
 def _read_table(
     spark: SparkSession, index_dir: str, table: str, meta: dict
 ) -> DataFrame:
-    return spark.read.parquet(*_segment_paths(index_dir, table, meta))
-
-
-def _write_segment(df: DataFrame, index_dir: str, table: str, seg: str) -> None:
-    """Write one per-batch segment dir. OVERWRITE mode on purpose: a
-    crashed increment leaves an orphan dir with this name, and the retry
-    must replace it wholesale (append would double the batch)."""
-    df.write.mode("overwrite").parquet(os.path.join(index_dir, table, seg))
-
-
-#: Analyzed-plan cache for the live corpus views (serving-session
-#: shape): a lookup loop re-reads the SAME committed segment set every
-#: request, and each ``spark.read.parquet`` pays file listing, footer
-#: schema reads, and plan analysis on the driver — pure latency at any
-#: scale (the corpus itself never moves; this caches the *plan*, not
-#: data). Keyed by (application, index, table, exact segment lists), so
-#: any commit — increment, takedown, compaction — changes the key and
-#: the stale entry simply ages out of the small LRU. DataFrames are
-#: immutable, so handing the same object to concurrent lookups is safe.
-_LIVE_PLAN_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_LIVE_PLAN_CACHE_MAX = 32
-_LIVE_PLAN_LOCK = threading.Lock()
+    return spark.read.parquet(*occlog.segment_paths(index_dir, table, meta))
 
 
 def _read_live(
@@ -518,56 +386,22 @@ def _read_live(
     never-deleted index); otherwise one anti-join against the tombstone
     id set, guarded-broadcast on the running delete count (a takedown
     set is tiny next to the corpus; a bulk purge past the threshold
-    degrades to a shuffle anti-join instead of OOM-ing the driver)."""
-    # committed segments are immutable by the commit-log doctrine — the
-    # exact segment lists in the key are what makes the cache sound.
-    # The dir mtimes are extra ENTRY-LEVEL defense (a swapped dir, a
-    # file added/removed out-of-band); they do NOT detect an in-place
-    # rewrite of an existing file's bytes (dir mtime only moves on
-    # entry add/remove — round-12 advice), which violates immutability
-    # and is undefined for cached and uncached readers alike. Remote
-    # (non-stat-able) index dirs cache on the segment lists alone,
-    # same contract (round-12 verdict item 7); a transient LOCAL stat
-    # failure instead degrades to an uncached read so the entry-level
-    # defense is never silently dropped for local dirs (round-13
-    # advice — the same rule as plancache.cached_parquet).
-    from mini_data_platform_spark.operators.plancache import _is_remote
+    degrades to a shuffle anti-join instead of OOM-ing the driver).
+    The analyzed plan is memoized on the committed segment and
+    tombstone paths (operators/plancache.py), so a serving loop pays
+    listing and analysis once per commit."""
+    from mini_data_platform_spark.operators.plancache import cached_plan
 
-    tomb_segs = tuple(meta["segments"].get(_TOMBSTONES, []))
-    if _is_remote(index_dir):
-        stamps: tuple = ("unstatable",)
-    else:
-        try:
-            stamps = tuple(
-                os.stat(p).st_mtime_ns
-                for p in _segment_paths(index_dir, table, meta)
-                + [
-                    os.path.join(index_dir, _TOMBSTONES, s)
-                    for s in tomb_segs
-                ]
-            )
-        except OSError:
-            return _build_live(spark, index_dir, table, meta)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(index_dir),
-        table,
-        tuple(meta["segments"][table]),
-        tomb_segs,
-        stamps,
-        meta.get("n_deleted", 0),
+    paths = occlog.segment_paths(index_dir, table, meta) + [
+        os.path.join(index_dir, _TOMBSTONES, s)
+        for s in meta["segments"].get(_TOMBSTONES, [])
+    ]
+    return cached_plan(
+        spark,
+        paths,
+        lambda: _build_live(spark, index_dir, table, meta),
+        tag=("live", os.path.abspath(index_dir), meta.get("n_deleted", 0)),
     )
-    with _LIVE_PLAN_LOCK:
-        hit = _LIVE_PLAN_CACHE.get(key)
-        if hit is not None:
-            _LIVE_PLAN_CACHE.move_to_end(key)
-            return hit
-    df = _build_live(spark, index_dir, table, meta)
-    with _LIVE_PLAN_LOCK:
-        _LIVE_PLAN_CACHE[key] = df
-        while len(_LIVE_PLAN_CACHE) > _LIVE_PLAN_CACHE_MAX:
-            _LIVE_PLAN_CACHE.popitem(last=False)
-    return df
 
 
 def _live_tombstones(
@@ -628,23 +462,11 @@ def _record_batch_id(meta: dict, batch_id: str | None, batch_no: int) -> None:
         meta.setdefault("batches", {})[batch_id] = batch_no
 
 
-# ------------------------------------------------ OCC commit log (r9)
-#
-# Multi-writer commits via the shared put-if-absent ticket protocol
-# (operators/occlog.py — lifted from the merge table, round-8 verdict
-# item 5): every committing operation (the three increments,
-# index_delete, compact_index) publishes a commit RECORD as
-# ``_commits/<version>.json``; meta.json demotes to a checkpoint that
-# ``_recover_meta`` rolls forward. Because an increment's OUTPUT depends
-# on the corpus snapshot it read (pairs vs the then-committed corpus —
-# unlike the merge table's order-insensitive latest-wins applies), a
-# loser does NOT re-commit its stale result: it RECOMPUTES against the
-# recovered snapshot and retries, which is exactly what keeps the
-# union-equals-recompute equivalence exact under concurrency. Segment
-# dirs and pairs dirs carry a writer-unique token so racers never
-# collide on a path; the loser's dirs are orphans for vacuum_index.
-
-_OCC_MAX_RETRIES = 8
+# Commits go through the shared ticket log (operators/occlog.py).
+# A ticket loser does NOT re-commit its stale result: an increment's
+# output depends on the corpus snapshot it read, so it recomputes
+# against the recovered snapshot, which keeps the union-equals-recompute
+# equivalence exact under concurrency.
 
 
 def _pairs_path(index_dir: str, meta: dict, batch_no: int) -> str:
@@ -692,61 +514,8 @@ def _apply_record(meta: dict, rec: dict) -> dict:
     return m
 
 
-def _checkpoint_meta(index_dir: str, meta: dict) -> None:
-    """Write the checkpoint, guarded against REGRESSING it (a slow
-    recoverer must not overwrite a newer checkpoint; tickets are the
-    source of truth, so the residual race is self-healing)."""
-    cur = _read_meta(index_dir)
-    if cur.get("version", cur["n_batches"]) <= meta["version"]:
-        _write_meta(index_dir, meta)
-
-
 def _recover_meta(index_dir: str) -> dict:
-    """Read the checkpoint and roll any unabsorbed tickets forward.
-    Indexes from before OCC have no ``version`` field — their version
-    is ``n_batches`` (every commit was a meta swap).
-
-    The roll-forward checkpoint is BEST-EFFORT (round-9 advice): this
-    runs on every READ path (lookups, index_docs, view_read), and a
-    read-only consumer — no write permission on the index dir — must
-    still be able to read. Tickets are the source of truth; a skipped
-    checkpoint only means the next recoverer replays a few more
-    records. Writers re-checkpoint on their own commits."""
-    from mini_data_platform_spark.operators import occlog
-
-    meta = _read_meta(index_dir)
-    meta["version"] = meta.get("version", meta["n_batches"])
-
-    def _best_effort_checkpoint(m: dict) -> None:
-        try:
-            _checkpoint_meta(index_dir, m)
-        except OSError:
-            pass  # read-only consumer; tickets remain authoritative
-
-    return occlog.roll_forward(
-        index_dir,
-        meta,
-        _apply_record,
-        _best_effort_checkpoint,
-    )
-
-
-def _try_ticket(index_dir: str, version: int, record: dict) -> bool:
-    from mini_data_platform_spark.operators import occlog
-
-    return occlog.try_ticket(index_dir, version, record)
-
-
-def _commit_or_none(index_dir: str, meta: dict, rec: dict) -> dict | None:
-    """Attempt to win ``meta['version']`` with ``rec``; on a win, apply
-    + checkpoint and return the advanced meta, else None (caller
-    recomputes against the recovered snapshot and retries)."""
-    rec = dict(rec, version=meta["version"])
-    if not _try_ticket(index_dir, meta["version"], rec):
-        return None
-    advanced = _apply_record(meta, rec)
-    _checkpoint_meta(index_dir, advanced)
-    return advanced
+    return occlog.recover(index_dir, _apply_record)
 
 
 def index_delete(
@@ -778,7 +547,7 @@ def index_delete(
 
     ids = None
     try:
-        for _ in range(_OCC_MAX_RETRIES):
+        for _ in range(occlog.MAX_RETRIES):
             meta = _recover_meta(index_dir)
             if _replayed_batch(meta, batch_id) is not None:
                 return meta
@@ -792,8 +561,8 @@ def index_delete(
                 )
                 n_del = ids.count()
             seg = f"del-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
-            _write_segment(ids, index_dir, _TOMBSTONES, seg)
-            committed = _commit_or_none(
+            occlog.write_segment(ids, index_dir, _TOMBSTONES, seg)
+            committed = occlog.commit(
                 index_dir,
                 meta,
                 {
@@ -803,11 +572,12 @@ def index_delete(
                     "n_del": n_del,
                     "batch_id": batch_id,
                 },
+                _apply_record,
             )
             if committed is not None:
                 return committed
         raise RuntimeError(
-            f"index_delete: lost {_OCC_MAX_RETRIES} commit races in a "
+            f"index_delete: lost {occlog.MAX_RETRIES} commit races in a "
             f"row at {index_dir} — pathological contention"
         )
     finally:
@@ -829,12 +599,12 @@ def neardup_index_build(
     """Create a near-dup index over ``docs`` at ``index_dir`` (must not
     already hold an index). Writes the band-bucket table and the doc text
     table as ``batch-0`` segments; records the LSH hyperparameters and
-    the committed-segment log in ``meta.json``. Returns the meta dict.
+    the committed-segment log in the checkpoint. Returns the meta dict.
 
     Build does NOT emit within-corpus pairs — run ``neardup_index_pairs``
     (or the batch ``near_dup_pairs``) over the initial corpus if those
     are needed (they are disjoint from every increment's output)."""
-    if os.path.exists(os.path.join(index_dir, _META)):
+    if occlog.exists(index_dir):
         raise ValueError(f"index already exists at {index_dir}")
     os.makedirs(index_dir, exist_ok=True)
     base = docs.select(
@@ -851,11 +621,11 @@ def neardup_index_build(
     # threads (guide §2.6; cached-block locking keeps the shared
     # upstream computed once), r15.
     _, _, n_docs = run_concurrently(
-        lambda: _write_segment(
+        lambda: occlog.write_segment(
             lsh_band_keys(sigs, "id", num_hashes, bands),
             index_dir, _BUCKETS, "batch-0",
         ),
-        lambda: _write_segment(
+        lambda: occlog.write_segment(
             base.join(shingle_hash_sets(shingled, "id"), "id"),
             index_dir, _DOCS, "batch-0",
         ),
@@ -875,7 +645,7 @@ def neardup_index_build(
         "n_batches": 1,
         "segments": {_BUCKETS: ["batch-0"], _DOCS: ["batch-0"]},
     }
-    _write_meta(index_dir, meta)
+    occlog.write_meta(index_dir, meta)
     return meta
 
 
@@ -1203,7 +973,7 @@ def neardup_index_increment(
     then COMMITS the batch to the index (new bucket/doc segments +
     atomic meta swap) so the next increment sees it.
 
-    All hyperparameters come from the index's ``meta.json`` (an index is
+    All hyperparameters come from the index's checkpoint (an index is
     only ever queried the way it was built). The result is materialized
     to ``pairs/batch=N/`` BEFORE the commit and returned as a parquet
     read: durable across restarts, and structurally incapable of seeing
@@ -1222,8 +992,7 @@ def neardup_index_increment(
     self-pairs which are filtered, but don't do that).
 
     MULTI-WRITER (round-9): the commit is an OCC ticket
-    (``_commits/<version>.json`` — the merge-table protocol via
-    operators/occlog.py). A loser does NOT re-commit its stale pairs —
+    (operators/occlog.py). A loser does NOT re-commit its stale pairs —
     they were computed against a corpus snapshot that now lacks the
     winner's batch, and committing them would silently drop
     (loser-batch × winner-batch) pairs — it RECOMPUTES against the
@@ -1235,7 +1004,7 @@ def neardup_index_increment(
     spark: SparkSession = new_docs.sparkSession
     batch = None
     try:
-        for _ in range(_OCC_MAX_RETRIES):
+        for _ in range(occlog.MAX_RETRIES):
             meta = _recover_meta(index_dir)
             replay = _replayed_batch(meta, batch_id)
             if replay is not None:
@@ -1265,10 +1034,10 @@ def neardup_index_increment(
                 lambda: verified.write.mode("overwrite").parquet(
                     pairs_path
                 ),
-                lambda: _write_segment(
+                lambda: occlog.write_segment(
                     bands_new, index_dir, _BUCKETS, seg
                 ),
-                lambda: _write_segment(
+                lambda: occlog.write_segment(
                     batch if hsets_new is None
                     else batch.join(hsets_new, "id"),
                     index_dir, _DOCS, seg,
@@ -1277,7 +1046,7 @@ def neardup_index_increment(
             for frame in pinned:
                 frame.unpersist(False)
 
-            committed = _commit_or_none(
+            committed = occlog.commit(
                 index_dir,
                 meta,
                 {
@@ -1288,6 +1057,7 @@ def neardup_index_increment(
                     "n_docs_add": n_new,
                     "batch_id": batch_id,
                 },
+                _apply_record,
             )
             if committed is not None:
                 out = spark.read.parquet(pairs_path)
@@ -1297,7 +1067,7 @@ def neardup_index_increment(
                     F.col("jaccard").alias("jaccard"),
                 )
         raise RuntimeError(
-            f"neardup_index_increment: lost {_OCC_MAX_RETRIES} commit "
+            f"neardup_index_increment: lost {occlog.MAX_RETRIES} commit "
             f"races in a row at {index_dir} — pathological contention"
         )
     finally:
@@ -1323,7 +1093,7 @@ def neardup_index_lookup(
     build cost by design; this one measures the serving shape.
 
     ``as_of`` looks up against the index as it stood after that many
-    committed batches (``_meta_as_of``) — reproduce yesterday's dedup
+    committed batches (``occlog.meta_as_of``) — reproduce yesterday's dedup
     decision, audit what an increment saw, or diff two index states.
 
     ``small_batch=True`` is the LATENCY contract (round-9 verdict
@@ -1336,7 +1106,7 @@ def neardup_index_lookup(
     stage. A mis-declared huge batch degrades to Spark's own broadcast
     limit error, never silence; committing increments keep the guarded
     path unconditionally."""
-    meta = _meta_as_of(_recover_meta(index_dir), as_of)
+    meta = occlog.meta_as_of(_recover_meta(index_dir), as_of)
     id_col, text_col = meta["id_col"], meta["text_col"]
     spark: SparkSession = new_docs.sparkSession
     batch = new_docs.select(
@@ -1408,7 +1178,7 @@ def exact_index_lookup(
     ``as_of`` time travel)."""
     from mini_data_platform_spark.functions.text import normalize_text
 
-    meta = _meta_as_of(_recover_meta(index_dir), as_of)
+    meta = occlog.meta_as_of(_recover_meta(index_dir), as_of)
     if meta.get("kind") != "exact":
         raise ValueError(f"{index_dir} is not an exact-dedup index")
     id_col, text_col = meta["id_col"], meta["text_col"]
@@ -1440,7 +1210,7 @@ def exact_index_build(
     hash+id only — corpus text is never stored or re-read here."""
     from mini_data_platform_spark.functions.text import normalize_text
 
-    if os.path.exists(os.path.join(index_dir, _META)):
+    if occlog.exists(index_dir):
         raise ValueError(f"index already exists at {index_dir}")
     os.makedirs(index_dir, exist_ok=True)
     hashed = docs.select(
@@ -1448,7 +1218,7 @@ def exact_index_build(
         F.col(id_col).alias("id"),
     ).persist()
     _, n = run_concurrently(  # write ∥ count (guide §2.6), r15
-        lambda: _write_segment(hashed, index_dir, _HASHES, "batch-0"),
+        lambda: occlog.write_segment(hashed, index_dir, _HASHES, "batch-0"),
         lambda: hashed.count(),
     )
     hashed.unpersist(False)
@@ -1460,7 +1230,7 @@ def exact_index_build(
         "n_batches": 1,
         "segments": {_HASHES: ["batch-0"]},
     }
-    _write_meta(index_dir, meta)
+    occlog.write_meta(index_dir, meta)
     return meta
 
 
@@ -1490,7 +1260,7 @@ def exact_index_increment(
     spark: SparkSession = new_docs.sparkSession
     batch = None
     try:
-        for _ in range(_OCC_MAX_RETRIES):
+        for _ in range(occlog.MAX_RETRIES):
             meta = _recover_meta(index_dir)
             if meta.get("kind") != "exact":
                 raise ValueError(f"{index_dir} is not an exact-dedup index")
@@ -1519,12 +1289,12 @@ def exact_index_increment(
                 lambda: resolved.write.mode("overwrite").parquet(
                     out_path
                 ),
-                lambda: _write_segment(
+                lambda: occlog.write_segment(
                     batch.select("content_hash", "id"),
                     index_dir, _HASHES, seg,
                 ),
             )
-            committed = _commit_or_none(
+            committed = occlog.commit(
                 index_dir,
                 meta,
                 {
@@ -1535,11 +1305,12 @@ def exact_index_increment(
                     "n_docs_add": n_new,
                     "batch_id": batch_id,
                 },
+                _apply_record,
             )
             if committed is not None:
                 return spark.read.parquet(out_path)
         raise RuntimeError(
-            f"exact_index_increment: lost {_OCC_MAX_RETRIES} commit "
+            f"exact_index_increment: lost {occlog.MAX_RETRIES} commit "
             f"races in a row at {index_dir} — pathological contention"
         )
     finally:
@@ -1565,7 +1336,7 @@ def embdup_index_build(
     """Create an embedding near-dup index: hyperplane-LSH bucket per
     vector (operators/similarity.lsh_bucket) + the vectors themselves
     (needed for exact-cosine verification, read candidate-bounded on
-    increment). The PLANES are frozen into ``meta.json`` — every future
+    increment). The PLANES are frozen into the checkpoint — every future
     batch buckets with the same planes, which is what makes incremental
     candidates ≡ full-recompute candidates (the same argument as the
     MinHash index: signatures from different hyperparameters are
@@ -1576,7 +1347,7 @@ def embdup_index_build(
         planes_from_corpus,
     )
 
-    if os.path.exists(os.path.join(index_dir, _META)):
+    if occlog.exists(index_dir):
         raise ValueError(f"index already exists at {index_dir}")
     os.makedirs(index_dir, exist_ok=True)
     if planes is None:
@@ -1587,11 +1358,11 @@ def embdup_index_build(
         l2_norm(F.col(vec_col)).alias("nrm"),
     ).persist()
     _, _, n = run_concurrently(  # independent actions (guide §2.6)
-        lambda: _write_segment(
+        lambda: occlog.write_segment(
             lsh_bucket(base, planes, "id", "vec").select("id", "bucket"),
             index_dir, _EBUCKETS, "batch-0",
         ),
-        lambda: _write_segment(base, index_dir, _EVECS, "batch-0"),
+        lambda: occlog.write_segment(base, index_dir, _EVECS, "batch-0"),
         lambda: base.count(),
     )
     base.unpersist(False)
@@ -1605,7 +1376,7 @@ def embdup_index_build(
         "n_batches": 1,
         "segments": {_EBUCKETS: ["batch-0"], _EVECS: ["batch-0"]},
     }
-    _write_meta(index_dir, meta)
+    occlog.write_meta(index_dir, meta)
     return meta
 
 
@@ -1788,7 +1559,7 @@ def embdup_index_lookup(
     jobs dropped, verification collapses to broadcast joins)."""
     from mini_data_platform_spark.functions.vectors import l2_norm
 
-    meta = _meta_as_of(_recover_meta(index_dir), as_of)
+    meta = occlog.meta_as_of(_recover_meta(index_dir), as_of)
     if meta.get("kind") != "embdup":
         raise ValueError(f"{index_dir} is not an embedding near-dup index")
     id_col, vec_col = meta["id_col"], meta["vec_col"]
@@ -1826,7 +1597,7 @@ def embdup_index_increment(
     spark: SparkSession = new_vecs.sparkSession
     batch = None
     try:
-        for _ in range(_OCC_MAX_RETRIES):
+        for _ in range(occlog.MAX_RETRIES):
             meta = _recover_meta(index_dir)
             if meta.get("kind") != "embdup":
                 raise ValueError(
@@ -1854,14 +1625,14 @@ def embdup_index_increment(
                 lambda: verified.write.mode("overwrite").parquet(
                     out_path
                 ),
-                lambda: _write_segment(
+                lambda: occlog.write_segment(
                     bucketed_new, index_dir, _EBUCKETS, seg
                 ),
-                lambda: _write_segment(batch, index_dir, _EVECS, seg),
+                lambda: occlog.write_segment(batch, index_dir, _EVECS, seg),
             )
             for f in pinned:
                 f.unpersist(False)
-            committed = _commit_or_none(
+            committed = occlog.commit(
                 index_dir,
                 meta,
                 {
@@ -1872,11 +1643,12 @@ def embdup_index_increment(
                     "n_docs_add": n_new,
                     "batch_id": batch_id,
                 },
+                _apply_record,
             )
             if committed is not None:
                 return spark.read.parquet(out_path)
         raise RuntimeError(
-            f"embdup_index_increment: lost {_OCC_MAX_RETRIES} commit "
+            f"embdup_index_increment: lost {occlog.MAX_RETRIES} commit "
             f"races in a row at {index_dir} — pathological contention"
         )
     finally:
@@ -1924,7 +1696,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict[str, int]:
     superseded: dict[str, list[str]] = {}
     for t in tables:
         old_segs = meta["segments"][t]
-        paths = _segment_paths(index_dir, t, meta)
+        paths = occlog.segment_paths(index_dir, t, meta)
         n_files = total = 0
         for p in paths:
             n, b = dir_parquet_stats(p)
@@ -1941,25 +1713,26 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict[str, int]:
         # dropped here — the erasure step of a takedown (index_delete
         # only hides; this removes the bytes from disk)
         df = _read_live(spark, index_dir, t, meta)
-        _write_segment(df.repartition(want), index_dir, t, new_seg)
+        occlog.write_segment(df.repartition(want), index_dir, t, new_seg)
         rewritten[t] = new_seg
         superseded[t] = [s for s in old_segs if s != new_seg]
     if not rewritten and not tomb_segs:
         return out
-    committed = _commit_or_none(
+    committed = occlog.commit(
         index_dir,
         meta,
         {
             "type": "compact",
             "tables": {t: [seg] for t, seg in rewritten.items()},
             # time-travel boundary: folded batches are no longer
-            # reconstructible (_meta_as_of refuses them)
+            # reconstructible (occlog.meta_as_of refuses them)
             "compacted_through": meta["n_batches"],
             # tombstones drop in the SAME record as the rewrites they
             # were purged by — never cleared while a table still holds
             # tombstoned rows
             "clear_tombstones": bool(tomb_segs),
         },
+        _apply_record,
     )
     if committed is None:
         for t, seg in rewritten.items():
@@ -2012,7 +1785,7 @@ def neardup_index_pairs(
     ``as_of`` restricts to the corpus after that many committed batches
     (the snapshot file is keyed by the as-of batch count, so snapshots
     of different eras coexist)."""
-    meta = _meta_as_of(_recover_meta(index_dir), as_of)
+    meta = occlog.meta_as_of(_recover_meta(index_dir), as_of)
     threshold, shingle_n = meta["threshold"], meta["shingle_n"]
     max_bucket = meta.get("max_bucket")
     buckets = _read_live(spark, index_dir, _BUCKETS, meta)

@@ -22,20 +22,13 @@ batches (the Z-set algebra — what a keyed UPSERT emits as
 delete-old/insert-new) for views whose measures all retract
 (sum/count; min/max do NOT without the base table and are refused).
 
-Storage = the commit-log layout of operators/incremental.py: per-batch
-parquet segment dirs under ``<view>/agg/<segment>/``, registered in
-``meta.json``'s ``segments`` list by one atomic ``os.replace`` swap.
-A crash between the segment write and the meta swap leaves an orphan
-dir readers never see, and a retried increment overwrites it — the same
-exactly-once contract, plus explicit ``batch_id`` replay protection
-(an already-committed batch id is a no-op, so an at-least-once
-orchestrator like the reference's Airflow retries can call blindly).
-MULTI-WRITER since round 9: commits are put-if-absent OCC tickets
-(operators/occlog.py — the merge-table protocol, shared with the
-dedup indexes), so two concurrent increments both land; a view PARTIAL
-derives from the delta alone, so a ticket loser re-commits it at the
-next version (snapshot mode re-merges). Compaction refuses a lost
-race.
+Storage = per-batch parquet segment dirs under ``<view>/agg/<segment>/``
+committed through the shared ticket log (operators/occlog.py), plus
+explicit ``batch_id`` replay protection (an already-committed batch id
+is a no-op, so an at-least-once orchestrator like the reference's
+Airflow retries can call blindly). A view PARTIAL derives from the
+delta alone, so a ticket loser re-commits it at the next version
+(snapshot mode re-merges); compaction refuses a lost race.
 Readers are unrestricted against DELTA increments (appends never touch
 existing segments; a reader's lazy plan over its pinned meta stays
 valid), but operations that DELETE superseded dirs — ``compact_view``
@@ -76,29 +69,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_data_platform_spark.operators.incremental import (
-    _OCC_MAX_RETRIES,
-    _meta_as_of,
-    _read_meta,
-    _write_meta,
-    _write_segment,
-    vacuum_index,
-)
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.plans._parity import DEC
 
 _AGG = "agg"
 _KINDS = {"sum", "count", "min", "max", "approx_distinct"}
 
 
-# ------------------------------------------------ OCC commit log (r9)
-#
-# Same multi-writer protocol as the dedup indexes (operators/occlog.py,
-# lifted from the merge table — r8 verdict item 5): commits are
-# put-if-absent tickets, meta.json is a rolled-forward checkpoint,
-# segment dirs carry writer-unique names. Because a view PARTIAL is
-# derived from the delta alone (never from the view state), a ticket
-# loser in delta mode re-commits the same partial at the next version;
-# snapshot mode re-merges against the recovered state per attempt.
+# Commits go through the shared ticket log (operators/occlog.py).
 
 
 def _apply_view_record(meta: dict, rec: dict) -> dict:
@@ -126,29 +104,8 @@ def _apply_view_record(meta: dict, rec: dict) -> dict:
     return m
 
 
-def _checkpoint_view_meta(view_dir: str, meta: dict) -> None:
-    cur = _read_meta(view_dir)
-    if cur.get("version", cur["n_batches"]) <= meta["version"]:
-        _write_meta(view_dir, meta)
-
-
 def _recover_view_meta(view_dir: str) -> dict:
-    from mini_data_platform_spark.operators import occlog
-
-    meta = _read_meta(view_dir)
-    meta["version"] = meta.get("version", meta["n_batches"])
-    return occlog.roll_forward(
-        view_dir,
-        meta,
-        _apply_view_record,
-        lambda m: _checkpoint_view_meta(view_dir, m),
-    )
-
-
-def _try_ticket(view_dir: str, version: int, record: dict) -> bool:
-    from mini_data_platform_spark.operators import occlog
-
-    return occlog.try_ticket(view_dir, version, record)
+    return occlog.recover(view_dir, _apply_view_record)
 
 
 def _star_counts(measures: dict[str, tuple[str, str]]) -> list[str]:
@@ -229,11 +186,11 @@ def view_build(
     """
     if mode not in ("delta", "snapshot"):
         raise ValueError(f"unknown mode {mode!r}")
-    if os.path.exists(os.path.join(view_dir, "meta.json")):
+    if occlog.exists(view_dir):
         raise ValueError(f"view already exists at {view_dir}")
     os.makedirs(view_dir, exist_ok=True)
     seg = "seg-0"
-    _write_segment(_partial_agg(df, keys, measures), view_dir, _AGG, seg)
+    occlog.write_segment(_partial_agg(df, keys, measures), view_dir, _AGG, seg)
     meta = {
         "keys": list(keys),
         "measures": {n: list(m) for n, m in measures.items()},
@@ -242,7 +199,7 @@ def view_build(
         "batches": [batch_id],
         "segments": {_AGG: [seg]},
     }
-    _write_meta(view_dir, meta)
+    occlog.write_meta(view_dir, meta)
     return meta
 
 
@@ -267,7 +224,7 @@ def _commit_partial(
     spark = part.sparkSession
     keys = meta["keys"]
     measures = {n: tuple(m) for n, m in meta["measures"].items()}
-    for _ in range(_OCC_MAX_RETRIES):
+    for _ in range(occlog.MAX_RETRIES):
         if bid in meta["batches"]:  # a racer replayed our batch id
             return meta
         seg = f"seg-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
@@ -279,10 +236,10 @@ def _commit_partial(
             if star:
                 # fully-deleted groups must not be rewritten forever
                 merged = merged.filter(F.col(star[0]) > 0)
-            _write_segment(merged, view_dir, _AGG, seg)
+            occlog.write_segment(merged, view_dir, _AGG, seg)
             superseded = [s for s in meta["segments"][_AGG] if s != seg]
         else:
-            _write_segment(part, view_dir, _AGG, seg)
+            occlog.write_segment(part, view_dir, _AGG, seg)
         if pre_commit is not None:
             # post-write validation (metrics observed DURING the write
             # — view_apply_changes' op guard rides the same job); a
@@ -301,17 +258,16 @@ def _commit_partial(
             "segment": seg,
             "batch_id": bid,
         }
-        if _try_ticket(view_dir, meta["version"], rec):
-            meta = _apply_view_record(meta, rec)
-            _checkpoint_view_meta(view_dir, meta)
+        out = occlog.commit(view_dir, meta, rec, _apply_view_record)
+        if out is not None:
             for s in superseded:
                 shutil.rmtree(
                     os.path.join(view_dir, _AGG, s), ignore_errors=True
                 )
-            return meta
+            return out
         meta = _recover_view_meta(view_dir)  # lost: fold the winner, retry
     raise RuntimeError(
-        f"view commit: lost {_OCC_MAX_RETRIES} races in a row at "
+        f"view commit: lost {occlog.MAX_RETRIES} races in a row at "
         f"{view_dir} — pathological contention"
     )
 
@@ -345,10 +301,7 @@ def _read_segments(
 ) -> DataFrame:
     from mini_data_platform_spark.operators.plancache import cached_parquet
 
-    paths = [
-        os.path.join(view_dir, _AGG, s) for s in meta["segments"][_AGG]
-    ]
-    return cached_parquet(spark, paths)
+    return cached_parquet(spark, occlog.segment_paths(view_dir, _AGG, meta))
 
 
 def view_read(
@@ -365,7 +318,7 @@ def view_read(
 
     ``as_of`` serves the view as of that many committed batches — free
     in delta mode (segments are per-batch partial states, history is a
-    log prefix; see incremental._meta_as_of). Snapshot mode consolidates
+    log prefix; see occlog.meta_as_of). Snapshot mode consolidates
     on every increment and therefore keeps no history."""
     meta = _recover_view_meta(view_dir)
     if as_of is not None:
@@ -374,7 +327,7 @@ def view_read(
                 "snapshot-mode views keep no history (each increment "
                 "consolidates); build with mode='delta' for time travel"
             )
-        meta = _meta_as_of(meta, as_of)
+        meta = occlog.meta_as_of(meta, as_of)
     keys = meta["keys"]
     measures = {n: tuple(m) for n, m in meta["measures"].items()}
     out = _merge_agg(_read_segments(spark, view_dir, meta), keys, measures)
@@ -551,7 +504,7 @@ def view_fold_many(
     ]
 
     def _writer(i: int):
-        return lambda: _write_segment(parts[i], view_dir, _AGG, segs[i])
+        return lambda: occlog.write_segment(parts[i], view_dir, _AGG, segs[i])
 
     committed = 0  # segments with a WON ticket are durable state —
     # cleanup on failure must only sweep the uncommitted tail
@@ -571,7 +524,7 @@ def view_fold_many(
                 "segment": seg,
                 "batch_id": bid,
             }
-            if not _try_ticket(view_dir, out["version"], rec):
+            if not occlog.try_ticket(view_dir, out["version"], rec):
                 raise RuntimeError(
                     f"another writer committed version {out['version']} "
                     f"on {view_dir} during a bulk fold — bulk folding "
@@ -579,7 +532,7 @@ def view_fold_many(
                 )
             committed = i + 1
             out = _apply_view_record(out, rec)
-        _checkpoint_view_meta(view_dir, out)
+        occlog.checkpoint(view_dir, out)
         return out
     except Exception:
         for seg in segs[committed:]:
@@ -685,7 +638,7 @@ def minmax_view_build(
         mode=mode, batch_id=batch_id,
     )
     meta["minmax_value"] = value_col
-    _write_meta(view_dir, meta)
+    occlog.write_meta(view_dir, meta)
     return meta
 
 
@@ -754,7 +707,7 @@ def distinct_view_build(
         mode=mode, batch_id=batch_id,
     )
     meta["distinct_value"] = value_col
-    _write_meta(view_dir, meta)
+    occlog.write_meta(view_dir, meta)
     return meta
 
 
@@ -819,7 +772,7 @@ def histogram_view_build(
     )
     meta["histogram_value"] = value_col
     meta["histogram_width"] = float(width)
-    _write_meta(view_dir, meta)
+    occlog.write_meta(view_dir, meta)
     return meta
 
 
@@ -970,7 +923,7 @@ def compact_view(spark: SparkSession, view_dir: str) -> dict:
     old = list(meta["segments"][_AGG])
     merged = _merge_agg(_read_segments(spark, view_dir, meta), keys, measures)
     seg = f"compact-{meta['n_batches']}-{uuid.uuid4().hex[:8]}"
-    _write_segment(merged, view_dir, _AGG, seg)
+    occlog.write_segment(merged, view_dir, _AGG, seg)
     rec = {
         "type": "compact",
         "version": meta["version"],
@@ -978,15 +931,14 @@ def compact_view(spark: SparkSession, view_dir: str) -> dict:
         # time-travel boundary, same as compact_index
         "compacted_through": meta["n_batches"],
     }
-    if not _try_ticket(view_dir, meta["version"], rec):
+    meta = occlog.commit(view_dir, meta, rec, _apply_view_record)
+    if meta is None:
         shutil.rmtree(os.path.join(view_dir, _AGG, seg), ignore_errors=True)
         raise RuntimeError(
             "compact_view: a concurrent commit landed during "
             "compaction; the rewrite is stale — re-run to compact the "
             "advanced view"
         )
-    meta = _apply_view_record(meta, rec)
-    _checkpoint_view_meta(view_dir, meta)
     for s in old:
         if s != seg:
             shutil.rmtree(os.path.join(view_dir, _AGG, s), ignore_errors=True)
@@ -994,6 +946,5 @@ def compact_view(spark: SparkSession, view_dir: str) -> dict:
 
 
 def vacuum_view(view_dir: str) -> list[str]:
-    """Delete orphan (uncommitted) segment dirs — the view shares the
-    index commit-log layout, so this is incremental.vacuum_index."""
-    return vacuum_index(view_dir)
+    """Delete orphan (uncommitted) segment dirs — ``occlog.vacuum``."""
+    return occlog.vacuum(view_dir, _apply_view_record)

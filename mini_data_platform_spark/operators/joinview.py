@@ -32,7 +32,7 @@ batch-sized by construction.
 ``join_view_build`` / ``join_view_refresh`` close the loop: a maintained
 aggregate view over the join output whose refresh cursor is DERIVED from
 the last committed ``join-l0-l1-r0-r1`` batch id — the apply and the
-cursor advance are one atomic meta swap, so a crashed refresh retries
+cursor advance are one commit record, so a crashed refresh retries
 into the replay guard, exactly-once with no separate cursor state.
 Measures are restricted to the retractable algebra (sum/count), the same
 contract ``view_apply_changes`` enforces; min/max over a join composes
@@ -47,11 +47,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_data_platform_spark.operators.incremental import (
-    _read_meta,
-    _write_meta,
-)
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.operators.mergetable import (
+    _recover_meta,
     table_changes_zset,
     table_lookup,
     table_read,
@@ -65,13 +63,6 @@ from mini_data_platform_spark.operators.resources import (
 )
 
 _OP = "_op"
-
-
-def _table_meta(table_dir: str) -> dict:
-    meta = _read_meta(table_dir)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
-    return meta
 
 
 def _snapshot_for(
@@ -138,7 +129,7 @@ def join_changes_zset(
 
     The returned plan carries persisted probe/changed-key frames —
     ``release_plan`` after the consuming action (operator contract)."""
-    lmeta, rmeta = _table_meta(left_dir), _table_meta(right_dir)
+    lmeta, rmeta = _recover_meta(left_dir), _recover_meta(right_dir)
     n_l, n_r = lmeta["n_batches"], rmeta["n_batches"]
     as_of_left = n_l if as_of_left is None else as_of_left
     as_of_right = n_r if as_of_right is None else as_of_right
@@ -238,21 +229,21 @@ def join_view_build(
         )
     empty = join_changes_zset(
         spark, left_dir, right_dir, on,
-        _table_meta(left_dir)["n_batches"],
-        _table_meta(right_dir)["n_batches"],
+        _recover_meta(left_dir)["n_batches"],
+        _recover_meta(right_dir)["n_batches"],
     ).drop(_OP)
     meta = view_build(empty, view_dir, keys, measures)
     meta["join_source"] = {
         "left": left_dir, "right": right_dir, "on": list(on)
     }
-    _write_meta(view_dir, meta)
+    occlog.write_meta(view_dir, meta)
     return meta
 
 
 def _cursors(meta: dict) -> tuple[int, int]:
     """Refresh cursors DERIVED from the last committed join batch id —
     the id encodes its window, so the apply and the cursor advance are
-    the same atomic meta swap (a crashed refresh retries into the
+    the same commit record (a crashed refresh retries into the
     replay guard; nothing can double-apply or skip)."""
     last = next(
         (b for b in reversed(meta["batches"]) if b.startswith("join-")),
@@ -269,15 +260,18 @@ def join_view_refresh(spark: SparkSession, view_dir: str) -> dict:
     join delta since the last committed window and fold it in as one
     change batch. A no-op when neither table advanced. O(delta +
     candidate log rows), never a base-table rescan."""
-    from mini_data_platform_spark.operators.ivm import view_apply_changes
+    from mini_data_platform_spark.operators.ivm import (
+        _recover_view_meta,
+        view_apply_changes,
+    )
 
-    meta = _read_meta(view_dir)
+    meta = _recover_view_meta(view_dir)
     src = meta.get("join_source")
     if not src:
         raise ValueError(f"{view_dir} is not a join view")
     l0, r0 = _cursors(meta)
-    n_l = _table_meta(src["left"])["n_batches"]
-    n_r = _table_meta(src["right"])["n_batches"]
+    n_l = _recover_meta(src["left"])["n_batches"]
+    n_r = _recover_meta(src["right"])["n_batches"]
     if (l0, r0) == (n_l, n_r):
         return meta
     zset = join_changes_zset(

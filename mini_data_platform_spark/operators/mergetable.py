@@ -5,9 +5,9 @@ The reference maintains keyed state in Postgres via staging+MERGE
 keyed table fits an OLTP store; a 100 TB lakehouse needs the SAME
 latest-wins-per-key semantics on object storage. This module is that
 primitive — the Delta ``MERGE INTO`` / Hudi merge-on-read table — built
-on the commit-log segment layout that operators/incremental.py and
-operators/ivm.py already use (per-batch parquet segment dirs registered
-in ``meta.json`` by one atomic ``os.replace`` swap):
+on the segment-store commit log it shares with operators/incremental.py
+and operators/ivm.py (per-batch parquet segment dirs committed through
+operators/occlog.py):
 
 - ``table_apply`` appends a batch of ``_op``-tagged rows (``'u'``
   upsert / ``'d'`` delete) as ONE O(batch) segment write — the table is
@@ -31,7 +31,7 @@ in ``meta.json`` by one atomic ``os.replace`` swap):
   raise (the Delta/Iceberg vacuum-vs-time-travel trade, stated).
 - Time travel: ``as_of=k`` reads the state after the first ``k``
   committed batches — a segment-list prefix, zero data copies
-  (``incremental._meta_as_of``).
+  (``occlog.meta_as_of``).
 
 Determinism: each batch must be key-unique (validated by default with
 one O(batch) aggregate) — the winner per key is then totally ordered by
@@ -39,14 +39,12 @@ one O(batch) aggregate) — the winner per key is then totally ordered by
 same state; that is what lets a DuckDB CASE/anti-join twin hash-match
 the declared query (``orders_merge_table``).
 
-MULTI-WRITER SAFE (unlike the index/view stores, which keep the
-single-writer discipline): commits serialize through put-if-absent
-tickets — the Delta Lake optimistic-concurrency protocol reduced to
-plain POSIX (see the OCC block below). Concurrent appliers never drop
-each other's commits; compaction refuses rather than stomps. Reader
-caveats remain: delta appends never invalidate in-flight readers, but
-``compact_table``'s best-effort deletes can — run compaction in a
-maintenance window or lean on object-store delayed deletion.
+MULTI-WRITER SAFE through the shared ticket log (operators/occlog.py):
+concurrent appliers never drop each other's commits; compaction refuses
+rather than stomps. Reader caveat: delta appends never invalidate
+in-flight readers, but ``compact_table``'s best-effort deletes can — run
+compaction in a maintenance window or lean on object-store delayed
+deletion.
 
 Scale: writes are O(batch) always. Reads shuffle live segment rows once
 (partial-agg combined); keep the log short with ``compact_table``.
@@ -60,14 +58,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_data_platform_spark.operators.incremental import (
-    _meta_as_of,
-    _read_meta,
-    _segment_paths,
-    _write_meta,
-    _write_segment,
-    vacuum_index,
-)
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.operators.resources import (
     attach_plan,
     bounded_rows,
@@ -85,80 +76,14 @@ _SEQ = "_seq"
 #: the scan as IN literals (see table_lookup)
 LOOKUP_PUSHDOWN_MAX_KEYS = 1000
 
-#: commit-ticket directory (optimistic concurrency — see _try_ticket)
-_COMMITS = "_commits"
-
 
 def vacuum_table(table_dir: str) -> list[str]:
     """Sweep orphan segment dirs (crashed/lost-race applies, failed
-    compaction deletes) — invisible to readers, so removal never changes
-    results. Folds outstanding commit tickets into the meta checkpoint
-    FIRST: a ticketed-but-not-yet-checkpointed segment is committed
-    state, not an orphan, and must never be swept. Do not vacuum while
-    a writer is mid-commit (the standard vacuum discipline)."""
-    _recover_meta(table_dir)
-    return vacuum_index(table_dir)
+    compaction deletes) — see ``occlog.vacuum``."""
+    return occlog.vacuum(table_dir, _apply_record)
 
 
-# ------------------------------------------------------------------ OCC
-#
-# Multi-writer commits via PUT-IF-ABSENT tickets — the Delta Lake
-# protocol reduced to plain POSIX. The single-writer caveat the other
-# commit-log stores carry ("a read-modify-write meta swap can drop a
-# concurrent commit") is closed HERE, on the merge table, because this
-# is the store several pipelines genuinely write at once (CDC appliers,
-# streaming epochs, backfills):
-#
-# - The COMMIT LOG is the sequence of records ``_commits/<version>.json``.
-#   A writer commits version v by atomically creating that file
-#   (``os.link`` of a fully-written temp file — creation is
-#   put-if-absent AND the content is complete when it appears; on object
-#   storage substitute the store's conditional put). First writer wins;
-#   the loser re-reads, folds the winner's record, and retries with the
-#   next version.
-# - ``meta.json`` demotes to a CHECKPOINT: `_recover_meta` rolls any
-#   tickets the checkpoint hasn't absorbed forward (idempotently — a
-#   record replays to the same meta), so a winner crashing between its
-#   ticket and the checkpoint write loses nothing: the next
-#   reader/writer completes the roll-forward. Every mergetable entry
-#   point reads through `_recover_meta`.
-# - Segment dirs carry a WRITER-UNIQUE suffix (``seg-<seq>-<token>``),
-#   written BEFORE the ticket: two racing appliers never collide on a
-#   directory, the loser's dir is an invisible orphan (swept by
-#   ``vacuum_table``), and a committed record always points at a fully
-#   written segment.
-# - Records are tiny (~200 B) and are retained indefinitely — they ARE
-#   the log; prune below ``compacted_through`` only after a retention
-#   window (the Delta log-retention pattern).
-#
-# Linearization: to win version v a writer must have folded every record
-# < v into its view, so apply seqs are gapless and unique, and
-# compaction serializes against concurrent applies (its ticket loses if
-# an apply committed after its read — it raises rather than stomping).
-
-
-def _ticket_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, _COMMITS, f"{version:012d}.json")
-
-
-def _try_ticket(table_dir: str, version: int, record: dict) -> bool:
-    """Atomically publish ``record`` as commit ``version``. True iff
-    this writer won (the ticket file did not exist)."""
-    import json
-    import uuid
-
-    cdir = os.path.join(table_dir, _COMMITS)
-    os.makedirs(cdir, exist_ok=True)
-    tmp = os.path.join(cdir, f".tmp-{os.getpid()}-{uuid.uuid4().hex}")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(record, f)
-    try:
-        os.link(tmp, _ticket_path(table_dir, version))
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
+# Commits go through the shared ticket log (operators/occlog.py).
 
 
 def _apply_record(meta: dict, rec: dict) -> dict:
@@ -197,34 +122,10 @@ def _apply_record(meta: dict, rec: dict) -> dict:
 
 
 def _recover_meta(table_dir: str) -> dict:
-    """Read the checkpoint and roll forward any tickets it hasn't
-    absorbed. Tables from before OCC have no ``version`` field — their
-    version is ``n_batches`` (every commit was an apply)."""
-    import json
-
-    meta = _read_meta(table_dir)
-    v = meta.get("version", meta["n_batches"])
-    meta["version"] = v
-    rolled = False
-    while os.path.exists(_ticket_path(table_dir, v)):
-        with open(_ticket_path(table_dir, v), encoding="utf-8") as f:
-            rec = json.load(f)
-        meta = _apply_record(meta, rec)
-        v = meta["version"]
-        rolled = True
-    if rolled:
-        _checkpoint_meta(table_dir, meta)
+    meta = occlog.recover(table_dir, _apply_record)
+    if meta.get("kind") != "mergetable":
+        raise ValueError(f"{table_dir} is not a merge table")
     return meta
-
-
-def _checkpoint_meta(table_dir: str, meta: dict) -> None:
-    """Write the checkpoint, guarded against REGRESSING it (a slow
-    recoverer must not overwrite a newer checkpoint with an older view;
-    the residual check-then-replace race is harmless because tickets
-    are the source of truth and the next `_recover_meta` re-converges)."""
-    cur = _read_meta(table_dir)
-    if cur.get("version", cur["n_batches"]) <= meta["version"]:
-        _write_meta(table_dir, meta)
 
 
 #: sentinel prefix for validation guards embedded in the WRITE plan —
@@ -279,13 +180,13 @@ def _guarded(col: F.Column, bad: F.Column, msg: str) -> F.Column:
 def _write_segment_checked(
     df: DataFrame, table_dir: str, seg: str
 ) -> None:
-    """``_write_segment`` with embedded-guard translation: a validation
+    """``occlog.write_segment`` with embedded-guard translation: a validation
     raise from inside the write surfaces as the contract ValueError,
     and the partially-written (never-committed) segment dir is swept."""
     import shutil
 
     try:
-        _write_segment(df, table_dir, _ROWS, seg)
+        occlog.write_segment(df, table_dir, _ROWS, seg)
     except Exception as exc:  # noqa: BLE001 — translate, clean, re-raise
         shutil.rmtree(
             os.path.join(table_dir, _ROWS, seg), ignore_errors=True
@@ -401,7 +302,7 @@ def _read_rows(
     Compaction rewrites every row under the full schema and clears the
     flag."""
     if paths is None:
-        paths = _segment_paths(table_dir, _ROWS, meta)
+        paths = occlog.segment_paths(table_dir, _ROWS, meta)
     if not meta.get("evolved"):
         # committed segments are immutable → the analyzed plan is
         # reusable across the many reads a refresh/apply loop makes of
@@ -432,7 +333,7 @@ def table_build(
     validate: bool = True,
 ) -> dict:
     """Create the table from its initial key-unique rows (all upserts)."""
-    if os.path.exists(os.path.join(table_dir, "meta.json")):
+    if occlog.exists(table_dir):
         raise ValueError(f"table already exists at {table_dir}")
     reserved = {_OP, _SEQ} & set(df.columns)
     if reserved:
@@ -462,7 +363,7 @@ def table_build(
         "segments": {_ROWS: ["seg-0"]},
         "version": 1,
     }
-    _write_meta(table_dir, meta)
+    occlog.write_meta(table_dir, meta)
     return meta
 
 
@@ -488,7 +389,7 @@ def table_apply(
     ``evolve=True`` lets the batch ADD data columns (see
     :func:`_conform`); extra columns are an error otherwise.
 
-    MULTI-WRITER SAFE (the OCC block above): concurrent appliers
+    MULTI-WRITER SAFE (operators/occlog.py): concurrent appliers
     serialize through put-if-absent commit tickets — the loser folds
     the winner's commit and retries with the next sequence number
     (re-conforming and re-validating against the possibly-evolved
@@ -507,10 +408,8 @@ def table_apply(
     import shutil
     import uuid
 
-    for _ in range(32):
+    for _ in range(occlog.MAX_RETRIES):
         meta = _recover_meta(table_dir)
-        if meta.get("kind") != "mergetable":
-            raise ValueError(f"{table_dir} is not a merge table")
         # caller-less bids are generated collision-free (multi-writer
         # OCC: two concurrent default-bid writers must not alias each
         # other); replay protection is opt-in via a caller batch_id
@@ -555,17 +454,16 @@ def table_apply(
             }
         # COMMIT: the ticket makes the segment visible; the checkpoint
         # write after it is a convenience (recovery replays the ticket)
-        if _try_ticket(table_dir, meta["version"], rec):
-            out = _apply_record(meta, rec)
-            _checkpoint_meta(table_dir, out)
+        out = occlog.commit(table_dir, meta, rec, _apply_record)
+        if out is not None:
             return out
         # lost the race: drop the orphan segment, fold the winner, retry
         shutil.rmtree(
             os.path.join(table_dir, _ROWS, seg), ignore_errors=True
         )
     raise RuntimeError(
-        "lost the commit race 32 times — writer contention on "
-        f"{table_dir} is pathological; serialize the callers"
+        f"lost the commit race {occlog.MAX_RETRIES} times — writer "
+        f"contention on {table_dir} is pathological; serialize the callers"
     )
 
 
@@ -600,8 +498,6 @@ def table_apply_many(
     if not batches:
         return _recover_meta(table_dir)
     meta = _recover_meta(table_dir)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
     if batch_ids is None:
         batch_ids = [
             f"batch-{meta['n_batches'] + i}-{uuid.uuid4().hex[:8]}"
@@ -649,14 +545,14 @@ def table_apply_many(
                 "segment": seg,
                 "batch_id": bid,
             }
-            if not _try_ticket(table_dir, out["version"], rec):
+            if not occlog.try_ticket(table_dir, out["version"], rec):
                 raise ConcurrentCommit(
                     f"another writer committed version {out['version']} "
                     f"on {table_dir} during a bulk load"
                 )
             committed = i + 1
             out = _apply_record(out, rec)
-        _checkpoint_meta(table_dir, out)
+        occlog.checkpoint(table_dir, out)
         return out
     except Exception:
         for seg in segs[committed:]:
@@ -726,9 +622,7 @@ def table_read(
     scan speed (no resolve aggregate — see ``_is_resolved_log``);
     historical reads serve the schema AS OF the snapshot
     (``_with_asof_columns``)."""
-    meta = _meta_as_of(_recover_meta(table_dir), as_of)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
+    meta = occlog.meta_as_of(_recover_meta(table_dir), as_of)
     meta = _with_asof_columns(meta, as_of)
     if _is_resolved_log(meta):
         return _read_rows(spark, table_dir, meta).drop(_OP, _SEQ)
@@ -752,9 +646,7 @@ def table_changes(
     folded by compaction is gone: ``since`` older than
     ``compacted_through`` raises rather than silently under-delivering
     changes."""
-    meta = _meta_as_of(_recover_meta(table_dir), as_of)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
+    meta = occlog.meta_as_of(_recover_meta(table_dir), as_of)
     paths = _changed_paths(table_dir, meta, since)
     if not paths:
         return (
@@ -816,10 +708,8 @@ def table_lookup(
     (resources.bounded_rows) instead of the old count-then-collect pair
     (guide §1.2: one action where two ran)."""
     meta = _with_asof_columns(
-        _meta_as_of(_recover_meta(table_dir), as_of), as_of
+        occlog.meta_as_of(_recover_meta(table_dir), as_of), as_of
     )
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
     keys = meta["keys"]
     if sorted(probes.columns) != sorted(keys):
         raise ValueError(
@@ -909,8 +799,6 @@ def table_merge_into(
     whole merge re-derives from the new state (serializable MERGE, not
     last-writer-wins over a phantom)."""
     meta = _recover_meta(table_dir)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
     # replay protection is opt-in via a caller batch_id; a caller-less
     # merge gets a collision-free id from table_apply (multi-writer OCC)
     if batch_id is not None and batch_id in meta["batches"]:
@@ -1053,9 +941,7 @@ def table_changes_zset(
     from mini_data_platform_spark.sinks.compact import dir_parquet_rows
 
     meta_full = _recover_meta(table_dir)
-    if meta_full.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
-    meta_new = _meta_as_of(meta_full, as_of)
+    meta_new = occlog.meta_as_of(meta_full, as_of)
     paths = _changed_paths(table_dir, meta_new, since)
     keys = meta_full["keys"]
     cols = meta_full["columns"]
@@ -1148,12 +1034,10 @@ def compact_table(
     )
 
     meta = _recover_meta(table_dir)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
     old_segs = meta["segments"][_ROWS]
     if len(old_segs) == 1 and old_segs[0].startswith("compact-"):
         return meta
-    paths = _segment_paths(table_dir, _ROWS, meta)
+    paths = occlog.segment_paths(table_dir, _ROWS, meta)
     total = sum(dir_parquet_stats(p)[1] for p in paths)
     new_seg = f"compact-{meta['n_batches']}"
     live = _resolved(spark, table_dir, meta).where(
@@ -1181,7 +1065,7 @@ def compact_table(
             ).sortWithinPartitions(*order_by)
         else:
             clustered = live.repartition(want)
-        _write_segment(clustered, table_dir, _ROWS, new_seg)
+        occlog.write_segment(clustered, table_dir, _ROWS, new_seg)
     finally:
         live.unpersist(False)
     # COMMIT through the OCC ticket: if an apply landed between our
@@ -1193,17 +1077,16 @@ def compact_table(
         "segment": new_seg,
         "compacted_through": meta["n_batches"],
     }
-    if not _try_ticket(table_dir, meta["version"], rec):
+    # the rewrite carries the full current schema: the record clears
+    # the per-segment union-by-name read flag
+    meta = occlog.commit(table_dir, meta, rec, _apply_record)
+    if meta is None:
         shutil.rmtree(
             os.path.join(table_dir, _ROWS, new_seg), ignore_errors=True
         )
         raise RuntimeError(
             f"a commit landed on {table_dir} during compaction; re-run"
         )
-    meta = _apply_record(meta, rec)
-    # the rewrite carries the full current schema: per-segment
-    # union-by-name reads are no longer needed (handled by the record)
-    _checkpoint_meta(table_dir, meta)
     for seg in old_segs:
         if seg != new_seg:
             shutil.rmtree(

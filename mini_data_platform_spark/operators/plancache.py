@@ -25,20 +25,21 @@ under the same contract instead of silently degrading to an uncached
 read (round-12 verdict item 7).
 
 This caches the PLAN, not data — executors still read parquet; nothing
-about memory or scale changes. operators/incremental.py carries its own
-equivalent cache at the live-view level (tombstone anti-join included);
-this is the shared primitive for the simpler single-table readers."""
+about memory or scale changes. ``cached_plan`` memoizes any plan built
+over a path list (the indexes' live view adds a tombstone anti-join);
+``cached_parquet`` is the plain multi-path scan."""
 
 from __future__ import annotations
 
 import os
 import threading
 from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_CACHE_MAX = 64
+_CACHE_MAX = 96
 _LOCK = threading.Lock()
 
 #: stamp sentinel for path lists that cannot be stat'd locally (remote
@@ -55,8 +56,13 @@ def _is_remote(path: str) -> bool:
     return "://" in str(path)
 
 
-def cached_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """``spark.read.parquet(*paths)``, memoized on the exact path list
+def cached_plan(
+    spark: SparkSession,
+    paths: list[str],
+    build: Callable[[], DataFrame],
+    tag: tuple = (),
+) -> DataFrame:
+    """``build()``, memoized on ``tag`` + the exact path list it reads
     (sound per the committed-segment contract) + per-path mtimes where
     the paths are locally stat-able (extra entry-level defense)."""
     if any(_is_remote(p) for p in paths):
@@ -70,16 +76,21 @@ def cached_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
             # sentinel would cache the plan while silently dropping the
             # mtime entry-level defense local dirs are entitled to
             # (round-13 advice); remote stores take the sentinel above
-            return spark.read.parquet(*paths)
-    key = (spark.sparkContext.applicationId, tuple(paths), stamps)
+            return build()
+    key = (spark.sparkContext.applicationId, tag, tuple(paths), stamps)
     with _LOCK:
         hit = _CACHE.get(key)
         if hit is not None:
             _CACHE.move_to_end(key)
             return hit
-    df = spark.read.parquet(*paths)
+    df = build()
     with _LOCK:
         _CACHE[key] = df
         while len(_CACHE) > _CACHE_MAX:
             _CACHE.popitem(last=False)
     return df
+
+
+def cached_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)`` through :func:`cached_plan`."""
+    return cached_plan(spark, paths, lambda: spark.read.parquet(*paths))

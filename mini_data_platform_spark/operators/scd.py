@@ -41,8 +41,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from mini_data_platform_spark.operators.asof import asof_join
-from mini_data_platform_spark.operators.mergetable import table_changes
-from mini_data_platform_spark.operators.incremental import _read_meta
+from mini_data_platform_spark.operators.mergetable import (
+    _recover_meta,
+    table_changes,
+)
 
 _OP, _SEQ = "_op", "_seq"
 
@@ -58,9 +60,7 @@ def scd2_history(
     by key ordered by ``_seq`` — per-batch key-uniqueness makes that a
     total order per key); the log is read once, deletes contribute
     interval bounds and no output rows."""
-    meta = _read_meta(table_dir)
-    if meta.get("kind") != "mergetable":
-        raise ValueError(f"{table_dir} is not a merge table")
+    meta = _recover_meta(table_dir)
     if meta.get("compacted_through", 0) > 0:
         raise ValueError(
             "history before batch "

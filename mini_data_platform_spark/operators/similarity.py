@@ -80,7 +80,7 @@ def lsh_bucket(
     # DOUBLE) round-trips each FINITE plane component exactly (repr is
     # shortest-exact), so the parsed tree is value-identical to
     # F.lit(float(x)). Non-finite components (possible only through a
-    # hand-edited frozen meta.json — planes_from_corpus reads real
+    # hand-edited index checkpoint — planes_from_corpus reads real
     # vectors) are rejected loudly: the string cast would yield NULL
     # ('inf'/'nan' don't parse as DOUBLE) and silently flip that
     # plane's bit to '0', a corrupted-index symptom that must not look

@@ -23,7 +23,9 @@ crash-safety (a file is archived only after its batch commits).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -33,6 +35,18 @@ from mini_data_platform_spark.registry import SALES_SPEC, TableSpec, clean_colum
 from mini_data_platform_spark.sinks.audit import AuditLog
 
 SRC_FILE_COL = "_src_file"
+
+
+def _listed_path(uri: str, incoming_dir: str) -> str:
+    """The audit key of a file that ``input_file_name()`` names by URI:
+    a local ``file:`` URI becomes the path ``list_objects(incoming_dir)``
+    returns (the batch runner's key), so both modes log one row per
+    file. Other schemes are returned unchanged."""
+    if urlparse(uri).scheme != "file":
+        return uri
+    local = unquote(urlparse(uri).path)
+    rel = os.path.relpath(local, os.path.abspath(incoming_dir))
+    return os.path.join(incoming_dir, rel)
 
 
 def start_streaming_ingest(
@@ -70,7 +84,8 @@ def start_streaming_ingest(
     stream = reader.csv(incoming_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        # the file name is the audit key and the cross-file precedence
+        # the file URI is the cross-file precedence; its listed path is
+        # the audit key
         cleaned = clean_columns(
             batch.withColumn(SRC_FILE_COL, F.input_file_name()),
             spec,
@@ -92,7 +107,8 @@ def start_streaming_ingest(
         if audit is not None:
             for row in counts:
                 audit.log_file_status(
-                    row[SRC_FILE_COL], incoming_dir,
+                    _listed_path(row[SRC_FILE_COL], incoming_dir),
+                    incoming_dir,
                     "loaded", rows=int(row["n"]),
                 )
 

@@ -75,10 +75,10 @@ def export_index_seed(spark, index_dir: str, seed_dir: str) -> dict:
     (same rule as the index itself)."""
     from mini_data_platform_spark.operators.incremental import (
         _read_live,
-        _read_meta,
+        _recover_meta,
     )
 
-    meta = _read_meta(index_dir)
+    meta = _recover_meta(index_dir)
     # _read_live, not _read_table: tombstoned (deleted/taken-down) corpus
     # docs must not seed the stream's bucket state
     buckets = _read_live(spark, index_dir, "buckets", meta)

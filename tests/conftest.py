@@ -1,8 +1,10 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, not whichever one another path provides
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mini_data_platform_spark.session import get_spark
 

@@ -20,8 +20,9 @@ from mini_data_platform_spark.operators.dedup_fuzzy import (
 from mini_data_platform_spark.operators.incremental import (
     neardup_index_build,
     neardup_index_increment,
-    _read_meta,
 )
+from mini_data_platform_spark.operators.occlog import _read_meta
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.operators import resources
 from mini_data_platform_spark.operators.resources import release_plan
 
@@ -161,7 +162,9 @@ class TestIndexReuse:
         bands_new = lsh_band_keys(sigs_new, "id", NUM_HASHES, BANDS)
         from mini_data_platform_spark.operators.incremental import (
             _read_table,
-            _segment_paths,
+        )
+        from mini_data_platform_spark.operators.occlog import (
+            segment_paths as _segment_paths,
         )
 
         meta = _read_meta(tmpdir)
@@ -653,7 +656,7 @@ class TestAtomicCommit:
         meta_before = _read_meta(tmpdir)
         b2 = _mutated(b1, 1000)
 
-        real = inc._write_segment
+        real = occlog.write_segment
 
         def crashing(df, index_dir, table, seg):
             real(df, index_dir, table, seg)
@@ -661,10 +664,10 @@ class TestAtomicCommit:
             if table == crash_table and seg.startswith("batch-1"):
                 raise RuntimeError("injected crash after segment write")
 
-        monkeypatch.setattr(inc, "_write_segment", crashing)
+        monkeypatch.setattr(occlog, "write_segment", crashing)
         with pytest.raises(RuntimeError, match="injected crash"):
             neardup_index_increment(b2, tmpdir)
-        monkeypatch.setattr(inc, "_write_segment", real)
+        monkeypatch.setattr(occlog, "write_segment", real)
 
         # the commit log is untouched: orphan segment dirs are invisible
         assert _read_meta(tmpdir) == meta_before
@@ -1016,15 +1019,15 @@ class TestVacuum:
         )
         # crash an increment AFTER its segment writes, BEFORE the commit
         # (the OCC ticket is the commit point now)
-        real = inc._try_ticket
+        real = occlog.try_ticket
 
         def crashing(index_dir, version, record):
             raise RuntimeError("injected")
 
-        monkeypatch.setattr(inc, "_try_ticket", crashing)
+        monkeypatch.setattr(occlog, "try_ticket", crashing)
         with pytest.raises(RuntimeError):
             neardup_index_increment(b2, tmpdir)
-        monkeypatch.setattr(inc, "_try_ticket", real)
+        monkeypatch.setattr(occlog, "try_ticket", real)
 
         stranded = [
             n
@@ -1258,8 +1261,10 @@ class TestRevivalSegmentRefused:
         """Earlier versions could append ``rev-N`` (revival) segments to
         the tombstone table. Read as a takedown, one would silently hide
         docs its writer made live again, so every read refuses it."""
+        from mini_data_platform_spark.operators.occlog import (
+            write_meta as _write_meta,
+        )
         from mini_data_platform_spark.operators.incremental import (
-            _write_meta,
             index_delete,
             neardup_index_lookup,
         )
@@ -1441,7 +1446,7 @@ class TestMultiWriterOCC:
             b1, tmpdir, "doc_id", "text", THRESH, NUM_HASHES, BANDS,
             SHINGLE_N,
         )
-        real = inc._try_ticket
+        real = occlog.try_ticket
         calls = {"n": 0}
 
         def flaky(index_dir, version, record):
@@ -1450,7 +1455,7 @@ class TestMultiWriterOCC:
                 return False  # simulated lost race
             return real(index_dir, version, record)
 
-        monkeypatch.setattr(inc, "_try_ticket", flaky)
+        monkeypatch.setattr(occlog, "try_ticket", flaky)
         b2 = _mutated(b1, 1000)
         incr = _pairs_set(neardup_index_increment(b2, tmpdir))
         monkeypatch.undo()
@@ -1473,7 +1478,7 @@ class TestMultiWriterOCC:
             SHINGLE_N,
         )
         neardup_index_increment(_mutated(b1, 1000), tmpdir)
-        real = inc._try_ticket
+        real = occlog.try_ticket
 
         def lose_once(index_dir, version, record):
             if record["type"] == "compact":
@@ -1481,7 +1486,7 @@ class TestMultiWriterOCC:
                 return False
             return real(index_dir, version, record)
 
-        monkeypatch.setattr(inc, "_try_ticket", lose_once)
+        monkeypatch.setattr(occlog, "try_ticket", lose_once)
         before = _pairs_set(neardup_index_pairs(spark, tmpdir))
         with pytest.raises(RuntimeError, match="during compaction"):
             compact_index(spark, tmpdir)
@@ -1537,13 +1542,13 @@ class TestMultiWriterOCC:
             b1, tmpdir, "doc_id", "text", THRESH, NUM_HASHES, BANDS,
             SHINGLE_N,
         )
-        real = inc._try_ticket
+        real = occlog.try_ticket
 
         def crash_once(index_dir, version, record):
             monkeypatch.undo()
             raise RuntimeError("injected pre-ticket crash")
 
-        monkeypatch.setattr(inc, "_try_ticket", crash_once)
+        monkeypatch.setattr(occlog, "try_ticket", crash_once)
         with pytest.raises(RuntimeError):
             neardup_index_increment(_mutated(b1, 1000), tmpdir)
         # the crashed attempt stranded a pairs dir; a clean retry commits

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.operators.ivm import (
     compact_view,
     view_apply_changes,
@@ -114,16 +115,16 @@ class TestCommitSemantics:
         view_build(_facts(spark, _ROWS[:4]), d, ["k"], MEASURES)
         before = sorted(view_read(spark, d).collect())
 
-        real = ivm._try_ticket
+        real = occlog.try_ticket
 
         def crashing(view_dir, version, record):
             raise RuntimeError("injected crash before commit")
 
         # the OCC ticket is the commit point (round 9): crash there
-        monkeypatch.setattr(ivm, "_try_ticket", crashing)
+        monkeypatch.setattr(occlog, "try_ticket", crashing)
         with pytest.raises(RuntimeError, match="injected crash"):
             view_increment(_facts(spark, _ROWS[4:]), d)
-        monkeypatch.setattr(ivm, "_try_ticket", real)
+        monkeypatch.setattr(occlog, "try_ticket", real)
 
         # orphan segment invisible: the view serves its old state
         assert sorted(view_read(spark, d).collect()) == before
@@ -246,14 +247,14 @@ class TestVacuumView:
 
         d = str(tmpdir)
         view_build(_facts(spark, _ROWS[:4]), d, ["k"], MEASURES)
-        real = ivm._try_ticket
+        real = occlog.try_ticket
         monkeypatch.setattr(
-            ivm, "_try_ticket",
+            occlog, "try_ticket",
             lambda *a, **kw: (_ for _ in ()).throw(RuntimeError("boom")),
         )
         with pytest.raises(RuntimeError):
             view_increment(_facts(spark, _ROWS[4:]), d)
-        monkeypatch.setattr(ivm, "_try_ticket", real)
+        monkeypatch.setattr(occlog, "try_ticket", real)
         stranded = [
             n for n in os.listdir(os.path.join(d, "agg"))
             if n.startswith("seg-1")
@@ -290,9 +291,7 @@ class TestReviewRegressions:
         rather than silently serve the wrong state."""
         import json
 
-        from mini_data_platform_spark.operators.incremental import (
-            _meta_as_of,
-        )
+        _meta_as_of = occlog.meta_as_of
 
         meta = {
             "n_batches": 3,
@@ -1069,7 +1068,7 @@ class TestMultiWriterOCC:
         view_build(_facts(spark, _ROWS[:4]), d, ["k"], MEASURES)
         view_increment(_facts(spark, _ROWS[4:]), d)
         before = sorted(view_read(spark, d).collect())
-        real = ivm._try_ticket
+        real = occlog.try_ticket
 
         def lose_once(view_dir, version, record):
             if record["type"] == "compact":
@@ -1077,7 +1076,7 @@ class TestMultiWriterOCC:
                 return False
             return real(view_dir, version, record)
 
-        monkeypatch.setattr(ivm, "_try_ticket", lose_once)
+        monkeypatch.setattr(occlog, "try_ticket", lose_once)
         with pytest.raises(RuntimeError, match="during compaction"):
             compact_view(spark, d)
         assert sorted(view_read(spark, d).collect()) == before

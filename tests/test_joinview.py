@@ -284,6 +284,33 @@ class TestJoinView:
         release_plan(z)
         assert _served(spark, V) == before
 
+    def test_refresh_after_lost_checkpoint_applies_once(
+        self, spark, tmp_path
+    ):
+        """A refresh that won its commit ticket but crashed before its
+        checkpoint write is committed: the next refresh must derive its
+        cursors from the rolled-forward log, not the stale checkpoint,
+        or it applies the first wave twice."""
+        L, R = _base(spark, tmp_path)
+        V = str(tmp_path / "view")
+        join_view_build(spark, L, R, ["cust"], V, ["seg"], MEASURES)
+        join_view_refresh(spark, V)
+        mpath = os.path.join(V, "meta.json")
+        table_apply(_orders(spark, [(4, 10, 7.0)]), L)  # wave A
+        with open(mpath, encoding="utf-8") as f:
+            stale = f.read()
+        join_view_refresh(spark, V)
+        with open(mpath, "w", encoding="utf-8") as f:
+            f.write(stale)  # the refresh's ticket stays
+        table_apply(_orders(spark, [(5, 20, 9.0)]), L)  # wave B
+        join_view_refresh(spark, V)
+        got, want = _served(spark, V), _recompute(spark, L, R)
+        assert got == want, "; ".join(
+            f"{k}: {got.get(k)} != {want.get(k)}"
+            for k in sorted(set(got) | set(want))
+            if got.get(k) != want.get(k)
+        )
+
     def test_group_vanishes_when_fully_retracted(self, spark, tmp_path):
         L, R = _base(spark, tmp_path)
         V = str(tmp_path / "view")

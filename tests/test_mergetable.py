@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.operators import mergetable
 from mini_data_platform_spark.operators.mergetable import (
     compact_table,
@@ -235,7 +236,7 @@ class TestCommitSemantics:
         def crashing(*a, **kw):
             raise RuntimeError("crash between segment write and ticket")
 
-        monkeypatch.setattr(mergetable, "_try_ticket", crashing)
+        monkeypatch.setattr(occlog, "try_ticket", crashing)
         with pytest.raises(RuntimeError):
             table_apply(_frame(spark, [(5, "e", 5.0)]), d, batch_id="b1")
         monkeypatch.undo()
@@ -263,7 +264,7 @@ class TestCommitSemantics:
         def crashing(*a, **kw):
             raise RuntimeError("crash between ticket and checkpoint")
 
-        monkeypatch.setattr(mergetable, "_checkpoint_meta", crashing)
+        monkeypatch.setattr(occlog, "checkpoint", crashing)
         with pytest.raises(RuntimeError):
             table_apply(_frame(spark, [(5, "e", 5.0)]), d, batch_id="b1")
         monkeypatch.undo()
@@ -944,7 +945,7 @@ class TestOptimisticConcurrency:
     def test_lost_race_retries_and_lands(self, spark, tmp_path, monkeypatch):
         d = str(tmp_path / "t")
         table_build(_frame(spark, BASE), d, ["k"])
-        real = mergetable._try_ticket
+        real = occlog.try_ticket
         calls = {"n": 0}
 
         def flaky(table_dir, version, record):
@@ -953,7 +954,7 @@ class TestOptimisticConcurrency:
                 return False  # simulated lost race
             return real(table_dir, version, record)
 
-        monkeypatch.setattr(mergetable, "_try_ticket", flaky)
+        monkeypatch.setattr(occlog, "try_ticket", flaky)
         table_apply(_frame(spark, [(5, "e", 5.0)]), d, batch_id="b1")
         monkeypatch.undo()
         assert calls["n"] == 2
@@ -966,7 +967,7 @@ class TestOptimisticConcurrency:
         d = str(tmp_path / "t")
         table_build(_frame(spark, BASE), d, ["k"])
         table_apply(_frame(spark, [(5, "e", 5.0)]), d)
-        real = mergetable._try_ticket
+        real = occlog.try_ticket
 
         def lose_once(table_dir, version, record):
             if record["type"] == "compact":
@@ -974,7 +975,7 @@ class TestOptimisticConcurrency:
                 return False
             return real(table_dir, version, record)
 
-        monkeypatch.setattr(mergetable, "_try_ticket", lose_once)
+        monkeypatch.setattr(occlog, "try_ticket", lose_once)
         before = _as_dict(table_read(spark, d))
         with pytest.raises(RuntimeError, match="during compaction"):
             compact_table(spark, d)

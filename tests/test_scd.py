@@ -124,7 +124,7 @@ class TestEnrich:
 
     def _naive(self, spark, d, facts):
         """Per-epoch loop: the reference the distributed enrich must equal."""
-        from mini_data_platform_spark.operators.incremental import _read_meta
+        from mini_data_platform_spark.operators.occlog import _read_meta
 
         n = _read_meta(d)["n_batches"]
         out = []

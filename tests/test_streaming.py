@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import Row, functions as F, types as T
 
 from mini_data_platform_spark.sinks.audit import AuditLog
+from mini_data_platform_spark.sinks.objects import list_objects
 from mini_data_platform_spark.sinks.upsert import sqlite_conn_factory, upsert_parquet
 from mini_data_platform_spark.streaming import (
     run_available_now,
@@ -108,16 +109,17 @@ class TestStreamingIngest:
         )
         q.awaitTermination(120)
         assert not q.isActive
-        # the audit key is input_file_name()'s URI form; match basenames
+        # keyed by the listed path, as the batch runner keys its rows
         with sqlite3.connect(audit_db) as conn:
             logged = {
-                os.path.basename(k): (st, n)
+                k: (st, n)
                 for k, st, n in conn.execute(
                     "SELECT file_key, status, rows_processed "
                     "FROM file_ingestion_log"
                 )
             }
-        assert logged == {"f1.csv": ("loaded", 3), "f2.csv": ("loaded", 2)}
+        f1, f2 = list_objects(incoming)
+        assert logged == {f1: ("loaded", 3), f2: ("loaded", 2)}
         got = {r["sale_id"] for r in spark.read.parquet(target).collect()}
         assert got == {"a", "b", "c"}
 
@@ -630,9 +632,9 @@ class TestNearDupBridge:
         )
         bands_new = lsh_band_keys(sigs, "id", self.NH, self.BANDS)
         from mini_data_platform_spark.operators.incremental import (
-            _read_meta,
             _read_table,
         )
+        from mini_data_platform_spark.operators.occlog import _read_meta
 
         corpus_buckets = _read_table(spark, idx, "buckets", _read_meta(idx))
         want_flagged = {

@@ -43,18 +43,18 @@ def wrap(mod, name: str):
 def main() -> None:
     from mini_data_platform_spark.session import get_spark
     from mini_data_platform_spark.operators import (
-        incremental as inc,
         ivm,
         joinview as jv,
         mergetable as mt,
+        occlog,
     )
 
     for name in ("_conform", "table_apply",
                  "table_build", "table_changes_zset", "table_lookup",
                  "table_read"):
         wrap(mt, name)
-    for name in ("_write_segment",):
-        wrap(inc, name)
+    for name in ("write_segment",):
+        wrap(occlog, name)
     for name in ("view_apply_changes", "view_build", "view_read"):
         wrap(ivm, name)
     for name in ("join_changes_zset", "join_view_refresh",

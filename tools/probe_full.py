@@ -35,12 +35,11 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from probe_scale import PROBE_DIR, build_probe_dir  # noqa: E402
-
-REPO = "/root/repo"
 
 
 def _session(label: str):

@@ -28,7 +28,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PROBE_DIR = "/tmp/mdp_sfprobe10"
 BASE = "/root/testdata/sf0.1"

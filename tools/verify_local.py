@@ -32,7 +32,7 @@ from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mini_data_platform_spark.catalog import TABLES  # noqa: E402
 
