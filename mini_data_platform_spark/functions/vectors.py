@@ -17,10 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def to_double(arr: Column) -> Column:
-    return F.transform(arr, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
@@ -88,14 +84,3 @@ def cosine(a: Column, b: Column, norm_a: Column | None = None, norm_b: Column | 
     na = norm_a if norm_a is not None else l2_norm(a)
     nb = norm_b if norm_b is not None else l2_norm(b)
     return dot(a, b) / (na * nb)
-
-
-def hyperplane_bit(v: Column, plane: Column) -> Column:
-    """Sign bit of <v, plane> — the random-hyperplane LSH primitive. The
-    dot is an exact deterministic double, so the bit is reproducible in
-    any engine."""
-    return F.when(dot(v, plane) >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-
-def sql_hyperplane_bit(v: str, plane: str) -> str:
-    return f"CASE WHEN {sql_dot(v, plane)} >= 0 THEN '1' ELSE '0' END"

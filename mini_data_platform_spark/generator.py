@@ -75,12 +75,3 @@ def generate_sales_data(
         qty.alias("quantity"),
         F.round(_u(seed, "amt", 10.0, 500.0) * qty, 2).alias("amount"),
     )
-
-
-def write_sales_csv(
-    spark: SparkSession, path: str, n: int = 1200, seed: int = 42
-) -> None:
-    """Generator entry point parity (generator.py:43 writes a CSV file)."""
-    generate_sales_data(spark, n, seed).write.mode("overwrite").option(
-        "header", True
-    ).csv(path)

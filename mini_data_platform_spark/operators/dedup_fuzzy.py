@@ -47,7 +47,7 @@ def _staged_shingles(
     ``shingles_of`` produce — one parser call each) rather than Column
     chains: per-Column py4j construction cost dominated the serving
     lookups' wall (round-12 profile: 448 ms → 75 ms for the batch band
-    plan, bit-identical output — tools/profile_plan.py).
+    plan, bit-identical output).
     """
     n = int(shingle_n)
     toked = df.selectExpr(
@@ -181,20 +181,6 @@ def minhash_signature_columns(
     )
 
 
-def sql_minhash_signatures(
-    table: str, id_col: str, sql_shingles_expr: str, num_hashes: int = 16
-) -> str:
-    """DuckDB twin of :func:`minhash_signatures` (oracle construction) —
-    same slice-of-md5 hash family."""
-    parts = [id_col]
-    for i in range(num_hashes):
-        parts.append(
-            f"list_min(list_transform({sql_shingles_expr}, "
-            f"s -> substr(md5('{i // 4}#' || s), {(i % 4) * 8 + 1}, 8))) AS mh_{i}"
-        )
-    return f"SELECT {', '.join(parts)} FROM {table}"
-
-
 def lsh_band_keys(
     signatures: DataFrame,
     id_col: str,
@@ -261,20 +247,6 @@ def lsh_candidate_pairs(
         )
         .distinct()
     )
-
-
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs: explode each side's
-    distinct shingles, join through the pair list, count intersections.
-    Cost ∝ candidate pairs × shingles, never corpus²."""
-    shingled = _staged_shingles(df, id_col, text_col, shingle_n)
-    return jaccard_pairs_from(shingled, pairs, id_col)
 
 
 def jaccard_pairs_from(

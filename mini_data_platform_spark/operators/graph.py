@@ -389,23 +389,3 @@ def _connected_components_star(
     return vertices.join(star_labels, "v", "left").select(
         F.col("v"), F.coalesce("comp", "v").alias("comp")
     )
-
-
-def sql_connected_components(pairs_cte: str) -> str:
-    """DuckDB twin: recursive reachability closure + MIN per vertex.
-    ``pairs_cte`` must select columns (id_a, id_b). UNION (not ALL)
-    dedupes the frontier, so the recursion terminates on cyclic graphs."""
-    return f"""
-        WITH RECURSIVE pairs AS ({pairs_cte}),
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION
-            SELECT id_b AS src, id_a AS dst FROM pairs
-        ),
-        reach(v, c) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.dst, r.c FROM reach r JOIN edges e ON e.src = r.v
-        )
-        SELECT v, MIN(c) AS comp FROM reach GROUP BY v
-    """

@@ -122,10 +122,11 @@ def _apply_record(meta: dict, rec: dict) -> dict:
 
 
 def _recover_meta(table_dir: str) -> dict:
-    meta = occlog.recover(table_dir, _apply_record)
-    if meta.get("kind") != "mergetable":
+    # the kind is checked on the checkpoint, before any ticket replays
+    # through this store's record vocabulary
+    if occlog._read_meta(table_dir).get("kind") != "mergetable":
         raise ValueError(f"{table_dir} is not a merge table")
-    return meta
+    return occlog.recover(table_dir, _apply_record)
 
 
 #: sentinel prefix for validation guards embedded in the WRITE plan —

@@ -546,10 +546,6 @@ def _books_sql(codebooks: list[list[list[float]]]) -> str:
     )
 
 
-def _books_lit(codebooks: list[list[list[float]]]):
-    return F.expr(_books_sql(codebooks))
-
-
 def pq_encode_sql(vec_sql: str, codebooks: list[list[list[float]]]) -> str:
     """``vec -> array<int>`` PQ codes as ONE generated-SQL projection —
     the ORACLE-PARITY encode (vs ``pq_encode``'s vectorized-numpy scale

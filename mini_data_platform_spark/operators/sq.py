@@ -66,7 +66,7 @@ def sq8_train(vecs: DataFrame, vec_col: str) -> tuple[list[float], list[float]]:
 
 def _lit_arr(xs: list[float]) -> Column:
     # one F.expr call, not one py4j round-trip per scalar (the pq.py
-    # _books_lit lesson); D-suffixed repr = exact string→double parse
+    # _books_sql lesson); D-suffixed repr = exact string→double parse
     return F.expr(
         "array(" + ",".join(f"{float(x)!r}D" for x in xs) + ")"
     )

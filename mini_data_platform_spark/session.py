@@ -82,24 +82,3 @@ def observed(spark: SparkSession, obs) -> dict | None:
         except Exception:  # noqa: BLE001 — a busy bus: decide on what arrived
             pass
     return obs.get if done() else None
-
-
-def configure_s3a(
-    spark: SparkSession,
-    endpoint: str,
-    access_key: str,
-    secret_key: str,
-    path_style: bool = True,
-) -> None:
-    """Point the Hadoop S3A connector at an S3-compatible object store
-    (e.g. MinIO, which is the reference's landing zone —
-    /root/reference/docker/docker-compose.yml). Spark readers then consume
-    ``s3a://bucket/prefix`` directly; no byte-download step is needed
-    (replaces /root/reference/dags/src/minio_client.py:68-81).
-    """
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hconf.set("fs.s3a.endpoint", endpoint)
-    hconf.set("fs.s3a.access.key", access_key)
-    hconf.set("fs.s3a.secret.key", secret_key)
-    hconf.set("fs.s3a.path.style.access", "true" if path_style else "false")
-    hconf.set("fs.s3a.connection.ssl.enabled", "false" if endpoint.startswith("http:") else "true")

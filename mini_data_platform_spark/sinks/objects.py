@@ -54,18 +54,6 @@ def move_object(src: str, dst: str) -> None:
     os.remove(src)
 
 
-def upload_bytes(data: bytes, dst: str) -> None:
-    if is_s3_uri(dst):
-        if boto3 is None:
-            raise RuntimeError("boto3 not available for s3 uploads")
-        db, dk = _split_s3(dst)
-        boto3.client("s3").put_object(Bucket=db, Key=dk, Body=data)
-        return
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    with open(dst, "wb") as f:
-        f.write(data)
-
-
 def list_objects(prefix: str) -> list[str]:
     """Paginated listing under a prefix (reference minio_client.py:45-65
     S6); sorted for deterministic cross-file precedence. Local directories

@@ -18,8 +18,16 @@ from mini_data_platform_spark.operators.dedup_fuzzy import (
     near_dup_pairs,
 )
 from mini_data_platform_spark.operators.incremental import (
+    embdup_index_build,
+    embdup_index_increment,
+    embdup_index_lookup,
+    exact_index_build,
+    exact_index_increment,
+    exact_index_lookup,
     neardup_index_build,
     neardup_index_increment,
+    neardup_index_lookup,
+    neardup_index_pairs,
 )
 from mini_data_platform_spark.operators.occlog import _read_meta
 from mini_data_platform_spark.operators import occlog
@@ -70,11 +78,116 @@ def _full_pairs(corpus):
     return got
 
 
+def _vec_corpus(spark, start, n):
+    return spark.range(start, start + n).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            F.col("id").cast("double") + 1.0,
+            (F.col("id") % 7 - 3).cast("double"),
+            (F.col("id") % 5 - 2).cast("double"),
+        ).alias("embedding"),
+    )
+
+
+def _copies(spark, kind, offset):
+    """A batch of near-duplicates (exact copies for the exact kind) of
+    the 30-doc corpus ``INDEX_KINDS[kind]`` builds, ids shifted by
+    ``offset``."""
+    if kind == "embdup":
+        return _vec_corpus(spark, 0, 30).select(
+            (F.col("vec_id") + offset).alias("vec_id"),
+            F.transform(F.col("embedding"), lambda x: x * 0.5).alias(
+                "embedding"
+            ),
+        )
+    docs = _corpus(spark, 0, 30)
+    if kind == "exact":
+        return docs.select((F.col("doc_id") + offset).alias("doc_id"), "text")
+    return _mutated(docs, offset)
+
+
+def _dup_of_set(df):
+    return {(r["id"], r["dup_of"]) for r in df.collect()}
+
+
+def _cos_set(df):
+    return {
+        (r["id_a"], r["id_b"], round(r["cos_sim"], 12)) for r in df.collect()
+    }
+
+
+#: kind -> (build a 30-doc index, increment, lookup, result as a set)
+INDEX_KINDS = {
+    "neardup": (
+        lambda spark, d: neardup_index_build(
+            _corpus(spark, 0, 30), d, "doc_id", "text",
+            THRESH, NUM_HASHES, BANDS, SHINGLE_N,
+        ),
+        neardup_index_increment,
+        neardup_index_lookup,
+        _pairs_set,
+    ),
+    "exact": (
+        lambda spark, d: exact_index_build(
+            _corpus(spark, 0, 30), d, "doc_id", "text"
+        ),
+        exact_index_increment,
+        exact_index_lookup,
+        _dup_of_set,
+    ),
+    "embdup": (
+        lambda spark, d: embdup_index_build(
+            _vec_corpus(spark, 0, 30), d, "vec_id", "embedding",
+            threshold=0.9,
+        ),
+        embdup_index_increment,
+        embdup_index_lookup,
+        _cos_set,
+    ),
+}
+
+
 @pytest.fixture()
 def tmpdir():
     d = tempfile.mkdtemp(prefix="ndidx_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+class TestKindGuard:
+    """Every kind-specific operation checks the checkpoint's kind before
+    it reads or writes anything; a checkpoint without ``kind`` is a
+    near-dup index."""
+
+    @pytest.fixture(scope="class")
+    def indexes(self, spark):
+        root = tempfile.mkdtemp(prefix="kinds_")
+        dirs = {kind: os.path.join(root, kind) for kind in INDEX_KINDS}
+        for kind, (build, *_ops) in INDEX_KINDS.items():
+            build(spark, dirs[kind])
+        yield dirs
+        shutil.rmtree(root, ignore_errors=True)
+
+    @pytest.mark.parametrize("op", ["increment", "lookup"])
+    @pytest.mark.parametrize(
+        "op_kind,index_kind",
+        [(a, b) for a in INDEX_KINDS for b in INDEX_KINDS if a != b],
+    )
+    def test_operation_refuses_other_kind(
+        self, spark, indexes, op, op_kind, index_kind
+    ):
+        _build, increment, lookup, _rows = INDEX_KINDS[op_kind]
+        fn = increment if op == "increment" else lookup
+        d = indexes[index_kind]
+        meta = _read_meta(d)
+        with pytest.raises(ValueError, match="is not a"):
+            fn(_copies(spark, op_kind, 1000), d)
+        assert _read_meta(d) == meta
+
+    @pytest.mark.parametrize("index_kind", ["exact", "embdup"])
+    def test_index_pairs_refuses_other_kind(self, spark, indexes, index_kind):
+        with pytest.raises(ValueError, match="is not a near-dup index"):
+            neardup_index_pairs(spark, indexes[index_kind])
 
 
 class TestEquivalence:
@@ -184,19 +297,17 @@ class TestIndexReuse:
         assert cand_old_ids, "fixture must produce candidates"
         assert len(cand_old_ids) < 120, "fixture must leave non-candidates"
 
-        # garble non-candidate stored text (docs/ only; buckets
-        # untouched) — rewrite the single committed docs segment
+        # garble non-candidate stored text and shingle-hash sets (docs/
+        # only; buckets untouched) — rewrite the single committed docs
+        # segment
         (docs_path,) = _segment_paths(tmpdir, "docs", meta)
-        stored = spark.read.parquet(docs_path).collect()
+        stored_df = spark.read.parquet(docs_path)
         garbled = [
-            (
-                r["id"],
-                r["text"] if r["id"] in cand_old_ids else "GARBLED GARBLED",
-            )
-            for r in stored
+            r if r["id"] in cand_old_ids else (r["id"], "GARBLED GARBLED", [0])
+            for r in stored_df.collect()
         ]
         tmp_out = docs_path + "_garbled"
-        spark.createDataFrame(garbled, "id long, text string").write.parquet(
+        spark.createDataFrame(garbled, stored_df.schema).write.parquet(
             tmp_out
         )
         shutil.rmtree(docs_path)
@@ -252,16 +363,6 @@ class TestExactIndex:
         b3 = b2.select((F.col("doc_id") + 1000).alias("doc_id"), "text")
         out = {r["id"]: r["dup_of"] for r in exact_index_increment(b3, tmpdir).collect()}
         assert all(out[1000 + i] == i for i in range(100, 120))
-
-    def test_kind_mismatch_refused(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            exact_index_increment,
-        )
-
-        b1 = _corpus(spark, 0, 10)
-        neardup_index_build(b1, tmpdir, "doc_id", "text")
-        with pytest.raises(ValueError):
-            exact_index_increment(b1, tmpdir)
 
     def test_batch_internal_dups_resolve_within_batch(self, spark, tmpdir):
         from mini_data_platform_spark.operators.incremental import (
@@ -367,17 +468,6 @@ class TestEmbIndex:
         }
         assert all((a + 1000) == b for a, b in hits if 200 <= a < 240)
         assert sum(1 for a, b in hits if 200 <= a < 240 and b == a + 1000) == 40
-
-    def test_kind_guard(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            embdup_index_increment,
-            exact_index_build,
-        )
-
-        docs = _corpus(spark, 0, 5)
-        exact_index_build(docs, tmpdir, "doc_id", "text")
-        with pytest.raises(ValueError):
-            embdup_index_increment(docs, tmpdir)
 
 
 class TestCompaction:
@@ -751,41 +841,32 @@ class TestShingleHashVerify:
         # ...but the settled-corpus accessor keeps its (id, text) shape
         assert "_shh" not in index_docs(spark, tmpdir).columns
 
-    def test_hash_verify_equals_text_verify(self, spark, tmpdir):
-        """A lookup against a LEGACY index (docs segments without _shh —
-        simulated by stripping the column) must return the exact same
-        verified pairs as the hash path: the hash is injective on the
-        observed shingles, so Jaccard values are identical doubles."""
-        from mini_data_platform_spark.operators.incremental import (
-            neardup_index_lookup,
-        )
-
-        b1 = _corpus(spark, 0, 60)
+    def test_legacy_docs_layout_refused(self, spark, tmpdir):
+        """Docs segments without the _shh column (the layout before
+        hash sets existed, simulated by stripping the column) are
+        refused by every verifying read with a rebuild hint, and a
+        refused increment commits nothing."""
+        b1 = _corpus(spark, 0, 30)
         b2 = _mutated(b1, 1000)
         neardup_index_build(
             b1, tmpdir, "doc_id", "text", THRESH, NUM_HASHES, BANDS, SHINGLE_N
         )
-        looked = neardup_index_lookup(b2, tmpdir)
-        hash_pairs = _pairs_set(looked)
-        release_plan(looked)
-        # strip _shh in place -> the legacy re-shingle fallback engages
         seg = os.path.join(tmpdir, "docs", "batch-0")
         legacy = spark.read.parquet(seg).drop("_shh")
         tmp_out = seg + "_legacy"
         legacy.write.mode("overwrite").parquet(tmp_out)
         shutil.rmtree(seg)
         os.rename(tmp_out, seg)
-        looked = neardup_index_lookup(b2, tmpdir)
-        text_pairs = _pairs_set(looked)
-        release_plan(looked)
-        assert hash_pairs == text_pairs
-        # a legacy index's increments keep the legacy docs schema
-        neardup_index_increment(b2, tmpdir)
-        segs = _read_meta(tmpdir)["segments"]["docs"]
-        for s in segs:
-            assert "_shh" not in spark.read.parquet(
-                os.path.join(tmpdir, "docs", s)
-            ).columns
+        meta = _read_meta(tmpdir)
+        for read in (
+            lambda: neardup_index_lookup(b2, tmpdir),
+            lambda: neardup_index_lookup(b2, tmpdir, small_batch=True),
+            lambda: neardup_index_increment(b2, tmpdir),
+            lambda: neardup_index_pairs(spark, tmpdir),
+        ):
+            with pytest.raises(ValueError, match="rebuild the index"):
+                read()
+        assert _read_meta(tmpdir) == meta
 
     def test_small_batch_contract_equals_guarded_lookup(
         self, spark, tmpdir
@@ -874,19 +955,6 @@ class TestLookupTwins:
             for r in embdup_index_increment(b2, tmpdir).collect()
         }
         assert got == incr
-
-    def test_lookup_kind_guards(self, spark, tmpdir):
-        from mini_data_platform_spark.operators.incremental import (
-            embdup_index_lookup,
-            exact_index_lookup,
-        )
-
-        b1 = _corpus(spark, 0, 5)
-        neardup_index_build(b1, tmpdir, "doc_id", "text")
-        with pytest.raises(ValueError):
-            exact_index_lookup(b1, tmpdir)
-        with pytest.raises(ValueError):
-            embdup_index_lookup(b1, tmpdir)
 
 
 class TestTimeTravel:
@@ -1293,30 +1361,26 @@ class TestBatchIdReplay:
     not re-applied — increments return the original materialized
     result, deletes no-op (the ivm/mergetable exactly-once contract)."""
 
-    def test_neardup_replay_returns_original_and_no_recommit(
-        self, spark, tmpdir
+    @pytest.mark.parametrize("kind", sorted(INDEX_KINDS))
+    def test_replay_returns_original_and_no_recommit(
+        self, spark, tmpdir, kind
     ):
-        b1 = _corpus(spark, 0, 40)
-        neardup_index_build(
-            b1, tmpdir, "doc_id", "text", THRESH, NUM_HASHES, BANDS, SHINGLE_N
+        build, increment, _lookup, rows = INDEX_KINDS[kind]
+        build(spark, tmpdir)
+        first = rows(
+            increment(_copies(spark, kind, 1000), tmpdir, batch_id="e1")
         )
-        b2 = _mutated(b1, 1000)
-        first = _pairs_set(
-            neardup_index_increment(b2, tmpdir, batch_id="e1")
-        )
+        assert first
         meta1 = _read_meta(tmpdir)
         # replay: same id, even with a DIFFERENT (wrong) frame — the
         # original result serves, nothing recommits
-        again = _pairs_set(
-            neardup_index_increment(
-                _mutated(b1, 5000), tmpdir, batch_id="e1"
-            )
+        again = rows(
+            increment(_copies(spark, kind, 5000), tmpdir, batch_id="e1")
         )
         assert again == first
         assert _read_meta(tmpdir) == meta1
         # a new id commits normally
-        _pairs_set(neardup_index_increment(_mutated(b1, 5000), tmpdir,
-                                           batch_id="e2"))
+        rows(increment(_copies(spark, kind, 5000), tmpdir, batch_id="e2"))
         assert _read_meta(tmpdir)["n_batches"] == meta1["n_batches"] + 1
 
     def test_exact_replay_and_delete_replay(self, spark, tmpdir):
@@ -1436,16 +1500,14 @@ class TestMultiWriterOCC:
         assert meta["n_batches"] == 2  # committed exactly once
         assert results[0] == results[1] == results[2]
 
+    @pytest.mark.parametrize("kind", sorted(INDEX_KINDS))
     def test_lost_race_recomputes_and_lands(
-        self, spark, tmpdir, monkeypatch
+        self, spark, tmpdir, monkeypatch, kind
     ):
         import mini_data_platform_spark.operators.incremental as inc
 
-        b1 = _corpus(spark, 0, 30)
-        neardup_index_build(
-            b1, tmpdir, "doc_id", "text", THRESH, NUM_HASHES, BANDS,
-            SHINGLE_N,
-        )
+        build, increment, _lookup, rows = INDEX_KINDS[kind]
+        build(spark, tmpdir)
         real = occlog.try_ticket
         calls = {"n": 0}
 
@@ -1456,12 +1518,24 @@ class TestMultiWriterOCC:
             return real(index_dir, version, record)
 
         monkeypatch.setattr(occlog, "try_ticket", flaky)
-        b2 = _mutated(b1, 1000)
-        incr = _pairs_set(neardup_index_increment(b2, tmpdir))
+        got = rows(increment(_copies(spark, kind, 1000), tmpdir))
         monkeypatch.undo()
         assert calls["n"] == 2
-        assert incr | _full_pairs(b1) == _full_pairs(b1.unionByName(b2))
-        assert inc._recover_meta(tmpdir)["n_batches"] == 2
+        meta = inc._recover_meta(tmpdir)
+        assert meta["n_batches"] == 2
+        # exactly the winning attempt's pairs dir and segments committed
+        assert len(meta["pairs_segs"]) == 1
+        assert all(len(segs) == 2 for segs in meta["segments"].values())
+        # the landed result equals an uncontended increment's
+        clean = os.path.join(tmpdir, "clean")
+        build(spark, clean)
+        assert got and got == rows(
+            increment(_copies(spark, kind, 1000), clean)
+        )
+        if kind == "neardup":
+            b1 = _corpus(spark, 0, 30)
+            full = _full_pairs(b1.unionByName(_mutated(b1, 1000)))
+            assert got | _full_pairs(b1) == full
 
     def test_compaction_refuses_concurrent_commit(
         self, spark, tmpdir, monkeypatch

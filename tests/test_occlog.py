@@ -117,3 +117,12 @@ def test_read_only_consumer_reads_ticketed_batch(
     monkeypatch.undo()
     # the checkpoint write was skipped, not half-done
     assert _checkpointed_batches(d) == 1
+
+
+def test_merge_table_refuses_view_with_pending_ticket(spark, tmp_path):
+    """The store kind is checked before any ticket is replayed: a view's
+    pending ticket must not reach the merge table's record vocabulary."""
+    d = str(tmp_path / "view")
+    _stale_checkpoint(spark, d, "view")
+    with pytest.raises(ValueError, match="is not a merge table"):
+        table_read(spark, d)

@@ -1,4 +1,5 @@
-"""Every module of the package is reachable from a declared surface.
+"""Every module of the package is reachable from a declared surface,
+and every top-level def of the package is named somewhere.
 
 The declared surfaces are the query contract (``__spark_entry__.py``),
 the bench CLI (``bench.py``), the batch runner CLI (``runner.py``) and the
@@ -6,6 +7,11 @@ the bench CLI (``bench.py``), the batch runner CLI (``runner.py``) and the
 weight: wire it into a surface or delete it with its tests. The walk reads
 ``import``/``from`` statements with ``ast`` (including those inside
 functions) and never imports anything, so it needs no Spark.
+
+A top-level def that no ``.py`` file of the repo names — as an
+identifier, an attribute, an import or a string literal (registries and
+``getattr`` lookups name functions by string) — is dead code. The def
+statement itself does not count; a use from tests does.
 """
 
 import ast
@@ -79,3 +85,37 @@ def test_every_package_module_is_reachable_from_a_declared_surface():
     )
     assert not orphans, f"modules no declared surface imports: {orphans}"
 
+
+def _named(tree):
+    """Every name ``tree`` uses: identifiers, attributes, imported names
+    and string literals."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+            names.add(node.asname or node.name)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            names.add(node.value)
+    return names
+
+
+def test_every_package_def_is_named_somewhere():
+    trees = {
+        p: ast.parse(p.read_text(), filename=str(p))
+        for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") for part in p.relative_to(REPO).parts)
+    }
+    named = set().union(*(_named(t) for t in trees.values()))
+    unnamed = sorted(
+        f"{p.relative_to(REPO)}:{node.name}"
+        for p, tree in trees.items()
+        if p.is_relative_to(REPO / PACKAGE)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.name not in named
+    )
+    assert not unnamed, f"top-level defs no file names: {unnamed}"
