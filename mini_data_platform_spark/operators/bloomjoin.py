@@ -189,8 +189,13 @@ def might_contain(
     bits), but the tree grows as num_hashes × num_words, so big filters
     must go through ``bloom_semi_join``'s broadcast path instead, which
     binds the array ONCE as a single-row broadcast relation."""
+    # a literal list whose words all fit 32 bits infers array<int>, and
+    # getbit on an int refuses positions >= 32 — pin the word type
     return _membership_cond(
-        F.lit(words), key, len(words) * _WORD_BITS, num_hashes
+        F.lit(words).cast("array<bigint>"),
+        key,
+        len(words) * _WORD_BITS,
+        num_hashes,
     )
 
 

@@ -18,6 +18,10 @@ time; a cap of 0 forces the distributed path. Cap: fast path; overflow.
   (200k): serve point probes, literal pair frame; distributed joins.
 - ``BROADCAST_MAX_ROWS`` (2M): ``guarded_broadcast`` hints; no hint,
   so the planner picks a shuffle join.
+- ``runner.ONE_TASK_MAX_ROWS`` (150k): an ingest batch's row bound from
+  its listing (parquet footer rows, CSV/JSON bytes; none if compressed
+  or ORC): one-task dedup, its bound rides to the sink, which skips the
+  cache and ``guarded_broadcast``s the keys; a shuffled dedup.
 
 PLAN LIFETIME. Spark has no "unpersist when this plan has executed"
 hook: an operator like ``near_dup_pairs`` persists its shared
@@ -43,7 +47,9 @@ path. A released directory is deleted, so its plan cannot run again.
 
 from __future__ import annotations
 
+import os
 import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -79,6 +85,18 @@ def with_row_bound(df: DataFrame, n: int) -> DataFrame:
 def row_bound(df: DataFrame) -> int | None:
     """The bound ``with_row_bound`` recorded on ``df``, else ``None``."""
     return getattr(df, _BOUND_ATTR, None)
+
+
+def listed_bytes(paths: list[str]) -> int | None:
+    """The summed size of local ``paths``; ``None`` if one is remote or
+    unreadable. No job."""
+    urls = [urlparse(p) for p in paths]
+    if any(u.scheme not in ("", "file") for u in urls):
+        return None
+    try:
+        return sum(os.path.getsize(u.path) for u in urls)
+    except OSError:
+        return None
 
 
 def guarded_broadcast(df: DataFrame, n_rows: int) -> DataFrame:

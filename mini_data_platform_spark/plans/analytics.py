@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from mini_data_platform_spark.catalog import load_table
 from mini_data_platform_spark.operators.asof import asof_join
+from mini_data_platform_spark.operators.resources import listed_bytes
 from mini_data_platform_spark.operators.sketch import sql_cms_table
 from mini_data_platform_spark.plans._parity import davg, dsum, sql_davg, sql_dsum
 
@@ -42,32 +43,20 @@ def _spread_if_narrow(df: DataFrame, *keys: str) -> DataFrame:
     groupBy REUSES (guide §2.4) — one exchange total, same shuffle
     count as the un-spread plan; round-robin otherwise (the multiset
     crosses either way)."""
-    import os as _os
-    from urllib.parse import urlparse
-
     spark = df.sparkSession
     p = spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
-        if not files:
-            return df  # not scan-rooted: nothing to estimate
-        total = 0
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("", "file"):
-                return df  # non-local store: no cheap size probe
-            total += _os.path.getsize(u.path or f)
-        raw = str(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        ).strip().lower().removesuffix("b")
-        units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-        mpb = (
-            int(raw[:-1]) * units[raw[-1]]
-            if raw[-1:] in units else int(raw)
+        total = listed_bytes(files) if files else None
+        jutils = spark._jvm.org.apache.spark.network.util.JavaUtils  # noqa: SLF001
+        mpb = jutils.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes")
         )
-        est = max(len(files), -(-total // mpb))
     except Exception:  # noqa: BLE001 — estimation is advisory
         return df
+    if total is None:
+        return df  # not scan-rooted, or no cheap size probe
+    est = max(len(files), -(-total // mpb))
     if est >= p:
         return df
     return df.repartition(p, *keys) if keys else df.repartition(p)

@@ -21,10 +21,11 @@ Two execution modes:
   Per-file row counts are an Observation riding that write (an exact
   histogram over the file ranks), so the batch never executes twice.
   This is the 100 TB path: no per-file driver round-trips, one shuffle
-  (the dedup window), one sink commit (idempotent upsert makes retries
-  safe). Files are read as a few signature-grouped MULTI-PATH scans
-  (rank recovered from ``input_file_name``), not per-file reads chained
-  through an O(n²)-analysis union (see ``_stage_valid_files``).
+  (the dedup window; none under ``ONE_TASK_MAX_ROWS``), one sink commit
+  (idempotent upsert makes retries safe). Files are read as a few
+  signature-grouped MULTI-PATH scans (rank recovered from
+  ``input_file_name``), not per-file reads chained through an
+  O(n²)-analysis union (see ``_stage_valid_files``).
 - **per-file mode** (``per_file=True``): the reference's loop, for
   deployments that need per-file transactions / fault isolation at the
   cost of one job per file.
@@ -53,6 +54,11 @@ from mini_data_platform_spark.operators.dedup import (
     dedup_keep_latest,
     with_ingest_order,
 )
+from mini_data_platform_spark.operators.resources import (
+    listed_bytes,
+    row_bound,
+    with_row_bound,
+)
 from mini_data_platform_spark.registry import (
     SALES_SPEC,
     TableSpec,
@@ -62,7 +68,11 @@ from mini_data_platform_spark.registry import (
 from mini_data_platform_spark.sinks.audit import AuditLog
 from mini_data_platform_spark.sinks.objects import move_object
 from mini_data_platform_spark.session import get_spark, observed
-from mini_data_platform_spark.sources.readers import read_file_as_strings
+from mini_data_platform_spark.sources.readers import (
+    normalize_column_names,
+    read_file,
+    read_file_as_strings,
+)
 from mini_data_platform_spark.sources.scanstage import (
     SAFE_BASE,
     cleanup_dirs,
@@ -73,6 +83,13 @@ from mini_data_platform_spark.sources.validate import validate_file
 logger = logging.getLogger(__name__)
 
 FILE_RANK_COL = "_file_rank"
+
+#: Largest listed row bound of a batch deduped in one task (the
+#: driver-size contract in ``operators/resources.py``): the measured
+#: crossover. Batch wall into a 200k-row target, 4 cores, one task vs
+#: shuffled: parquet even at 150k rows, 4.1 vs 3.2 s at 200k; CSV even
+#: at 100k rows (8.6 MB), 7.2 vs 4.7 s at 300k.
+ONE_TASK_MAX_ROWS = 150_000
 
 
 @dataclass
@@ -119,18 +136,24 @@ def _quarantine(
     return FileOutcome(path, reason, error=error)
 
 
+def _spec_strings(df: DataFrame, spec: TableSpec, *extra) -> DataFrame:
+    """``spec.columns`` of ``df`` cast to string (a missing one null),
+    then ``extra``, in one projection."""
+    have = set(df.columns)
+    return df.select(
+        *[(F.col(c) if c in have else F.lit(None)).cast("string").alias(c)
+          for c in spec.columns],
+        *extra,
+    )
+
+
 def _prepare_one(
     spark: SparkSession, path: str, rank: int, spec: TableSpec
 ) -> DataFrame:
     """Read one validated file and stage it for the unioned clean: string
     cast, canonical columns, file-rank + ingest-order tags."""
-    df = read_file_as_strings(spark, path)
-    for c in spec.columns:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("string"))
-    return with_ingest_order(df.select(*spec.columns)).withColumn(
-        FILE_RANK_COL, F.lit(rank)
-    )
+    df = _spec_strings(read_file(spark, path), spec)
+    return with_ingest_order(df).withColumn(FILE_RANK_COL, F.lit(rank))
 
 
 class _NoSignature(Exception):
@@ -373,11 +396,6 @@ def _read_group(
     ``listStatus``. Provenance is unchanged (links carry the original
     basenames). The staging dir is appended to ``stage_dirs`` — the
     caller keeps it alive until the batch's actions have run."""
-    from mini_data_platform_spark.sources.readers import (
-        normalize_column_names,
-        read_file,
-    )
-
     fmt = sig[0]
     scan: list[str] | str = paths
     if stage_dirs is not None and fmt in ("csv", "json", "parquet"):
@@ -421,74 +439,85 @@ def _stage_valid_files(
     spec: TableSpec,
     stage_dirs: list[str] | None = None,
 ) -> DataFrame:
-    """Stage ALL valid files as a handful of multi-path scans — the
-    100 TB staging plan (round-14, replacing the per-file read +
-    N-way chained union):
-
-    - the old plan paid one py4j read/analysis per file plus an
-      O(n²) left-deep unionByName analysis — measured 30 s of pure
-      DRIVER time at 256 files and the dominant wall at 512+
-      (INGEST_SCALE file_count_runs) — and executed 2+ tasks per file;
-    - this plan groups files by :func:`_file_signature` (read-safe
-      groups), issues ONE ``spark.read`` per group (Spark bin-packs
-      small files into ``maxPartitionBytes`` splits — constant plan
-      size, ~#cores tasks), and recovers each row's file rank by
-      joining ``input_file_name()``'s basename against a broadcast
-      (basename → listing rank) map, so cross-file precedence stays
-      byte-identical to the reference's sequential loop.
+    """Stage ALL valid files as a handful of multi-path scans: files are
+    grouped by :func:`_file_signature` (read-safe groups), each group is
+    ONE ``spark.read`` (Spark bin-packs small files into
+    ``maxPartitionBytes`` splits), and each row's file rank comes from
+    joining ``input_file_name()``'s basename against a broadcast
+    (basename → listing rank) table, so cross-file precedence stays
+    byte-identical to the reference's sequential loop. The table is one
+    literal, the ``/``-joined basenames (``/`` is not ``SAFE_BASE``),
+    exploded in the JVM: ``createDataFrame`` would fork Python workers,
+    per-file literals cost a py4j build each, and ``array_position``
+    scans the whole list per row. The frame carries the batch's
+    ``_one_task_bound`` as its ``row_bound`` when there is one.
 
     Raises :class:`_NoSignature` when any signature cannot be derived
     (remote/unreadable path) or basenames collide across directories —
     the caller falls back to the per-file union staging."""
     if _FILE_BASE_COL in spec.columns:  # provenance-name collision
         raise _NoSignature(_FILE_BASE_COL)
-    base_ranks = []
-    seen = set()
-    for rank, path in enumerate(valid):
-        base = os.path.basename(path)
-        if base in seen:  # ambiguous rank map — e.g. recursive listing
-            raise _NoSignature(f"duplicate basename: {base}")
+    bases = [os.path.basename(path) for path in valid]
+    for base in bases:
         if not SAFE_BASE.match(base):
             # input_file_name() reports the URI form; for names outside
             # the URI-safe set the two spellings can disagree (and a
             # blanket url_decode turns '+' into a space), so the rank
             # join could silently DROP rows — refuse and stage legacy
             raise _NoSignature(f"non-URI-safe basename: {base}")
-        seen.add(base)
-        base_ranks.append((base, rank))
+    if len(set(bases)) < len(bases):
+        # ambiguous rank map — e.g. recursive listing
+        raise _NoSignature("duplicate basename")
     groups: dict[tuple, list[str]] = {}
     for path in valid:
         groups.setdefault(_file_signature(path), []).append(path)
 
-    frames = []
-    for sig, paths in groups.items():
-        df = _read_group(spark, sig, paths, stage_dirs)
-        # provenance BEFORE any projection: input_file_name() is only
-        # defined over the scan's own rows (URI-encoded -> url_decode)
-        df = df.withColumn(
-            _FILE_BASE_COL,
-            F.regexp_extract(F.input_file_name(), "([^/]+)$", 1),
+    # provenance in the scan's own projection: input_file_name() is
+    # only defined over the scan's rows
+    provenance = F.regexp_extract(F.input_file_name(), "([^/]+)$", 1)
+    frames = [
+        _spec_strings(
+            _read_group(spark, sig, paths, stage_dirs), spec,
+            provenance.alias(_FILE_BASE_COL),
         )
-        data_cols = [c for c in df.columns if c != _FILE_BASE_COL]
-        df = df.select(
-            *[F.col(c).cast("string").alias(c) for c in data_cols],
-            _FILE_BASE_COL,
-        )
-        for c in spec.columns:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("string"))
-        frames.append(df.select(*spec.columns, _FILE_BASE_COL))
+        for sig, paths in groups.items()
+    ]
     staged = frames[0]
     for f in frames[1:]:  # one union per GROUP, not per file
         staged = staged.unionByName(f)
-    ranks = spark.createDataFrame(
-        base_ranks, f"{_FILE_BASE_COL} string, {FILE_RANK_COL} long"
+    ranks = spark.range(1, numPartitions=1).select(
+        F.posexplode(F.split(F.lit("/".join(bases)), "/")).alias(
+            FILE_RANK_COL, _FILE_BASE_COL
+        )
     )
-    return (
+    staged = (
         with_ingest_order(staged)
         .join(F.broadcast(ranks), _FILE_BASE_COL)
         .drop(_FILE_BASE_COL)
     )
+    bound = _one_task_bound(groups)
+    return staged if bound is None else with_row_bound(staged, bound)
+
+
+def _one_task_bound(groups: dict[tuple, list[str]]) -> int | None:
+    """The batch's listed row bound (``operators/resources.py``) when
+    it is at most ``ONE_TASK_MAX_ROWS``, else ``None``. No job."""
+    import pyarrow.parquet as pq
+
+    from mini_data_platform_spark.sources.formats import is_compressed_path
+
+    total = 0
+    for (fmt, *_), paths in groups.items():
+        for p in paths:
+            n = None
+            if fmt == "parquet":  # its schema was read for the signature
+                n = pq.read_metadata(p).num_rows
+            elif fmt in ("csv", "json") and not is_compressed_path(p):
+                n = listed_bytes([p])
+            if n is None or total + n > ONE_TASK_MAX_ROWS:
+                return None
+            total += n
+    return total
 
 
 def run_batch_ingest(
@@ -690,13 +719,18 @@ def _run_batch_ingest(
                 FILE_RANK_COL, F.lit(max(2, len(valid)))
             ).alias("ranks"),
         )
+        # a batch the listing bounds runs in one task (SinglePartition
+        # satisfies the window's distribution); the bound rides to the sink
+        bound = row_bound(staged)
         final = dedup_keep_latest(
-            cleaned,
+            cleaned if bound is None else cleaned.coalesce(1),
             keys=spec.keys,
             order_col=spec.order_col or INGEST_ORDER_COL,
             null_wins=True,
             precedence_cols=(FILE_RANK_COL,),
         ).drop(FILE_RANK_COL)
+        if bound is not None:
+            final = with_row_bound(final, bound)
 
         try:
             report.rows_upserted = sink(final)

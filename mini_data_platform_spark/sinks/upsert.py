@@ -36,6 +36,10 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from mini_data_platform_spark.operators.resources import (
+    guarded_broadcast,
+    row_bound,
+)
 from mini_data_platform_spark.session import observed
 
 
@@ -276,13 +280,18 @@ def upsert_parquet(
     (old anti-join new on key), written to a fresh directory then
     swapped in, so a failed write never corrupts the target. The write
     is the only action: the returned upserted row count is observed on
-    it. ``df`` is cached only when a target exists, as the anti-join
-    keys and the union both read it (exchange reuse cannot share them:
-    the anti-join side gains an inferred ``isnotnull`` filter). A failed
-    write leaves no cache and no temp directory. (Lakehouse MERGE INTO
-    replaces this wholesale at scale; the logical plan is identical.)"""
+    it. When a target exists, the anti-join keys and the union both
+    read ``df``, which is cached (exchange reuse cannot share them: the
+    anti-join side gains an inferred ``isnotnull`` filter), unless it
+    carries a ``resources.row_bound`` (the runner's one-task batch):
+    then it is read twice and its keys go through ``guarded_broadcast``.
+    A failed write leaves no cache and no temp directory. (Lakehouse
+    MERGE INTO replaces this wholesale at scale; the logical plan is
+    identical.)"""
     exists = os.path.exists(target_dir)
-    new = df.cache() if exists else df
+    bound = row_bound(df)
+    cached = exists and bound is None
+    new = df.cache() if cached else df
     tmp = f"{target_dir}.tmp-{uuid.uuid4().hex[:8]}"
     try:
         obs = Observation()
@@ -291,9 +300,10 @@ def upsert_parquet(
             # the write must run in df's own session (foreachBatch hands
             # a clone): an Observation completes only from its session
             old = new.sparkSession.read.parquet(target_dir)
-            keep = old.join(
-                new.select(*key_cols), on=list(key_cols), how="left_anti"
-            )
+            keys = new.select(*key_cols)
+            if bound is not None:  # the runner's one-task batch
+                keys = guarded_broadcast(keys, bound)
+            keep = old.join(keys, on=list(key_cols), how="left_anti")
             merged = keep.unionByName(merged)
         merged.write.mode("overwrite").parquet(tmp)
         n_new = _written(spark, obs)
@@ -304,7 +314,7 @@ def upsert_parquet(
         if exists:
             shutil.rmtree(old_dir)
     finally:
-        if exists:
+        if cached:
             new.unpersist()
         shutil.rmtree(tmp, ignore_errors=True)
     return n_new

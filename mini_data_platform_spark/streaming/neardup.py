@@ -74,11 +74,14 @@ def export_index_seed(spark, index_dir: str, seed_dir: str) -> dict:
     num_hashes/bands/shingle_n or the bucket keys are incomparable
     (same rule as the index itself)."""
     from mini_data_platform_spark.operators.incremental import (
+        _NEARDUP,
+        _kind_of,
         _read_live,
         _recover_meta,
     )
 
     meta = _recover_meta(index_dir)
+    _kind_of(meta, index_dir, _NEARDUP)
     # _read_live, not _read_table: tombstoned (deleted/taken-down) corpus
     # docs must not seed the stream's bucket state
     buckets = _read_live(spark, index_dir, "buckets", meta)

@@ -22,7 +22,11 @@ def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan (AQE may later
     coalesce partitions inside them, but each Exchange is a data movement
     the plan pays for)."""
-    plan = explain_str(df, "simple")
+    return count_exchanges_in(explain_str(df, "simple"))
+
+
+def count_exchanges_in(plan: str) -> int:
+    """:func:`count_exchanges` over an already captured explain text."""
     return plan.count("Exchange hashpartitioning") + plan.count(
         "Exchange rangepartitioning"
     )

@@ -39,6 +39,16 @@ class TestBloomFilter:
         fp = probe.where(might_contain(words, F.col("k"))).count()
         assert fp <= 100
 
+    def test_probe_of_words_that_fit_32_bits(self, spark):
+        # the filter whose only set bit is bit 0 is the literal [1], which
+        # would infer array<int>: exactly the keys whose one hash lands on
+        # bit 0 match, and probes of bits 32..63 answer false, not fail
+        probe = spark.range(200).select(F.col("id").alias("k"))
+        on_bit_0 = F.pmod(F.xxhash64("k", F.lit(0)), F.lit(64)) == 0
+        want = {r.k for r in probe.where(on_bit_0).collect()}
+        got = probe.where(might_contain([1], F.col("k"), 1)).collect()
+        assert {r.k for r in got} == want and 0 < len(want) < 200
+
     def test_word_array_is_sketch_sized(self, spark):
         keys = spark.range(1000).select(F.col("id").alias("k"))
         words = build_bloom_words(keys, "k", num_bits=1 << 12)

@@ -189,6 +189,19 @@ class TestKindGuard:
         with pytest.raises(ValueError, match="is not a near-dup index"):
             neardup_index_pairs(spark, indexes[index_kind])
 
+    @pytest.mark.parametrize("index_kind", ["exact", "embdup"])
+    def test_stream_seed_export_refuses_other_kind(
+        self, spark, indexes, index_kind, tmp_path
+    ):
+        from mini_data_platform_spark.streaming.neardup import (
+            export_index_seed,
+        )
+
+        seed = str(tmp_path / "seed")
+        with pytest.raises(ValueError, match="is not a near-dup index"):
+            export_index_seed(spark, indexes[index_kind], seed)
+        assert not os.path.exists(seed)
+
 
 class TestEquivalence:
     def test_increment_union_equals_full_recompute(self, spark, tmpdir):

@@ -1,6 +1,6 @@
-"""operators/resources.py: the bounded collect, the row bound, and the
-release of what a returned plan holds (persisted frames, scratch
-directories)."""
+"""operators/resources.py: the bounded collect, the row bound, the
+listed bytes, and the release of what a returned plan holds (persisted
+frames, scratch directories)."""
 
 import glob
 import os
@@ -13,6 +13,7 @@ from mini_data_platform_spark.operators.resources import (
     attach_plan,
     bounded_rows,
     carry_plan,
+    listed_bytes,
     release_plan,
     row_bound,
     with_row_bound,
@@ -49,6 +50,17 @@ def test_row_bound_round_trip(spark):
     assert row_bound(df) == 7
     # the bound describes this frame only; a derived frame has none
     assert row_bound(df.where(F.col("id") > 0)) is None
+
+
+def test_listed_bytes_local_only(tmp_path):
+    """Local files and ``file:`` URIs are summed; a remote or missing
+    path has no listed size."""
+    a, b = tmp_path / "a.csv", tmp_path / "b.json"
+    a.write_bytes(b"x" * 10)
+    b.write_bytes(b"y" * 5)
+    assert listed_bytes([str(a), f"file://{b}"]) == 15
+    for odd in ("s3a://bucket/d.csv", str(tmp_path / "none")):
+        assert listed_bytes([str(a), odd]) is None
 
 
 def test_release_deletes_attached_directory(spark, tmp_path):

@@ -17,17 +17,21 @@ from mini_data_platform_spark.sinks.audit import AuditLog
 from mini_data_platform_spark.sinks.upsert import sqlite_conn_factory, upsert_parquet
 
 
-@pytest.fixture()
-def lake(tmp_path):
+def _make_lake(root):
     d = {
-        "incoming": str(tmp_path / "incoming"),
-        "processed": str(tmp_path / "processed"),
-        "failed": str(tmp_path / "failed"),
-        "target": str(tmp_path / "sales_target"),
-        "audit_db": str(tmp_path / "audit.db"),
+        "incoming": str(root / "incoming"),
+        "processed": str(root / "processed"),
+        "failed": str(root / "failed"),
+        "target": str(root / "sales_target"),
+        "audit_db": str(root / "audit.db"),
     }
     os.makedirs(d["incoming"])
     return d
+
+
+@pytest.fixture()
+def lake(tmp_path):
+    return _make_lake(tmp_path)
 
 
 def _put(lake, name, text):
@@ -513,6 +517,158 @@ class TestPerFileRows:
         assert [o.status for o in report.outcomes] == ["loaded"]
         assert _file_rows(report, lake) == ({"a_dirty.csv": None},) * 2
         assert len(waits) == 1 and waits[0] < 5
+
+
+_VALID_MIXED = ("a_dirty.csv", "b_good.json", "d_good.parquet")
+
+
+def _planned_batch(spark, lake, monkeypatch, land, cap=None):
+    """Seed the target with one batch, land ``land(lake)`` and ingest it
+    with ``runner.ONE_TASK_MAX_ROWS`` at ``cap(lake)`` (read after
+    landing; ``None`` keeps the default). Returns the second batch's
+    report, the explain text of the frame its sink received and of the
+    frame the sink wrote."""
+    import pyspark.sql.readwriter as rw
+
+    from mini_data_platform_spark import runner
+    from tests.explain import explain_str
+
+    _put(lake, "0_seed.csv", DIRTY_CSV)
+    _run(spark, lake)
+    land(lake)
+    plans = {}
+    real_parquet = rw.DataFrameWriter.parquet
+
+    def capture(self, path, *a, **kw):
+        plans["written"] = explain_str(self._df, "simple")
+        return real_parquet(self, path, *a, **kw)
+
+    def sink(df):
+        plans["sink"] = explain_str(df, "simple")
+        return upsert_parquet(spark, df, lake["target"], ["sale_id"])
+
+    with monkeypatch.context() as m:
+        m.setattr(rw.DataFrameWriter, "parquet", capture)
+        if cap is not None:
+            m.setattr(runner, "ONE_TASK_MAX_ROWS", cap(lake))
+        report = run_batch_ingest(
+            spark, lake["incoming"], lake["processed"], lake["failed"],
+            sink=sink,
+            audit=AuditLog(
+                functools.partial(sqlite_conn_factory, lake["audit_db"])
+            ),
+        )
+    return report, plans
+
+
+def _one_task_plan(plans) -> bool:
+    """True for the one-task plan: no shuffle under the dedup window, no
+    cache, and the batch keys broadcast into the anti-join against the
+    target scan. False for the shuffled plan: a window exchange and a
+    cached batch, the join left to the planner. Any other mix fails."""
+    from tests.explain import count_exchanges_in
+
+    window_shuffles = count_exchanges_in(plans["sink"])
+    cached = "InMemoryRelation" in plans["written"]
+    if window_shuffles == 0:
+        anti = [ln for ln in plans["written"].splitlines() if "LeftAnti" in ln]
+        assert len(anti) == 1 and "BroadcastHashJoin" in anti[0]
+        assert "Coalesce 1" in plans["sink"] and not cached
+        assert count_exchanges_in(plans["written"]) == 0
+        return True
+    assert window_shuffles == 1 and cached
+    return False
+
+
+class TestOneTaskBatch:
+    """``runner.ONE_TASK_MAX_ROWS``: a batch whose listing bounds its
+    rows (parquet footer rows, CSV and JSON bytes) at most the cap is
+    deduped in one task and its keys are broadcast into the sink's
+    anti-join; a larger, compressed or remote batch keeps the shuffled
+    plan."""
+
+    def test_cap_boundary(self, spark, tmp_path, monkeypatch):
+        def bound(lake):
+            paths = [os.path.join(lake["incoming"], f) for f in _VALID_MIXED]
+            return sum(map(os.path.getsize, paths[:2])) + (
+                pq.read_metadata(paths[2]).num_rows
+            )
+
+        seen = {}
+        for delta in (-1, 0, 1):
+            lake = _make_lake(tmp_path / f"cap{delta}")
+            report, plans = _planned_batch(
+                spark, lake, monkeypatch, _land_mixed,
+                cap=lambda lk, d=delta: bound(lk) + d,
+            )
+            assert _one_task_plan(plans) is (delta >= 0), delta
+            assert "ExistingRDD" not in plans["sink"]
+            with sqlite3.connect(lake["audit_db"]) as conn:
+                audit_rows = sorted(
+                    (os.path.basename(k), st, n, err)
+                    for k, st, n, err in conn.execute(
+                        "SELECT file_key, status, rows_processed, error "
+                        "FROM file_ingestion_log"
+                    )
+                )
+            seen[delta] = (
+                [(os.path.basename(o.path), o.status, o.rows, o.error)
+                 for o in report.outcomes],
+                report.rows_upserted,
+                audit_rows,
+                sorted(
+                    tuple(r) for r in
+                    spark.read.parquet(lake["target"]).collect()
+                ),
+            )
+        assert seen[-1] == seen[0] == seen[1]
+
+    def test_parquet_counts_footer_rows_not_bytes(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A parquet file holds far more rows than bytes: the cap
+        compares its footer's row count, so a file under the cap in
+        bytes but over it in rows keeps the shuffled plan."""
+        n = 20_000
+        size = []
+
+        def land(lk):
+            path = os.path.join(lk["incoming"], "many.parquet")
+            pq.write_table(
+                pa.table({
+                    "sale_id": ["m1"] * n,
+                    "sale_date": ["2024-06-01 00:00:00"] * n,
+                    "customer_id": ["CM"] * n,
+                    "product_id": ["PM"] * n,
+                    "quantity": [1] * n,
+                    "amount": [1.0] * n,
+                }),
+                path,
+            )
+            size.append(os.path.getsize(path))
+
+        for cap, one_task in (("bytes", False), ("rows", True)):
+            lake = _make_lake(tmp_path / cap)
+            report, plans = _planned_batch(
+                spark, lake, monkeypatch, land,
+                cap=lambda lk, c=cap: size[-1] if c == "bytes" else n,
+            )
+            assert size[-1] < n
+            assert [o.rows for o in report.loaded] == [n]
+            assert _one_task_plan(plans) is one_task, cap
+
+    def test_compressed_batch_keeps_shuffled_plan(
+        self, spark, lake, monkeypatch
+    ):
+        import gzip
+
+        def land(lk):
+            with gzip.open(os.path.join(lk["incoming"], "g.csv.gz"), "wb") as fh:
+                fh.write(DIRTY_CSV.encode())
+
+        report, plans = _planned_batch(spark, lake, monkeypatch, land)
+        assert [o.status for o in report.outcomes] == ["loaded"]
+        assert _one_task_plan(plans) is False
 
 
 class TestRunnerCli:

@@ -17,6 +17,10 @@ both scale stories are measured, not extrapolated:
   (2 driver jobs per file, 16-wide thread pool — the round-9 finding)
   hold at the reference README's 10k-file operating claim, or name
   the measured bottleneck (round-13 verdict item 5)?
+- target-size rungs (one 50k-row batch into an empty target, then into
+  a 1M-row one): does a batch's wall grow with the table it upserts
+  into? Each rung records the batch's wall and its Spark jobs; the
+  other ladders always write a fresh target.
 
 One warm run (first-pipeline-touch codegen excluded, mirroring
 bench.py's warmup doctrine), then each rung once. The artifact records
@@ -31,7 +35,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -51,6 +58,12 @@ FILE_LADDER = [
     (2_000_000, 10_000),
 ]
 
+#: target rows already in the table before the timed batch
+TARGET_LADDER = [0, 1_000_000]
+
+#: (rows, files) of the timed batch of each target-size rung
+TARGET_BATCH = (50_000, 4)
+
 #: Why the warm run is excluded, stamped into the artifact itself.
 WARM_EXCLUSION_RULE = (
     "one untimed warm run at the bench point (100k/8) always precedes "
@@ -62,7 +75,7 @@ WARM_EXCLUSION_RULE = (
 )
 
 
-def artifact(load0, warm, runs, file_runs) -> dict:
+def artifact(load0, warm, runs, file_runs, target_runs=()) -> dict:
     """The artifact dict (pure, unit-tested): the exclusion rule rides
     in the JSON so the recording is self-explaining."""
     return {
@@ -71,8 +84,66 @@ def artifact(load0, warm, runs, file_runs) -> dict:
         "warm_run_excluded": dict(warm, exclusion_rule=WARM_EXCLUSION_RULE),
         "runs": runs,
         "file_count_runs": file_runs,
+        "target_size_runs": list(target_runs),
         "reference_rows_per_min": 10_000,
     }
+
+
+def _land(spark, incoming: str, n: int, seed: int, files: int) -> None:
+    """Write ``n`` generated sales rows as ``files`` CSV files."""
+    from mini_data_platform_spark.generator import generate_sales_data
+
+    generate_sales_data(spark, n, seed=seed, num_partitions=files).write.option(
+        "header", True
+    ).mode("overwrite").csv(incoming)
+    for fn in os.listdir(incoming):  # drop _SUCCESS/.crc marker noise
+        if not fn.endswith(".csv"):
+            os.remove(os.path.join(incoming, fn))
+
+
+def target_rung(spark, target_rows: int) -> dict:
+    """Wall and Spark jobs of one ``TARGET_BATCH`` ingest (new keys)
+    into a parquet target that already holds ``target_rows`` rows,
+    loaded beforehand by the same pipeline. Landing is not timed."""
+    from mini_data_platform_spark.runner import run_batch_ingest
+    from mini_data_platform_spark.sinks.upsert import upsert_parquet
+
+    root = tempfile.mkdtemp(prefix="ingest_target_")
+    target = os.path.join(root, "sales")
+
+    def ingest(incoming):
+        return run_batch_ingest(
+            spark, incoming, os.path.join(root, "processed"),
+            os.path.join(root, "failed"),
+            sink=lambda df: upsert_parquet(spark, df, target, ["sale_id"]),
+        )
+
+    # jobs counted by id, not by a job group: per-group counts grew by a
+    # batch's jobs with every rung of one process
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        if target_rows:
+            _land(spark, os.path.join(root, "seed"), target_rows, 7, 32)
+            ingest(os.path.join(root, "seed"))
+        rows, files = TARGET_BATCH
+        _land(spark, os.path.join(root, "batch"), rows, 8, files)
+        before = set(tracker.getJobIdsForGroup())
+        t0 = time.perf_counter()
+        report = ingest(os.path.join(root, "batch"))
+        sec = time.perf_counter() - t0
+        jobs = len(set(tracker.getJobIdsForGroup()) - before)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    out = {
+        "target_rows": target_rows,
+        "batch_rows": report.rows_upserted,
+        "failed_files": len(report.failed),
+        "sec": round(sec, 3),
+        "jobs": jobs,
+    }
+    print(f"{rows} rows into {target_rows} target rows: {out['sec']} s, "
+          f"{out['jobs']} jobs", flush=True)
+    return out
 
 
 def main() -> None:
@@ -100,9 +171,10 @@ def main() -> None:
         [] if args.skip_file_ladder
         else [rung(n, files) for n, files in FILE_LADDER]
     )
+    target_runs = [target_rung(spark, n) for n in TARGET_LADDER]
     spark.stop()
 
-    out = artifact(load0, warm, runs, file_runs)
+    out = artifact(load0, warm, runs, file_runs, target_runs)
     with open(args.out, "w", encoding="utf-8") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
         fh.write("\n")
