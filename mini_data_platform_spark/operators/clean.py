@@ -7,7 +7,7 @@ narrow-waist ``DataFrame -> DataFrame`` function so pipelines compose them
 declaratively; nothing here touches the driver.
 
 Parity rules reproduced (SURVEY.md §1.2):
-- column names normalized with strip().lower()          (processor.py:40)
+- column names normalized (sources/scanstage.py)        (processor.py:40)
 - missing required columns added as all-null            (processor.py:53-56)
 - extra columns dropped by a final ordered projection   (processor.py:80)
 - string cells trimmed; literal "nan" => NULL           (processor.py:59-61)
@@ -27,11 +27,7 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from mini_data_platform_spark.schema import SALES_COLUMNS, SALES_SCHEMA
-
-
-def normalize_column_names(df: DataFrame) -> DataFrame:
-    """P1 — strip + lowercase every column name (processor.py:40)."""
-    return df.toDF(*[c.strip().lower() for c in df.columns])
+from mini_data_platform_spark.sources.scanstage import normalize_column_names
 
 
 def conform(df: DataFrame, schema: T.StructType | None = None) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Keyed deduplication operators (SURVEY.md §2.3, D1-D3).
+"""Keyed deduplication operators (SURVEY.md §2.3, D1-D2).
 
 The reference dedups by sorting on ``sale_date`` then keeping the last
 duplicate per ``sale_id`` (processor.py:74-77) — i.e. an argmax per key
@@ -64,11 +64,3 @@ def dedup_keep_latest(
     if INGEST_ORDER_COL in out.columns:
         out = out.drop(INGEST_ORDER_COL)
     return out
-
-
-def dedup_any(df: DataFrame, keys: Sequence[str] = ("sale_id",)) -> DataFrame:
-    """D3 — arbitrary-survivor dedup when no ordering column exists
-    (processor.py:76-77 fallback). ``dropDuplicates`` is a partial-agg
-    (map-side combine) first/any aggregate — cheaper than a window because
-    it needs no per-key sort."""
-    return df.dropDuplicates(list(keys))

@@ -23,9 +23,13 @@ Two execution modes:
   This is the 100 TB path: no per-file driver round-trips, one shuffle
   (the dedup window; none under ``ONE_TASK_MAX_ROWS``), one sink commit
   (idempotent upsert makes retries safe). Files are read as a few
-  signature-grouped MULTI-PATH scans (rank recovered from
-  ``input_file_name``), not per-file reads chained through an
-  O(n²)-analysis union (see ``_stage_valid_files``).
+  signature-grouped MULTI-PATH scans under the scan contract of
+  ``sources/scanstage.py`` (see ``_stage_valid_files``). Each group's
+  frame is planned on its own: a group that fails to plan (say, column
+  names that collide after normalization) quarantines only its own
+  files as ``processing_failed``, and the rest of the batch loads. An
+  error raised while the batch EXECUTES fails the whole batch
+  (``loading_failed``), since the batch is one action.
 - **per-file mode** (``per_file=True``): the reference's loop, for
   deployments that need per-file transactions / fault isolation at the
   cost of one job per file.
@@ -69,16 +73,19 @@ from mini_data_platform_spark.sinks.audit import AuditLog
 from mini_data_platform_spark.sinks.objects import move_object
 from mini_data_platform_spark.session import get_spark, observed
 from mini_data_platform_spark.sources.readers import (
-    normalize_column_names,
     read_file,
     read_file_as_strings,
 )
 from mini_data_platform_spark.sources.scanstage import (
-    SAFE_BASE,
     cleanup_dirs,
+    csv_header_names,
+    file_basename,
+    joinable,
+    normalize_column_names,
+    normalize_name,
+    read_csv_with_header,
     stage_link_dir,
 )
-from mini_data_platform_spark.sources.validate import validate_file
 
 logger = logging.getLogger(__name__)
 
@@ -147,34 +154,7 @@ def _spec_strings(df: DataFrame, spec: TableSpec, *extra) -> DataFrame:
     )
 
 
-def _prepare_one(
-    spark: SparkSession, path: str, rank: int, spec: TableSpec
-) -> DataFrame:
-    """Read one validated file and stage it for the unioned clean: string
-    cast, canonical columns, file-rank + ingest-order tags."""
-    df = _spec_strings(read_file(spark, path), spec)
-    return with_ingest_order(df).withColumn(FILE_RANK_COL, F.lit(rank))
-
-
-class _NoSignature(Exception):
-    """A file whose read-signature cannot be derived driver-side (remote
-    path, unreadable head) — the batch falls back to the per-file union
-    staging, which needs no signatures."""
-
-
 _FILE_BASE_COL = "_file_base"
-
-
-def _csv_header_line(path: str) -> str:
-    """The file's RAW first line — two CSVs with the identical header
-    line parse to the identical column tuple, which is exactly the
-    condition for reading them in ONE multi-path scan."""
-    try:
-        with open(path, "rb") as fh:
-            line = fh.readline(1 << 20)
-    except OSError as e:
-        raise _NoSignature(path) from e
-    return line.decode("utf-8", errors="replace").rstrip("\r\n")
 
 
 #: JSON files above this size are staged as their own single-file scan
@@ -255,18 +235,13 @@ def _json_type_signature(path: str, layout: str) -> tuple | None:
     """Merged top-level key/type signature of a local JSON file, parsed
     WHOLE driver-side (no sampling — sampled signatures can miss drift
     later in the file). Returns ``None`` when the file can't be cleanly
-    signed (too big, compressed, unparseable, non-object records, empty)
+    signed (too big, unparseable, non-object records, empty)
     — the caller stages it as its own solo group, which preserves
     per-file semantics by construction."""
     import json
 
-    from mini_data_platform_spark.sources.formats import is_compressed_path
-
     try:
-        if (
-            is_compressed_path(path)
-            or os.path.getsize(path) > _JSON_SIG_MAX_BYTES
-        ):
+        if os.path.getsize(path) > _JSON_SIG_MAX_BYTES:
             return None
         with open(path, "rb") as fh:
             raw = fh.read()
@@ -295,91 +270,58 @@ def _json_type_signature(path: str, layout: str) -> tuple | None:
     return merged
 
 
-def _file_signature(path: str) -> tuple:
-    """Group key under which files are SAFE to read as one multi-path
-    scan with per-file semantics preserved:
+def _file_signature(path: str) -> tuple[tuple | None, int | None]:
+    """``(key, bound)`` of one listed file. ``key`` groups files that
+    are SAFE to read as one multi-path scan with per-file semantics
+    preserved, or is ``None`` when the file has no signature (remote,
+    unreadable, compressed, untrusted CSV header, unsignable JSON, ORC):
 
-    - csv: identical raw header line (same parsed columns, same order —
-      positional alignment under one inferred all-string schema);
-      compressed CSVs (raw header bytes are codec garbage) stage solo;
+    - csv: the header's normalized names (``scanstage.csv_header_names``),
+      applied by position under one all-string schema;
     - json: same layout (array vs ndjson) AND same merged top-level
       key/type signature, parsed whole driver-side. Layout alone is NOT
       enough: Spark infers ONE schema per scan, so cross-file type
       drift (long in file A, double in file B) would widen group-wide
       and the cast-to-string would render different bytes than per-file
-      staging ('123.0' vs '123'). Files whose signature can't be
-      derived (big, compressed, unparseable) stage solo — per-file
-      semantics by construction, no batch-wide fallback;
-    - parquet: identical normalized footer schema (read driver-side via
-      pyarrow — no py4j round trip); files with drifted footers land in
-      separate groups and meet only AFTER the all-string cast, exactly
-      like the per-file path;
-    - orc / anything else: one group per file (rare here; keeps legacy
-      per-file read semantics without a special case)."""
+      staging ('123.0' vs '123');
+    - parquet: identical normalized footer schema; files with drifted
+      footers land in separate groups and meet only AFTER the
+      all-string cast, exactly like the per-file path.
+
+    ``bound`` is the file's listed row bound (``operators/resources.py``):
+    parquet footer rows, or uncompressed CSV/JSON bytes; ``None`` when
+    unknown. One parquet footer read gives both."""
     from mini_data_platform_spark.sources.formats import (
         detect_format_path,
         is_compressed_path,
         sniff_json_layout_path,
     )
 
+    if not os.path.isfile(path):
+        return None, None
     try:
         fmt = detect_format_path(path)
-        if fmt == "csv":
-            if is_compressed_path(path):
-                # Spark decompresses this transparently in the group
-                # scan, but the raw header-line signature would be
-                # codec bytes — give it a one-file group instead
-                return ("csv", ("__solo__", path))
-            return ("csv", _csv_header_line(path))
-        if fmt == "json":
-            layout = sniff_json_layout_path(path)
-            type_sig = _json_type_signature(path, layout)
-            if type_sig is None:
-                return ("json", layout, ("__solo__", path))
-            return ("json", layout, type_sig)
         if fmt == "parquet":
             import pyarrow.parquet as pq
 
-            schema = pq.read_schema(path)
-            return (
-                "parquet",
-                tuple(
-                    (n.strip().lower(), str(t))
-                    for n, t in zip(schema.names, schema.types)
-                ),
+            meta = pq.read_metadata(path)
+            schema = meta.schema.to_arrow_schema()
+            key = tuple(
+                (normalize_name(n), str(t))
+                for n, t in zip(schema.names, schema.types)
             )
-    except _NoSignature:
-        raise
-    except Exception as e:  # noqa: BLE001 — unreadable head/footer
-        raise _NoSignature(path) from e
-    return (fmt, path)
-
-
-def _csv_group_schema(header_line: str):
-    """Explicit all-string StructType from a CSV group's raw header
-    line — the same names Spark's header pass would produce, minus the
-    every-file name-inference scan. Returns ``None`` (let Spark infer)
-    whenever the header can't be trusted driver-side: quoted
-    multi-line header (odd quote count), unparseable, empty, an empty
-    field name (Spark substitutes ``_cN``), or duplicate names (Spark
-    dedups with suffixes) — the fallback read reproduces those edge
-    semantics exactly."""
-    import csv as _csv
-    import io
-
-    if not header_line or header_line.count('"') % 2:
-        return None
-    try:
-        row = next(_csv.reader(io.StringIO(header_line)))
-    except (StopIteration, _csv.Error):
-        return None
-    if not row or any(not c for c in row) or len(set(row)) != len(row):
-        return None
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [T.StructField(c, T.StringType()) for c in row]
-    )
+            return ("parquet", key), meta.num_rows
+        if fmt not in ("csv", "json") or is_compressed_path(path):
+            return None, None
+        bound = listed_bytes([path])
+        if fmt == "csv":
+            names = csv_header_names(path)
+            return (None if names is None else ("csv", names)), bound
+        layout = sniff_json_layout_path(path)
+        sig = _json_type_signature(path, layout)
+        return (None if sig is None else ("json", layout, sig)), bound
+    except Exception:  # noqa: BLE001 — unreadable head/footer: no signature
+        return None, None
 
 
 def _read_group(
@@ -389,47 +331,32 @@ def _read_group(
     stage_dirs: list[str] | None = None,
 ) -> DataFrame:
     """One multi-path scan for a signature group. Large LOCAL groups
-    are hardlink-staged into a temp dir and read as ONE directory —
-    explicit path lists pay a per-path JVM qualification round at
-    reader-build time (~1.8 ms/path: 7 s of driver wall at 4096 paths,
-    the INGEST_SCALE r15 ladder wall), while a directory is one
-    ``listStatus``. Provenance is unchanged (links carry the original
-    basenames). The staging dir is appended to ``stage_dirs`` — the
-    caller keeps it alive until the batch's actions have run."""
+    are hardlink-staged into a temp dir and read as ONE directory
+    (``sources/scanstage.py``). The staging dir is appended to
+    ``stage_dirs`` — the caller keeps it alive until the batch's
+    actions have run."""
     fmt = sig[0]
     scan: list[str] | str = paths
-    if stage_dirs is not None and fmt in ("csv", "json", "parquet"):
+    if stage_dirs is not None:
         d = stage_link_dir(paths)
         if d is not None:
             stage_dirs.append(d)
             scan = d
     if fmt == "csv":
-        reader = spark.read.option("header", True).option(
-            "mode", "PERMISSIVE"
-        )
-        # the group's raw header line IS the signature: derive the
-        # explicit all-string schema from it driver-side — Spark's
-        # column-NAME inference touches every file of the scan at
-        # reader-build time (~7.5 s at 4096 files, measured r15) to
-        # produce exactly this schema
-        schema = (
-            _csv_group_schema(sig[1]) if isinstance(sig[1], str) else None
-        )
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.csv(scan)
-    elif fmt == "json" and sig[1] == "array":
+        # the group's header names ARE the signature: Spark's header
+        # inference would touch every file of the scan at reader-build
+        # time (~7.5 s at 4096 files, measured r15) to produce them
+        return read_csv_with_header(spark, sig[1], scan)
+    if fmt == "json" and sig[1] == "array":
         df = spark.read.option("multiLine", True).json(scan)
     elif fmt == "json":
         df = spark.read.json(scan)
-    elif fmt == "parquet":
+    else:
         df = (
             spark.read.parquet(scan)
             if isinstance(scan, str)
             else spark.read.parquet(*scan)
         )
-    else:  # single-file group (orc & friends): the legacy reader
-        df = read_file(spark, paths[0], fmt)
     return normalize_column_names(df)
 
 
@@ -438,86 +365,92 @@ def _stage_valid_files(
     valid: list[str],
     spec: TableSpec,
     stage_dirs: list[str] | None = None,
-) -> DataFrame:
-    """Stage ALL valid files as a handful of multi-path scans: files are
-    grouped by :func:`_file_signature` (read-safe groups), each group is
-    ONE ``spark.read`` (Spark bin-packs small files into
-    ``maxPartitionBytes`` splits), and each row's file rank comes from
-    joining ``input_file_name()``'s basename against a broadcast
-    (basename → listing rank) table, so cross-file precedence stays
-    byte-identical to the reference's sequential loop. The table is one
+) -> tuple[DataFrame | None, dict[str, str]]:
+    """Stage ALL valid files as a handful of scans: files are grouped
+    by :func:`_file_signature`, and each group is ONE ``spark.read``
+    (Spark bin-packs small files into ``maxPartitionBytes`` splits). A
+    file without a signature, or one that ``scanstage.joinable``
+    refuses, is its own group, read by ``read_file``.
+
+    A file's listing index is its rank, the cross-file precedence of the
+    reference's sequential loop. A one-file group carries its rank as a
+    literal. A multi-file group joins the basename of each row's file
+    against a broadcast (basename → rank) table. The table is one
     literal, the ``/``-joined basenames (``/`` is not ``SAFE_BASE``),
     exploded in the JVM: ``createDataFrame`` would fork Python workers,
     per-file literals cost a py4j build each, and ``array_position``
-    scans the whole list per row. The frame carries the batch's
-    ``_one_task_bound`` as its ``row_bound`` when there is one.
+    scans the whole list per row.
 
-    Raises :class:`_NoSignature` when any signature cannot be derived
-    (remote/unreadable path) or basenames collide across directories —
-    the caller falls back to the per-file union staging."""
-    if _FILE_BASE_COL in spec.columns:  # provenance-name collision
-        raise _NoSignature(_FILE_BASE_COL)
-    bases = [os.path.basename(path) for path in valid]
-    for base in bases:
-        if not SAFE_BASE.match(base):
-            # input_file_name() reports the URI form; for names outside
-            # the URI-safe set the two spellings can disagree (and a
-            # blanket url_decode turns '+' into a space), so the rank
-            # join could silently DROP rows — refuse and stage legacy
-            raise _NoSignature(f"non-URI-safe basename: {base}")
-    if len(set(bases)) < len(bases):
-        # ambiguous rank map — e.g. recursive listing
-        raise _NoSignature("duplicate basename")
-    groups: dict[tuple, list[str]] = {}
-    for path in valid:
-        groups.setdefault(_file_signature(path), []).append(path)
+    Each group's frame is analysed as it is built. A group that fails
+    to plan (a read error, or names that collide after normalization)
+    is left out, and its files are returned with the error. Returns the
+    union of the other groups (``None`` if none is left), carrying the
+    batch's ``_one_task_bound`` as its ``row_bound`` when there is one,
+    and the failed files."""
+    # a spec column named like the provenance column: no group joins
+    can_join = (
+        [False] * len(valid) if _FILE_BASE_COL in spec.columns
+        else joinable(valid)
+    )
+    groups: dict[tuple, list[int]] = {}
+    bounds = []
+    for rank, (path, ok) in enumerate(zip(valid, can_join)):
+        sig, bound = _file_signature(path)
+        bounds.append(bound)
+        key = sig if sig is not None and ok else (None, rank)
+        groups.setdefault(key, []).append(rank)
 
-    # provenance in the scan's own projection: input_file_name() is
-    # only defined over the scan's rows
-    provenance = F.regexp_extract(F.input_file_name(), "([^/]+)$", 1)
-    frames = [
-        _spec_strings(
-            _read_group(spark, sig, paths, stage_dirs), spec,
-            provenance.alias(_FILE_BASE_COL),
+    if any(len(members) > 1 for members in groups.values()):
+        ranks = spark.range(1, numPartitions=1).select(
+            F.posexplode(
+                F.split(F.lit("/".join(map(os.path.basename, valid))), "/")
+            ).alias(FILE_RANK_COL, _FILE_BASE_COL)
         )
-        for sig, paths in groups.items()
-    ]
+    frames: list[DataFrame] = []
+    failed: dict[str, str] = {}
+    planned: list[int] = []
+    for key, members in groups.items():
+        paths = [valid[r] for r in members]
+        try:
+            if key[0] is None:
+                df = read_file(spark, paths[0])
+            else:
+                df = _read_group(spark, key, paths, stage_dirs)
+            if len(members) == 1:
+                frame = _spec_strings(
+                    df, spec, F.lit(members[0]).alias(FILE_RANK_COL)
+                )
+            else:
+                # provenance in the scan's own projection:
+                # input_file_name() is only defined over the scan's rows
+                frame = (
+                    _spec_strings(
+                        df, spec, file_basename().alias(_FILE_BASE_COL)
+                    )
+                    .join(F.broadcast(ranks), _FILE_BASE_COL)
+                    .drop(_FILE_BASE_COL)
+                )
+        except Exception as e:  # noqa: BLE001 — quarantine this group only
+            failed.update((p, str(e)) for p in paths)
+            continue
+        frames.append(frame)
+        planned += members
+    if not frames:
+        return None, failed
     staged = frames[0]
     for f in frames[1:]:  # one union per GROUP, not per file
         staged = staged.unionByName(f)
-    ranks = spark.range(1, numPartitions=1).select(
-        F.posexplode(F.split(F.lit("/".join(bases)), "/")).alias(
-            FILE_RANK_COL, _FILE_BASE_COL
-        )
-    )
-    staged = (
-        with_ingest_order(staged)
-        .join(F.broadcast(ranks), _FILE_BASE_COL)
-        .drop(_FILE_BASE_COL)
-    )
-    bound = _one_task_bound(groups)
-    return staged if bound is None else with_row_bound(staged, bound)
+    staged = with_ingest_order(staged)
+    bound = _one_task_bound([bounds[r] for r in planned])
+    return (staged if bound is None else with_row_bound(staged, bound)), failed
 
 
-def _one_task_bound(groups: dict[tuple, list[str]]) -> int | None:
-    """The batch's listed row bound (``operators/resources.py``) when
-    it is at most ``ONE_TASK_MAX_ROWS``, else ``None``. No job."""
-    import pyarrow.parquet as pq
-
-    from mini_data_platform_spark.sources.formats import is_compressed_path
-
-    total = 0
-    for (fmt, *_), paths in groups.items():
-        for p in paths:
-            n = None
-            if fmt == "parquet":  # its schema was read for the signature
-                n = pq.read_metadata(p).num_rows
-            elif fmt in ("csv", "json") and not is_compressed_path(p):
-                n = listed_bytes([p])
-            if n is None or total + n > ONE_TASK_MAX_ROWS:
-                return None
-            total += n
-    return total
+def _one_task_bound(bounds: list[int | None]) -> int | None:
+    """The batch's listed row bound when every file has one and their
+    sum is at most ``ONE_TASK_MAX_ROWS``, else ``None``. No job."""
+    if None in bounds or sum(bounds) > ONE_TASK_MAX_ROWS:
+        return None
+    return sum(bounds)
 
 
 def run_batch_ingest(
@@ -687,23 +620,20 @@ def _run_batch_ingest(
     # every action over the lazy staged plan — freed after the sink
     stage_dirs: list[str] = []
     try:
+        staged, failed = _stage_valid_files(spark, valid, spec, stage_dirs)
+        for path, err in failed.items():
+            report.outcomes.append(
+                _quarantine(path, failed_dir, "processing_failed", audit, err)
+            )
+        if staged is None:
+            return report
+        loading = [p for p in valid if p not in failed]
         try:
-            try:
-                staged = _stage_valid_files(spark, valid, spec, stage_dirs)
-            except _NoSignature:
-                # remote/unreadable heads or basename collisions: the
-                # signature-grouped multi-path scan cannot prove itself
-                # safe — stage the legacy way (per-file read + union)
-                staged = _prepare_one(spark, valid[0], 0, spec)
-                for rank, path in enumerate(valid[1:], start=1):
-                    staged = staged.unionByName(
-                        _prepare_one(spark, path, rank, spec)
-                    )
             cleaned = clean_columns(
                 staged, spec, keep=(FILE_RANK_COL, INGEST_ORDER_COL)
             )
-        except Exception as e:  # noqa: BLE001 — read/plan failure: quarantine all
-            for path in valid:
+        except Exception as e:  # noqa: BLE001 — plan failure: quarantine all
+            for path in loading:
                 report.outcomes.append(
                     _quarantine(
                         path, failed_dir, "processing_failed", audit, str(e)
@@ -735,7 +665,7 @@ def _run_batch_ingest(
         try:
             report.rows_upserted = sink(final)
         except Exception as e:  # noqa: BLE001 — sink failure: batch-granular quarantine
-            for path in valid:
+            for path in loading:
                 report.outcomes.append(
                     _quarantine(
                         path, failed_dir, "loading_failed", audit, str(e)
@@ -753,6 +683,8 @@ def _run_batch_ingest(
     for b in (metrics or {}).get("ranks") or []:
         ranks[int(b["x"])] = ranks.get(int(b["x"]), 0) + round(b["y"])
     for rank, path in enumerate(valid):
+        if path in failed:
+            continue
         move_object(path, os.path.join(processed_dir, os.path.basename(path)))
         rows = None if metrics is None else ranks.get(rank, 0)
         if audit:

@@ -1,23 +1,16 @@
-"""Small-file compaction for parquet directories.
+"""Parquet directory statistics for sizing segment compactions.
 
 Streaming/incremental ingestion produces many small files; at scale the
 cost is real — every file is a scan task, a footer read, an object-store
-request. Compaction rewrites a directory to ~``target_file_bytes`` files
+request. The segment stores (``operators/mergetable.py``,
+``operators/incremental.py``) compact to ~``DEFAULT_TARGET_BYTES`` files
 (the same reasoning behind ``spark.sql.files.maxPartitionBytes``: one
-healthy-sized task per file). Uses the same write-to-temp + atomic-swap
-pattern as the parquet upsert so a failed compaction never corrupts the
-target. In a lakehouse deployment this is OPTIMIZE/rewrite_data_files;
-the logical operation is identical.
+healthy-sized task per file), sized from these driver-side counts.
 """
 
 from __future__ import annotations
 
-import math
 import os
-import shutil
-import uuid
-
-from pyspark.sql import SparkSession
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -48,24 +41,3 @@ def dir_parquet_rows(path: str) -> int:
             if f.endswith(".parquet"):
                 n += pq.read_metadata(os.path.join(root, f)).num_rows
     return n
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = DEFAULT_TARGET_BYTES,
-) -> int:
-    """Rewrite ``path`` to ceil(total/target) files. Returns the new file
-    count. No-op (returns current count) when already compact."""
-    n_files, total = dir_parquet_stats(path)
-    want = max(1, math.ceil(total / target_file_bytes))
-    if n_files <= want:
-        return n_files
-    df = spark.read.parquet(path)
-    tmp = f"{path}.compact-{uuid.uuid4().hex[:8]}"
-    df.repartition(want).write.mode("overwrite").parquet(tmp)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return dir_parquet_stats(path)[0]

@@ -1,7 +1,7 @@
 """Partitioned data layout — directory-level partition pruning.
 
-One leg of the 100 TB layout strategy, alongside compaction
-(sinks/compact.py — small-file control): partition the storage directory
+One leg of the 100 TB layout strategy, alongside segment compaction
+(small-file control): partition the storage directory
 tree by a LOW-cardinality column (almost always the event/order date) so
 time-ranged queries never open irrelevant files at all. Catalyst turns a
 filter on the partition column into ``PartitionFilters`` — pruning happens

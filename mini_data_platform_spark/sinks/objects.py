@@ -72,18 +72,3 @@ def list_objects(prefix: str) -> list[str]:
     return sorted(
         p for p in glob.glob(os.path.join(prefix, "*")) if os.path.isfile(p)
     )
-
-
-def ensure_bucket(bucket_or_dir: str) -> None:
-    """head-else-create (reference minio_client.py:32-42); mkdir -p locally."""
-    if is_s3_uri(bucket_or_dir):
-        if boto3 is None:
-            raise RuntimeError("boto3 not available")
-        s3 = boto3.client("s3")
-        bucket, _ = _split_s3(bucket_or_dir)
-        try:
-            s3.head_bucket(Bucket=bucket)
-        except Exception:  # noqa: BLE001
-            s3.create_bucket(Bucket=bucket)
-        return
-    os.makedirs(bucket_or_dir, exist_ok=True)

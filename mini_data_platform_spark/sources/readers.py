@@ -1,7 +1,7 @@
 """Multi-format file readers (SURVEY.md §2.1 S2-S5).
 
 Each reader produces a DataFrame with normalized column names
-(strip().lower(), /root/reference/dags/src/processor.py:40). The
+(``scanstage.normalize_column_names``, processor.py:40). The
 string-mode variants reproduce the reference's read-everything-as-text
 discipline (``pd.read_csv(dtype=str)``, processor.py:23): coercion with
 defaults happens later in operators/clean.py, so a bad cell can never
@@ -11,9 +11,8 @@ Scale notes:
 - these take paths (or glob patterns / directories) — Spark parallelizes
   multi-file and splittable-file reads natively; nothing is ever
   downloaded driver-side.
-- CSV/JSON readers run in PERMISSIVE mode with a ``_corrupt_record``
-  column available for row-granular quarantine; the file-granular
-  verdict (matching the reference) lives in sources/validate.py.
+- CSV/JSON readers run in PERMISSIVE mode; the file-granular verdict
+  (matching the reference) lives in sources/validate.py.
 """
 
 from __future__ import annotations
@@ -24,12 +23,7 @@ from mini_data_platform_spark.sources.formats import (
     detect_format_path,
     sniff_json_layout_path,
 )
-
-CORRUPT_COL = "_corrupt_record"
-
-
-def normalize_column_names(df: DataFrame) -> DataFrame:
-    return df.toDF(*[c.strip().lower() for c in df.columns])
+from mini_data_platform_spark.sources.scanstage import normalize_column_names
 
 
 def read_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -87,37 +81,3 @@ def read_file_as_strings(spark: SparkSession, path: str, fmt: str | None = None)
     df = read_file(spark, path, fmt)
     return df.select(*[F.col(c).cast("string").alias(c) for c in df.columns])
 
-
-def read_csv_tracking_corrupt(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Row-level quarantine variant (SURVEY.md V4): typed PERMISSIVE read
-    where rows that fail the schema land intact in ``_corrupt_record``
-    instead of failing the file. Complements the file-granularity
-    validators: use this when a file is broadly healthy and only stray
-    rows should quarantine. ``schema`` must NOT already contain the
-    corrupt column."""
-    from pyspark.sql import types as T
-
-    full = T.StructType(
-        [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)]
-    )
-    return normalize_column_names(
-        spark.read.option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .schema(full)
-        .csv(path)
-    )
-
-
-def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good_rows, corrupt_rows): good rows drop the tracking column;
-    corrupt rows keep the raw line for the quarantine sink. The cache is
-    required — Spark refuses plans that filter on only the internal
-    corrupt column of an uncached PERMISSIVE read (the parser would have
-    pruned the data columns away)."""
-    df = df.cache()
-    good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_record")
-    )
-    return good, bad

@@ -29,8 +29,12 @@ from mini_data_platform_spark.schema import SALES_COLUMNS
 from mini_data_platform_spark.sources import readers
 from mini_data_platform_spark.sources.formats import detect_format_path
 from mini_data_platform_spark.sources.scanstage import (
-    SAFE_BASE,
     cleanup_dirs,
+    csv_header_names,
+    file_basename,
+    joinable,
+    normalize_name,
+    read_csv_with_header,
     stage_link_dir,
 )
 
@@ -49,69 +53,7 @@ def _parseable_ts(col):
 
 
 def _missing(cols: list[str], spec: TableSpec) -> list[str]:
-    have = {c.strip().lower() for c in cols}
-    return sorted(spec.required - have)
-
-
-def _local_csv_header_columns(path: str) -> list[str] | None:
-    """Driver-side CSV header parse — the file-count-scale fast path
-    (round-14: at 10k files the validator's cost is pure Spark JOB
-    COUNT, ~2 tiny jobs/file; the header check and the sample read's
-    schema inference are both satisfiable from the first line read
-    locally, leaving ONE job per file for the date probe). Returns
-    ``None`` whenever the header cannot be trusted locally — remote
-    path, empty file, quoted multi-line header, duplicate normalized
-    names — and the caller falls back to the Spark read, whose
-    semantics this path must exactly reproduce."""
-    import csv as _csv
-    import io
-
-    from mini_data_platform_spark.sources.formats import is_compressed_path
-
-    # Spark decompresses .csv.gz & friends transparently; a raw byte
-    # read sees the codec stream, which can slip past the guards below
-    # and produce a false missing-columns quarantine — let Spark read it
-    if is_compressed_path(path):
-        return None
-    try:
-        with open(path, "rb") as fh:
-            raw = fh.readline(1 << 20)
-    except OSError:
-        return None
-    if not raw:
-        return None
-    text = raw.decode("utf-8", errors="replace").rstrip("\r\n")
-    # an odd quote count means the header row continues past the first
-    # physical line (embedded newline in a quoted name) — Spark's
-    # parser handles that; this fast path must not guess
-    if not text or text.count('"') % 2:
-        return None
-    try:
-        row = next(_csv.reader(io.StringIO(text)))
-    except (StopIteration, _csv.Error):
-        return None
-    if not row or len({c.strip().lower() for c in row}) != len(row):
-        return None  # empty or duplicate-name header: let Spark decide
-    return row
-
-
-def _csv_with_header(spark: SparkSession, cols: list[str], src):
-    """``src`` read as CSV under an all-string schema built from its
-    driver-parsed header ``cols``: the frame ``readers.read_csv``
-    produces, minus the inference job. The schema is built
-    programmatically, never as DDL: header names are arbitrary user
-    bytes (backticks included)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField(c.strip().lower(), T.StringType()) for c in cols]
-    )
-    return (
-        spark.read.schema(schema)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .csv(src)
-    )
+    return sorted(spec.required - set(map(normalize_name, cols)))
 
 
 def _date_issue(ts_col: str, bad: int) -> tuple[bool, str]:
@@ -140,10 +82,10 @@ def _missing_keys(obj, spec: TableSpec):
 def validate_csv(
     spark: SparkSession, path: str, spec: TableSpec = SALES_SPEC
 ) -> tuple[bool, str]:
-    local_cols = _local_csv_header_columns(path)
+    names = csv_header_names(path)
     try:
-        if local_cols is not None:
-            sample = _csv_with_header(spark, local_cols, path)
+        if names is not None:
+            sample = read_csv_with_header(spark, names, path)
         else:
             sample = readers.read_csv(spark, path)
         sample = sample.limit(CSV_SAMPLE_ROWS)
@@ -154,19 +96,16 @@ def validate_csv(
     if missing:
         return False, f"Missing required columns: {missing}"
     # the reference's date probe (first 50 non-null must ALL parse),
-    # applied to every timestamp column the spec declares
-    lower = {c.strip().lower(): c for c in cols}
+    # applied to every timestamp column the spec declares; both readers
+    # give normalized names
     for ts_col in spec.timestamp_columns:
-        probe = lower.get(ts_col)
-        if probe is None:
+        if ts_col not in cols:
             continue
+        probe = F.col(ts_col)
         bad = (
-            sample.select(F.col(probe))
+            sample.select(probe)
             .limit(DATE_SAMPLE_ROWS)
-            .where(
-                F.col(probe).isNotNull()
-                & _parseable_ts(F.col(probe)).isNull()
-            )
+            .where(probe.isNotNull() & _parseable_ts(probe).isNull())
             .count()
         )
         if bad:
@@ -188,8 +127,8 @@ def _grouped_probe(
     spec: TableSpec,
 ) -> dict[str, tuple[bool, str]]:
     """Every batched probe in ONE Spark plan. Each CSV header group
-    ``(header columns, paths)`` gets :func:`validate_csv`'s date probe:
-    unparseable non-null values among a file's first
+    ``(normalized header names, paths)`` gets :func:`validate_csv`'s
+    date probe: unparseable non-null values among a file's first
     ``DATE_SAMPLE_ROWS`` rows per timestamp column, the first failing
     column supplying the message. The ndjson files get
     :func:`validate_json`'s required-key check over their first
@@ -223,7 +162,7 @@ def _grouped_probe(
 
     def shape(df, limit: int, ts, obj):
         return df.select(
-            F.regexp_extract(F.input_file_name(), "([^/]+)$", 1).alias("_f"),
+            file_basename().alias("_f"),
             F.monotonically_increasing_id().alias("_i"),
             F.lit(limit).alias("_lim"),
             ts.cast("array<string>").alias("_ts"),
@@ -231,11 +170,10 @@ def _grouped_probe(
         )
 
     try:
-        for cols, group in csv_groups:
-            lower = {c.strip().lower() for c in cols}
-            if lower.intersection(ts_all):  # else every file passes
-                ts = [F.col(t) if t in lower else F.lit(None) for t in ts_all]
-                df = _csv_with_header(spark, list(cols), scan(group))
+        for names, group in csv_groups:
+            if set(names).intersection(ts_all):  # else every file passes
+                ts = [F.col(t) if t in names else F.lit(None) for t in ts_all]
+                df = read_csv_with_header(spark, names, scan(group))
                 frames.append(
                     shape(df, DATE_SAMPLE_ROWS, F.array(*ts), F.lit(None))
                 )
@@ -289,14 +227,16 @@ def validate_files(
     at 10k files the per-file validator loop is pure driver job count,
     measured ~24 ms/file even 16-wide because the py4j plan builds
     serialize on the GIL). Small local files (≤ CSV_BATCH_MAX_BYTES)
-    batch their Spark work: CSVs whose header parses driver-side get
-    their column check WITHOUT Spark, and their date probes and the
+    batch their Spark work: CSVs whose header parses driver-side
+    (``scanstage.csv_header_names``) get their column check WITHOUT
+    Spark, and their date probes, grouped by those header names, and the
     ndjson files' required-key checks share ONE plan
-    (:func:`_grouped_probe`). Everything else — large files, remote paths,
-    array JSON, parquet, ORC, duplicate or non-URI-safe basenames —
-    takes the unchanged per-file :func:`validate_file` through the
-    thread pool. Verdicts are byte-identical to the per-file path
-    (equivalence is pinned in tests/test_sources.py)."""
+    (:func:`_grouped_probe`). Everything else — large files, remote
+    paths, array JSON, parquet, ORC, files ``scanstage.joinable``
+    refuses (duplicate or non-URI-safe basenames) — takes the unchanged
+    per-file :func:`validate_file` through the thread pool. Verdicts are
+    byte-identical to the per-file path (equivalence is pinned in
+    tests/test_sources.py)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from mini_data_platform_spark.sources.formats import (
@@ -304,42 +244,33 @@ def validate_files(
         sniff_json_layout_path,
     )
 
-    batched: dict[tuple, list[str]] = {}  # csv header -> paths
+    batched: dict[tuple, list[str]] = {}  # csv header names -> paths
     nd_group: list[str] = []
     verdicts: dict[str, tuple[bool, str]] = {}
     fallback: list[str] = []
-    seen_bases = set()
-    for p in paths:
+    for p, can_join in zip(paths, joinable(paths)):
         try:
             fmt = detect_format_path(p)
             small = os.path.getsize(p) <= CSV_BATCH_MAX_BYTES
         except Exception:  # noqa: BLE001 — unreadable: per-file decides
             fmt, small = None, False
-        base_name = os.path.basename(p)
-        # input_file_name() reports the URI spelling — only join
-        # verdicts back on basenames where the two are identical
-        joinable = base_name not in seen_bases and bool(
-            SAFE_BASE.match(base_name)
-        )
-        if fmt == "csv" and small and joinable:
-            cols = _local_csv_header_columns(p)
-            if cols is not None:
-                seen_bases.add(base_name)
-                missing = _missing(cols, spec)
+        if fmt == "csv" and small and can_join:
+            names = csv_header_names(p)
+            if names is not None:
+                missing = _missing(names, spec)
                 if missing:
                     verdicts[p] = (
                         False, f"Missing required columns: {missing}",
                     )
                 else:
-                    batched.setdefault(tuple(cols), []).append(p)
+                    batched.setdefault(names, []).append(p)
                 continue
         elif (
             fmt == "json"
             and small
-            and joinable
+            and can_join
             and sniff_json_layout_path(p) == "ndjson"
         ):
-            seen_bases.add(base_name)
             nd_group.append(p)
             continue
         fallback.append(p)

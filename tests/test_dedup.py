@@ -1,11 +1,10 @@
-"""Dedup semantics tests (SURVEY.md §2.3 D1-D3): keep-latest argmax,
+"""Dedup semantics tests (SURVEY.md §2.3 D1-D2): keep-latest argmax,
 null-date-wins parity with pandas NaT-sorts-last (processor.py:74-77),
 deterministic _ingest_order tie-break."""
 
 import datetime
 
 from mini_data_platform_spark.operators.dedup import (
-    dedup_any,
     dedup_keep_latest,
     with_ingest_order,
 )
@@ -46,13 +45,6 @@ def test_tie_breaks_to_last_ingested(spark):
     out = dedup_keep_latest(with_ingest_order(df)).collect()
     assert len(out) == 1 and out[0].amount == 3.0  # pandas keep="last" parity
     assert "_ingest_order" not in dedup_keep_latest(with_ingest_order(df)).columns
-
-
-def test_dedup_any_unique_keys(spark):
-    df = _sales(spark, [("a", None, 1.0), ("a", None, 2.0), ("b", None, 3.0)])
-    out = dedup_any(df)
-    assert out.count() == 2
-    assert sorted(r.sale_id for r in out.collect()) == ["a", "b"]
 
 
 def test_key_uniqueness_property(spark):

@@ -130,6 +130,52 @@ def _file_rows(report, lake):
     return got, logged
 
 
+def _outcomes(spark, lake):
+    """A finished batch's audit rows (basename, status, rows) and its
+    target rows, both sorted."""
+    with sqlite3.connect(lake["audit_db"]) as conn:
+        audit = sorted(
+            (os.path.basename(k), st, n)
+            for k, st, n in conn.execute(
+                "SELECT file_key, status, rows_processed "
+                "FROM file_ingestion_log"
+            )
+        )
+    target = sorted(
+        tuple(r) for r in spark.read.parquet(lake["target"]).collect()
+    )
+    return audit, target
+
+
+def _scale_and_per_file(spark, tmp_path, land):
+    """Ingest the batch ``land(lake)`` writes in scale mode and in
+    per-file mode, each into its own lake. Returns both lakes and the
+    explain text of the frame the scale-mode sink received."""
+    from tests.explain import explain_str
+
+    scale, per_file = _make_lake(tmp_path / "scale"), _make_lake(
+        tmp_path / "per_file"
+    )
+    plans = []
+
+    def sink(df):
+        plans.append(explain_str(df, "simple"))
+        return upsert_parquet(spark, df, scale["target"], ["sale_id"])
+
+    land(scale)
+    run_batch_ingest(
+        spark, scale["incoming"], scale["processed"], scale["failed"],
+        sink=sink,
+        audit=AuditLog(functools.partial(sqlite_conn_factory, scale["audit_db"])),
+    )
+    land(per_file)
+    _run(spark, per_file, per_file=True)
+    return scale, per_file, plans[0]
+
+
+_HDR = "sale_id,sale_date,customer_id,product_id,quantity,amount\n"
+
+
 class TestBatchIngest:
     def test_mixed_batch(self, spark, lake):
         _land_mixed(lake)
@@ -418,31 +464,90 @@ class TestBatchIngest:
     def test_non_uri_safe_basename_falls_back_losslessly(self, spark, lake):
         """A filename whose URI spelling differs from its basename
         (space -> %20) must not silently drop rows through the rank
-        join — such batches stage the legacy per-file way."""
+        join — such a file is scanned on its own."""
         _put(lake, "sp ace.csv", DIRTY_CSV)
         report, _ = _run(spark, lake)
         assert [o.status for o in report.outcomes] == ["loaded"]
         got = {r["sale_id"] for r in spark.read.parquet(lake["target"]).collect()}
         assert {"s1", "s2", "s3"} | FILLER_KEYS <= got
 
-    def test_stage_fallback_on_unreadable_signature(
-        self, spark, lake, monkeypatch
+    def test_unjoinable_basename_scans_alone(self, spark, tmp_path):
+        """Only the file whose basename cannot be joined back by
+        provenance is scanned alone, with its rank as a literal: the
+        two same-header files still share one scan, and the last file
+        still wins a cross-file key."""
+        def land(lk):
+            for name, c in (("a.csv", "A"), ("b.csv", "B"), ("c d.csv", "C")):
+                _put(
+                    lk, name,
+                    _HDR + f"k,2024-01-01 00:00:00,C{c},P,1,1.0\n"
+                    f"{c}1,2024-01-02 00:00:00,C{c},P,1,2.0\n",
+                )
+
+        scale, per_file, plan = _scale_and_per_file(spark, tmp_path, land)
+        assert plan.count("FileScan csv") == 2
+        audit, target = _outcomes(spark, scale)
+        assert (audit, target) == _outcomes(spark, per_file)
+        assert {st for _, st, _ in audit} == {"loaded"}
+        assert [r for r in target if r[0] == "k"][0][2] == "CC"
+
+    def test_stage_fallback_on_unreadable_signature(self, spark, tmp_path):
+        """A file whose signature cannot be derived — here a CSV header
+        with an empty name, which Spark renames ``_cN`` — is staged on
+        its own by ``read_file``; the other files still group, and
+        outcomes and target equal per-file mode."""
+        def land(lk):
+            _put(lk, "a_good.csv", _HDR + "g1,2024-03-01 00:00:00,CG,PG,2,4.0\n")
+            _put(lk, "b_good.csv", _HDR + "s1,2024-03-02 00:00:00,CH,PH,1,3.0\n")
+            _put(
+                lk, "c_unsigned.csv",
+                _HDR.rstrip("\n") + ",\n"
+                "s1,2024-04-01 00:00:00,CU,PU,3,9.0,x\n",
+            )
+
+        scale, per_file, plan = _scale_and_per_file(spark, tmp_path, land)
+        assert plan.count("FileScan csv") == 2
+        audit, target = _outcomes(spark, scale)
+        assert (audit, target) == _outcomes(spark, per_file)
+        assert {st for _, st, _ in audit} == {"loaded"}
+
+    @pytest.mark.parametrize("fmt", ["csv", "ndjson", "parquet"])
+    def test_group_that_fails_to_plan_quarantines_only_itself(
+        self, spark, tmp_path, fmt
     ):
-        """When any file's read-signature cannot be derived (remote
-        paths in deployment — simulated by a raising signature), the
-        batch stages the legacy per-file way and the result is
-        unchanged."""
-        import mini_data_platform_spark.runner as runner_mod
+        """Column names that collide only after normalization pass
+        validation but cannot be planned. Like per-file mode, scale mode
+        quarantines only that file as processing_failed and loads the
+        rest of the batch."""
+        odd = {"csv": "b_odd.csv", "ndjson": "b_odd.json",
+               "parquet": "b_odd.parquet"}[fmt]
+        row = {"sale_id": "o1", "sale_date": "2024-06-01 00:00:00",
+               "customer_id": "CO", "product_id": "PO",
+               "quantity": "1", "amount": "1.0"}
 
-        def no_sig(path):
-            raise runner_mod._NoSignature(path)
+        def land(lk):
+            _put(lk, "a_good.csv", _HDR + "g1,2024-03-01 00:00:00,CG,PG,2,4.0\n")
+            if fmt == "csv":
+                _put(
+                    lk, odd,
+                    _HDR.rstrip("\n") + ", sale_id\n"
+                    + ",".join(row.values()) + ",o2\n",
+                )
+            elif fmt == "ndjson":
+                _put(lk, odd, json.dumps({**row, "Sale_ID": "o2"}))
+            else:
+                pq.write_table(
+                    pa.table({**{k: [v] for k, v in row.items()},
+                              "Sale_ID ": ["o2"]}),
+                    os.path.join(lk["incoming"], odd),
+                )
 
-        monkeypatch.setattr(runner_mod, "_file_signature", no_sig)
-        _put(lake, "a_dirty.csv", DIRTY_CSV)
-        report, _ = _run(spark, lake)
-        assert [o.status for o in report.outcomes] == ["loaded"]
-        got = {r["sale_id"] for r in spark.read.parquet(lake["target"]).collect()}
-        assert {"s1", "s2", "s3"} <= got
+        scale, per_file, _ = _scale_and_per_file(spark, tmp_path, land)
+        audit, target = _outcomes(spark, scale)
+        assert (audit, target) == _outcomes(spark, per_file)
+        assert [(b, st) for b, st, _ in audit] == [
+            ("a_good.csv", "loaded"), (odd, "processing_failed"),
+        ]
 
     def test_sink_failure_quarantines_to_loading_failed(self, spark, lake):
         _put(lake, "f.csv", DIRTY_CSV)

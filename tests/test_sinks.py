@@ -3,7 +3,6 @@ object moves (K5). Upsert semantics parity target:
 /root/reference/dags/src/db.py:22-99."""
 
 import functools
-import os
 import sqlite3
 
 from pyspark.sql import Row
@@ -304,17 +303,6 @@ class TestStagingMerge:
         conn = BadClose(fail_on="MERGE-SQL")
         with pytest.raises(RuntimeError, match="boom"):  # real error, not close's
             execute_merge(conn, ["MERGE-SQL", "DROP TABLE stg"])
-
-
-class TestEnsureBucket:
-    def test_local_dir_created(self, tmp_path):
-        from mini_data_platform_spark.sinks.objects import ensure_bucket
-
-        target = str(tmp_path / "lake" / "incoming")
-        ensure_bucket(target)
-        assert os.path.isdir(target)
-        ensure_bucket(target)  # idempotent
-        assert os.path.isdir(target)
 
 
 class TestUpsertJdbcDerby:

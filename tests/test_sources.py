@@ -109,36 +109,6 @@ class TestReaders:
         assert df.count() == 1
 
 
-class TestRowLevelQuarantine:
-    def test_split_corrupt_rows(self, spark, tmpdir_str):
-        from pyspark.sql import types as T
-
-        from mini_data_platform_spark.sources.readers import (
-            read_csv_tracking_corrupt,
-            split_corrupt,
-        )
-
-        schema = T.StructType(
-            [
-                T.StructField("sale_id", T.StringType()),
-                T.StructField("quantity", T.IntegerType()),
-                T.StructField("amount", T.DoubleType()),
-            ]
-        )
-        p = _write(
-            tmpdir_str,
-            "rows.csv",
-            "sale_id,quantity,amount\n"
-            "a,1,10.5\n"
-            "b,NOT_AN_INT,20.0\n"   # typed parse failure -> corrupt
-            "c,3,30.0\n",
-        )
-        good, bad = split_corrupt(read_csv_tracking_corrupt(spark, p, schema))
-        assert {r["sale_id"] for r in good.collect()} == {"a", "c"}
-        bad_rows = [r["raw_record"] for r in bad.collect()]
-        assert bad_rows == ["b,NOT_AN_INT,20.0"]
-
-
 class TestValidate:
     def test_csv_ok(self, spark, tmpdir_str):
         ok, err = validate_file(spark, _write(tmpdir_str, "ok.csv", GOOD_CSV))
@@ -327,10 +297,10 @@ class TestValidateFilesBatched:
         decline (return None) and let the Spark path validate."""
         import gzip
 
-        from mini_data_platform_spark.sources.validate import (
-            _local_csv_header_columns,
-            validate_files,
+        from mini_data_platform_spark.sources.scanstage import (
+            csv_header_names as _local_csv_header_columns,
         )
+        from mini_data_platform_spark.sources.validate import validate_files
 
         p = os.path.join(tmpdir_str, "ok_gz.csv.gz")
         with gzip.open(p, "wb") as fh:
