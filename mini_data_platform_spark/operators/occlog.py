@@ -73,8 +73,11 @@ def _read_meta(store_dir: str) -> dict:
 
 def write_meta(store_dir: str, meta: dict) -> None:
     """Atomically replace the checkpoint — unguarded, for a store's
-    build (which creates it) and its single-writer build-time edits."""
-    tmp = os.path.join(store_dir, _META + ".tmp")
+    build (which creates it) and its single-writer build-time edits.
+    Concurrent committers checkpoint through here too, so each write
+    has its own temp file: with a shared one, the second ``os.replace``
+    finds it gone."""
+    tmp = os.path.join(store_dir, f".{_META}-{os.getpid()}-{uuid.uuid4().hex}")
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(meta, f, indent=1)
     os.replace(tmp, os.path.join(store_dir, _META))

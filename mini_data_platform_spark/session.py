@@ -16,6 +16,17 @@ to also be the right default on a 1000-executor cluster:
   cast/parse semantics (matching the reference's ``errors="coerce"``
   pipeline, /root/reference/dags/src/processor.py:64-66).
 - Arrow on for any pandas interchange (vectorized Pandas UDFs, toPandas).
+- Local masters start Python workers from ``pydaemon``, not
+  ``pyspark.daemon``. Each Python round of a task begins with
+  ``importlib.invalidate_caches()``, which on Python 3.11 re-reads the
+  directory of every zip archive on the worker's path (``pyspark.zip``
+  and the spark-core jar, through a dozen importers). ``pydaemon``
+  re-reads an archive only when it changed. On a 4-core box, a bare
+  4-task RDD ``map`` job fell from 0.23 to 0.11 s and a ``mapInPandas``
+  count from 0.40 to 0.21 s. The checkout goes first on the executors'
+  ``PYTHONPATH``, so the daemon starts whatever the driver's cwd. A
+  cluster session keeps ``pyspark.daemon``: its executors start their
+  daemon before ``catalog._ship_package`` ships this package.
 """
 
 from __future__ import annotations
@@ -23,6 +34,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from mini_data_platform_spark import pydaemon
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -36,7 +49,9 @@ def get_spark(
     """Build (or reuse) the tuned SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a cluster
-    leave it unset and let spark-submit provide it.
+    leave it unset and let spark-submit provide it. A local master's
+    Python workers start from ``pydaemon`` (see the module docstring);
+    a caller's ``spark.executorEnv.PYTHONPATH`` follows the checkout.
     """
     cpus = int(DEFAULT_CPUS)
     if master is None:
@@ -60,7 +75,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        conf.setdefault("spark.python.daemon.module", pydaemon.__name__)
+        env = "spark.executorEnv.PYTHONPATH"
+        conf[env] = os.pathsep.join(p for p in (root, conf.get(env)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -90,26 +90,28 @@ def validate_csv(
             sample = readers.read_csv(spark, path)
         sample = sample.limit(CSV_SAMPLE_ROWS)
         cols = sample.columns
+        missing = _missing(cols, spec)
+        if missing:
+            return False, f"Missing required columns: {missing}"
+        # the reference's date probe (first 50 non-null must ALL parse),
+        # applied to every timestamp column the spec declares; both
+        # readers give normalized names, which may collide (header
+        # ``sale_date`` and `` sale_date``): the probe's ambiguous
+        # reference then quarantines the file like a parse error
+        for ts_col in spec.timestamp_columns:
+            if ts_col not in cols:
+                continue
+            probe = F.col(ts_col)
+            bad = (
+                sample.select(probe)
+                .limit(DATE_SAMPLE_ROWS)
+                .where(probe.isNotNull() & _parseable_ts(probe).isNull())
+                .count()
+            )
+            if bad:
+                return _date_issue(ts_col, bad)
     except Exception as e:  # noqa: BLE001 — any parse failure quarantines the file
         return False, f"CSV parse error: {e}"
-    missing = _missing(cols, spec)
-    if missing:
-        return False, f"Missing required columns: {missing}"
-    # the reference's date probe (first 50 non-null must ALL parse),
-    # applied to every timestamp column the spec declares; both readers
-    # give normalized names
-    for ts_col in spec.timestamp_columns:
-        if ts_col not in cols:
-            continue
-        probe = F.col(ts_col)
-        bad = (
-            sample.select(probe)
-            .limit(DATE_SAMPLE_ROWS)
-            .where(probe.isNotNull() & _parseable_ts(probe).isNull())
-            .count()
-        )
-        if bad:
-            return _date_issue(ts_col, bad)
     return True, ""
 
 

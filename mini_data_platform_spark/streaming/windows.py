@@ -238,6 +238,14 @@ def sessionize_stateful(events: DataFrame) -> DataFrame:
     canonical escape hatch when built-in windowed aggs can't express the
     semantics).
 
+    Sessions depend on arrival order. Within a micro-batch a user's
+    events are sorted by event time; across micro-batches they are not
+    reordered. An event earlier than its user's open session joins that
+    session and never starts a new one. So a file source that admits a
+    later file first cuts fewer sessions. A file source admits files in
+    millisecond-mtime order, and files with the same mtime in directory
+    listing order.
+
     One-shot (availableNow) runs MUST go through
     ``streaming.run.run_available_now``: the processing-time timeout makes
     Spark schedule continuous no-data micro-batches, so a plain

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from mini_data_platform_spark.operators import occlog
 from mini_data_platform_spark.operators.incremental import (
     exact_index_build,
     exact_index_increment,
@@ -126,3 +127,25 @@ def test_merge_table_refuses_view_with_pending_ticket(spark, tmp_path):
     _stale_checkpoint(spark, d, "view")
     with pytest.raises(ValueError, match="is not a merge table"):
         table_read(spark, d)
+
+
+def test_overlapping_checkpoint_writes_both_land(tmp_path, monkeypatch):
+    """Two committers' checkpoint writes overlap (as the threads of
+    ``TestOptimisticConcurrency`` can): the second starts and finishes
+    between the first one's temp write and its ``os.replace``."""
+    d = str(tmp_path)
+    occlog.write_meta(d, {"version": 0})
+    replace = os.replace
+    inner = []
+
+    def interleaved(src, dst):
+        if not inner:
+            inner.append(1)
+            occlog.write_meta(d, {"version": 2})
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", interleaved)
+    occlog.write_meta(d, {"version": 1})
+    monkeypatch.undo()
+    assert json.load(open(os.path.join(d, "meta.json")))["version"] == 1
+    assert os.listdir(d) == ["meta.json"]

@@ -549,6 +549,30 @@ class TestBatchIngest:
             ("a_good.csv", "loaded"), (odd, "processing_failed"),
         ]
 
+    @pytest.mark.parametrize("per_file", [False, True])
+    def test_ambiguous_date_column_fails_validation_alone(
+        self, spark, lake, per_file
+    ):
+        """A CSV whose timestamp column name collides after normalization
+        (``sale_date`` and `` sale_date``) gets a validation_failed
+        verdict from its date probe; the rest of the batch loads."""
+        _put(lake, "a_good.csv", _HDR + "g1,2024-03-01 00:00:00,CG,PG,2,4.0\n")
+        _put(
+            lake, "b_odd.csv",
+            _HDR.rstrip("\n") + ", sale_date\n"
+            "o1,2024-06-01 00:00:00,CO,PO,1,1.0,2024-06-02 00:00:00\n",
+        )
+        report, _ = _run(spark, lake, per_file=per_file)
+        assert sorted(
+            (os.path.basename(o.path), o.status) for o in report.outcomes
+        ) == [("a_good.csv", "loaded"), ("b_odd.csv", "validation_failed")]
+        assert os.listdir(os.path.join(lake["failed"], "validation_failed")) == [
+            "b_odd.csv"
+        ]
+        assert [r.sale_id for r in spark.read.parquet(lake["target"]).collect()] == [
+            "g1"
+        ]
+
     def test_sink_failure_quarantines_to_loading_failed(self, spark, lake):
         _put(lake, "f.csv", DIRTY_CSV)
         audit = AuditLog(functools.partial(sqlite_conn_factory, lake["audit_db"]))
